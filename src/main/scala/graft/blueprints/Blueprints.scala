@@ -49,9 +49,8 @@ object Blueprints {
   /** Delete matching objects (remove_file.py:138-166). */
   def remove(spark: SparkSession, cfg: RemoveConfig): Long = cfg.matchType match {
     case MatchType.ExactMatch =>
-      val e = FileManifest.lookup(spark, cfg.bucket, cfg.sourceFolderName,
-        cfg.sourceFileName)
-      FileOps.deleteOne(spark, cfg.bucket, e.path)
+      FileOps.deleteOne(spark, FileManifest.lookup(spark, cfg.bucket,
+        cfg.sourceFolderName, cfg.sourceFileName))
       1L
     case MatchType.RegexMatch =>
       val scanned =
@@ -83,9 +82,10 @@ object Blueprints {
       deleteSource: Boolean,
       matchAbsolute: Boolean = false): FileOps.CopyStats = matchType match {
     case MatchType.ExactMatch =>
-      val entry = FileManifest.lookup(spark, srcRoot, srcFolder, srcFile)
-      val dest = PathAlg.determineFullPath(dstFolder, dstFile, entry.path, None)
-      FileOps.copyOne(spark, srcRoot, entry.path, dstRoot, dest, deleteSource)
+      val src = FileManifest.lookup(spark, srcRoot, srcFolder, srcFile)
+      val dest = PathAlg.determineFullPath(dstFolder, dstFile,
+        PathAlg.combine(srcFolder, srcFile), None)
+      FileOps.copyOne(spark, src, dstRoot, dest, deleteSource)
       FileOps.CopyStats(1L, 1L, 0L)
     case MatchType.RegexMatch =>
       val scanned = FileManifest.scanManaged(spark, srcRoot, srcFolder)

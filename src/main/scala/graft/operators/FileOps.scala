@@ -1,7 +1,8 @@
 package graft.operators
 
+import java.io.FileNotFoundException
 import java.net.URI
-import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.SerializableConfiguration
@@ -43,7 +44,8 @@ object FileOps {
   /** Upper bound on copy tasks. One file per task would drown in task
     * overhead for millions of small files; fewer tasks than cores wastes
     * executors. `min(rows, 4 × defaultParallelism)` keeps partitions
-    * balanced under skewed file sizes at any manifest size.
+    * balanced under skewed file sizes at any manifest size. A caller
+    * that has not counted its rows passes `Long.MaxValue`.
     */
   private def parallelism(spark: SparkSession, rows: Long): Int =
     math.max(1, math.min(rows, 4L * spark.sparkContext.defaultParallelism).toInt)
@@ -58,29 +60,28 @@ object FileOps {
     * (permission handling falls back to forked `chmod` without
     * native-hadoop, ~100× slower than nio) — ruinous for
     * many-small-files manifests. Non-local schemes (gs://, hdfs://)
-    * stream through `FileUtil.copy` as before.
+    * stream through `FileUtil.copy`, handed the source's status so it
+    * does not stat the source again. No `mkdirs` precedes the copy:
+    * `create` makes the destination's parents (Hadoop's `create`
+    * contract), so an explicit one is a wasted store RPC per object.
     */
   private def copyFile(
-      srcFs: FileSystem, srcPath: Path,
+      srcFs: FileSystem, src: FileStatus,
       dstFs: FileSystem, dstPath: Path,
       c: org.apache.hadoop.conf.Configuration): Unit =
     if (isLocal(srcFs) && isLocal(dstFs)) {
       val d = nioPath(dstPath)
       java.nio.file.Files.createDirectories(d.getParent)
-      java.nio.file.Files.copy(nioPath(srcPath), d,
+      java.nio.file.Files.copy(nioPath(src.getPath), d,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    } else {
-      dstFs.mkdirs(dstPath.getParent)
-      FileUtil.copy(srcFs, srcPath, dstFs, dstPath, false, c)
-    }
+    } else FileUtil.copy(srcFs, src, dstFs, dstPath, false, true, c)
 
-  /** Existence check — nio for local (Hadoop getFileStatus may fork). */
-  private def fileExists(fs: FileSystem, p: Path): Boolean =
-    if (isLocal(fs)) java.nio.file.Files.exists(nioPath(p)) else fs.exists(p)
-
-  private def fileLen(fs: FileSystem, p: Path): Long =
-    if (isLocal(fs)) java.nio.file.Files.size(nioPath(p))
-    else fs.getFileStatus(p).getLen
+  /** Verify-before-delete guard: the copy landed when the destination
+    * exists with the source's length — one status RPC.
+    */
+  private def landed(fs: FileSystem, p: Path, len: Long): Boolean =
+    try fs.getFileStatus(p).getLen == len
+    catch { case _: FileNotFoundException => false }
 
   /** Copy each manifest row `bucket/path` -> `destBucket|bucket` / `dest`.
     * `deleteSource=true` turns copy into move (copy-then-delete, same
@@ -93,10 +94,21 @@ object FileOps {
     * (move_file.py:185-196); executor-parallel execution would make the
     * winner nondeterministic — and for a move BOTH sources get deleted
     * with one surviving copy — so collisions are rejected up front.
-    */
-  /** @param checkCollisions pass false only when the caller proves dest
+    *
+    * Spark work: at most one planning aggregate (the collision check,
+    * which also counts the rows to size the sink) and one sink action.
+    * `planned` and `skipped` are counted by action-scoped accumulators
+    * in the sink (exactly-once for actions). With the check on, the
+    * plan is evaluated twice — by the check and by the sink — so `df`
+    * must be deterministic: the same rows on every evaluation. The
+    * Blueprints plans are, because they read the persisted listing
+    * waves, which list each directory once.
+    *
+    * @param checkCollisions pass false only when the caller proves dest
     *   uniqueness by construction (e.g. Always-enumerated explicit
-    *   names) — skips one full-manifest aggregation job.
+    *   names, or sync's prefix-relative keys) — skips the planning
+    *   aggregate; the sink then runs at `4 × defaultParallelism`
+    *   partitions instead of being sized from the row count.
     */
   def copy(
       df: DataFrame,
@@ -109,11 +121,10 @@ object FileOps {
     val hasDestBucket = df.columns.contains("destBucket")
     val cols = Seq("bucket", "path", "dest") ++
       (if (hasDestBucket) Seq("destBucket") else Nil)
-    val rows = df.selectExpr(cols: _*).cache()
-    try {
-      val n = rows.count()
-      if (n == 0) return CopyStats(0L, 0L, 0L)
-      if (checkCollisions) {
+    val rows = df.selectExpr(cols: _*)
+    val parts =
+      if (!checkCollisions) parallelism(spark, Long.MaxValue)
+      else {
         // group by the EFFECTIVE destination bucket (the same resolution
         // the copy loop applies): a null destBucket falls back to the
         // default, then to the row's source bucket — so rows from
@@ -123,86 +134,92 @@ object FileOps {
           val default = destBucketDefault.map(lit).getOrElse(col("bucket"))
           if (hasDestBucket) coalesce(col("destBucket"), default) else default
         }
-        val collision = rows.groupBy(effDestBucket.as("effBucket"), col("dest"))
-          .agg(count(lit(1)).as("w"), min(col("path")).as("p"))
-          .filter(col("w") > 1).limit(1).collect()
-        if (collision.nonEmpty)
-          throw BlueprintError.DestinationCollision(
-            collision.head.getAs[String]("dest"))
+        // one aggregate: row count, worst multiplicity, one colliding dest
+        val plan = rows.groupBy(effDestBucket.as("effBucket"), col("dest"))
+          .agg(count(lit(1)).as("w"))
+          .agg(sum("w"), max("w"), max(when(col("w") > 1, col("dest"))))
+          .head()
+        if (plan.isNullAt(0)) return CopyStats(0L, 0L, 0L)
+        if (plan.getLong(1) > 1)
+          throw BlueprintError.DestinationCollision(plan.getString(2))
+        parallelism(spark, plan.getLong(0))
       }
-      // foreachPartition is an action, so accumulator updates from
-      // retried/speculative tasks are applied exactly once
-      val skippedAcc = spark.sparkContext.longAccumulator("graft.copy.skipped")
-      rows.repartition(parallelism(spark, n)).foreachPartition {
-        (it: Iterator[org.apache.spark.sql.Row]) =>
-          val c = conf.value
-          // resolve each FileSystem once per partition, not per row:
-          // FileSystem.get goes through a synchronized cache + UGI
-          // lookup, which serializes 32 copy threads on tiny files
-          val fsCache = scala.collection.mutable.HashMap.empty[String, FileSystem]
-          def fsFor(bucket: String): FileSystem =
-            fsCache.getOrElseUpdate(bucket, {
-              val fs = FileSystem.get(new URI(bucket), c)
-              // no .crc sidecars: object stores don't have them, and the
-              // reference's byte copy writes exactly one object per file
-              fs.setWriteChecksum(false)
-              fs
-            })
-          it.foreach { r =>
-            val srcBucket = r.getString(0)
-            val srcPath = new Path(s"$srcBucket/${r.getString(1)}")
-            val dstBucket =
-              if (hasDestBucket && !r.isNullAt(3)) r.getString(3)
-              else destBucketDefault.getOrElse(srcBucket)
-            val dstPath = new Path(s"$dstBucket/${r.getString(2)}")
-            val srcFs = fsFor(srcBucket)
-            val dstFs = fsFor(dstBucket)
-            val srcExists = fileExists(srcFs, srcPath)
-            if (!srcExists) {
+    // foreachPartition is an action, so accumulator updates from
+    // retried/speculative tasks are applied exactly once
+    val plannedAcc = spark.sparkContext.longAccumulator("graft.copy.planned")
+    val skippedAcc = spark.sparkContext.longAccumulator("graft.copy.skipped")
+    rows.repartition(parts).foreachPartition {
+      (it: Iterator[org.apache.spark.sql.Row]) =>
+        val c = conf.value
+        // resolve each FileSystem once per partition, not per row:
+        // FileSystem.get goes through a synchronized cache + UGI
+        // lookup, which serializes 32 copy threads on tiny files
+        val fsCache = scala.collection.mutable.HashMap.empty[String, FileSystem]
+        def fsFor(bucket: String): FileSystem =
+          fsCache.getOrElseUpdate(bucket, {
+            val fs = FileSystem.get(new URI(bucket), c)
+            // no .crc sidecars: object stores don't have them, and the
+            // reference's byte copy writes exactly one object per file
+            fs.setWriteChecksum(false)
+            fs
+          })
+        it.foreach { r =>
+          plannedAcc.add(1L)
+          val srcBucket = r.getString(0)
+          val srcPath = new Path(s"$srcBucket/${r.getString(1)}")
+          val dstBucket =
+            if (hasDestBucket && !r.isNullAt(3)) r.getString(3)
+            else destBucketDefault.getOrElse(srcBucket)
+          val dstPath = new Path(s"$dstBucket/${r.getString(2)}")
+          val srcFs = fsFor(srcBucket)
+          val dstFs = fsFor(dstBucket)
+          val srcStatus =
+            try Some(srcFs.getFileStatus(srcPath))
+            catch { case _: FileNotFoundException => None }
+          srcStatus match {
+            case None =>
               // idempotent retry: a completed move from a previous attempt
               // leaves dest present and source gone — skip, don't fail
-              if (!(deleteSource && fileExists(dstFs, dstPath)))
+              if (!(deleteSource && dstFs.exists(dstPath)))
                 throw BlueprintError.FileNotFound(srcPath.toString)
               skippedAcc.add(1L)
-            } else if (!overwrite && fileExists(dstFs, dstPath)) {
+            case Some(_) if !overwrite && dstFs.exists(dstPath) =>
               // overwrite=false: an existing destination wins; skip
               skippedAcc.add(1L)
-            } else {
-              copyFile(srcFs, srcPath, dstFs, dstPath, c)
-              if (deleteSource) {
-                // verify-then-delete: never drop the source unless the copy landed
-                if (fileExists(dstFs, dstPath) &&
-                    fileLen(dstFs, dstPath) == fileLen(srcFs, srcPath))
-                  srcFs.delete(srcPath, false)
-              }
-            }
+            case Some(st) =>
+              copyFile(srcFs, st, dstFs, dstPath, c)
+              // verify-then-delete: never drop the source unless the copy landed
+              if (deleteSource && landed(dstFs, dstPath, st.getLen))
+                srcFs.delete(srcPath, false)
           }
-      }
-      CopyStats(n, n - skippedAcc.value, skippedAcc.value)
-    } finally rows.unpersist()
+        }
+    }
+    val planned = plannedAcc.value
+    CopyStats(planned, planned - skippedAcc.value, skippedAcc.value)
   }
 
   /** Delete each manifest row (remove_file.py:117-123, executor-parallel).
     * Idempotent under retry: deleting an already-deleted file is a no-op.
-    * Returns the planned row count.
+    * Returns the planned row count, counted by an action-scoped
+    * accumulator in the sink — one Spark action, no count job first.
     */
   def delete(df: DataFrame): Long = {
     val spark = df.sparkSession
     val conf = new SerializableConfiguration(FileManifest.hadoopConf(spark))
-    val rows = df.selectExpr("bucket", "path")
-    val n = rows.count()
-    if (n == 0) return 0L
-    rows.repartition(parallelism(spark, n)).foreachPartition {
-      (it: Iterator[org.apache.spark.sql.Row]) =>
-        val c = conf.value
-        val fsCache = scala.collection.mutable.HashMap.empty[String, FileSystem]
-        it.foreach { r =>
-          val fs = fsCache.getOrElseUpdate(r.getString(0),
-            FileSystem.get(new URI(r.getString(0)), c))
-          fs.delete(new Path(s"${r.getString(0)}/${r.getString(1)}"), false)
-        }
-    }
-    n
+    val plannedAcc = spark.sparkContext.longAccumulator("graft.delete.planned")
+    df.selectExpr("bucket", "path")
+      .repartition(parallelism(spark, Long.MaxValue)).foreachPartition {
+        (it: Iterator[org.apache.spark.sql.Row]) =>
+          val c = conf.value
+          val fsCache = scala.collection.mutable.HashMap.empty[String, FileSystem]
+          it.foreach { r =>
+            plannedAcc.add(1L)
+            val fs = fsCache.getOrElseUpdate(r.getString(0),
+              FileSystem.get(new URI(r.getString(0)), c))
+            fs.delete(new Path(s"${r.getString(0)}/${r.getString(1)}"), false)
+          }
+      }
+    plannedAcc.value
   }
 
   /** Outcome of one [[sync]] run: source objects seen, objects
@@ -218,38 +235,20 @@ object FileOps {
       scanned: Long, transferred: Long, upToDate: Long,
       retrySkipped: Long, deleted: Long)
 
-  /** One-way prefix sync — the incremental mirror job a pipeline runs
-    * between landing zones (rsync's contract at object-store scale):
-    * copy every source object that is MISSING at the destination or
-    * DIFFERS in size; never re-move bytes for up-to-date objects;
-    * optionally delete destination objects with no source counterpart.
-    * The reference's four pipelines move whole match-sets
-    * unconditionally — this is the operation users script around them.
-    *
-    * Built ON the existing layers: both sides list via
-    * [[FileManifest.scanManaged]] (executor BFS), the diff is ONE
-    * full-outer join on the prefix-relative path (the manifests'
-    * natural key), and the transfer reuses [[copy]]'s
-    * executor-parallel, retry-idempotent path. Total cost: two
-    * listings + data movement proportional to the DIFF, never to the
-    * tree. Size inequality is the change test (object stores don't
-    * preserve mtime across copies); a size-equal content change needs
-    * a digest layer a caller can stack on the same plan.
-    */
   /** Executor-side md5 content digests for manifest rows: one stream
     * read per file (128 KiB buffer), FileSystem resolved once per
     * (partition, bucket). Returns (rp, digest) keyed by the caller's
     * relative-path column. Cost is linear in the digested BYTES — the
     * price `rsync -c` documents — so [[sync]] only routes the
-    * same-size candidate set through it, never the whole tree.
+    * same-size candidate set through it, never the whole tree. `rows`
+    * is the caller's count of `df`, which sizes the partitions.
     */
-  private def contentDigests(df: DataFrame): DataFrame = {
+  private def contentDigests(df: DataFrame, rows: Long): DataFrame = {
     val spark = df.sparkSession
     val conf = new SerializableConfiguration(FileManifest.hadoopConf(spark))
     import spark.implicits._
-    val n = df.count()
     df.select("rp", "bucket", "path").as[(String, String, String)]
-      .repartition(parallelism(spark, n))
+      .repartition(parallelism(spark, rows))
       .mapPartitions { it =>
         val c = conf.value
         val fsCache = scala.collection.mutable.HashMap.empty[String, FileSystem]
@@ -275,7 +274,25 @@ object FileOps {
       .toDF("rp", "digest")
   }
 
-  /** @param verifyContent rsync's `-c`: same-size pairs are digest-
+  /** One-way prefix sync — the incremental mirror job a pipeline runs
+    * between landing zones (rsync's contract at object-store scale):
+    * copy every source object that is MISSING at the destination or
+    * DIFFERS in size; never re-move bytes for up-to-date objects;
+    * optionally delete destination objects with no source counterpart.
+    * The reference's four pipelines move whole match-sets
+    * unconditionally — this is the operation users script around them.
+    *
+    * Built ON the existing layers: both sides list via
+    * [[FileManifest.scanManaged]] (executor BFS), the diff is ONE
+    * full-outer join on the prefix-relative path (the manifests'
+    * natural key), and the transfer reuses [[copy]]'s
+    * executor-parallel, retry-idempotent path. Total cost: two
+    * listings + data movement proportional to the DIFF, never to the
+    * tree. Size inequality is the change test (object stores don't
+    * preserve mtime across copies); a size-equal content change needs
+    * a digest layer a caller can stack on the same plan.
+    *
+    * @param verifyContent rsync's `-c`: same-size pairs are digest-
     *   compared executor-side and re-copied on mismatch — catches the
     *   same-size content change the size diff is blind to, at the
     *   documented linear-read cost over the matched set only.
@@ -322,11 +339,12 @@ object FileOps {
             // can miss; digest both sides and union the mismatches
             val same = joined.filter(col("path").isNotNull &&
               col("dsize") === col("size"))
+            val sameN = same.count()
             val srcDig = contentDigests(
-              same.select(col("rp"), col("bucket"), col("path")))
+              same.select(col("rp"), col("bucket"), col("path")), sameN)
             val dstDig = contentDigests(
               same.select(col("rp"), lit(dstBucket).as("bucket"),
-                col("dpath").as("path")))
+                col("dpath").as("path")), sameN)
               .withColumnRenamed("digest", "ddigest")
             val changed = srcDig.join(dstDig, "rp")
               .filter(col("digest") =!= col("ddigest")).select("rp")
@@ -356,32 +374,29 @@ object FileOps {
 
   /** Driver-only single-file copy for the exact-match access path — no Spark
     * job, mirroring the reference's point-lookup fast path (SURVEY §3.4).
+    * `src` is the status [[FileManifest.lookup]] returned, so the source
+    * is not statted again.
     */
   def copyOne(
       spark: SparkSession,
-      srcBucket: String,
-      srcPath: String,
+      src: FileStatus,
       dstBucket: String,
       dstPath: String,
       deleteSource: Boolean = false): Unit = {
     val c = FileManifest.hadoopConf(spark)
-    val src = new Path(s"$srcBucket/$srcPath")
     val dst = new Path(s"$dstBucket/$dstPath")
-    val srcFs = FileSystem.get(new URI(srcBucket), c)
+    val srcFs = src.getPath.getFileSystem(c)
     val dstFs = FileSystem.get(new URI(dstBucket), c)
     dstFs.setWriteChecksum(false)
-    if (!fileExists(srcFs, src)) throw BlueprintError.FileNotFound(srcPath)
     copyFile(srcFs, src, dstFs, dst, c)
-    if (deleteSource && fileLen(dstFs, dst) == fileLen(srcFs, src))
-      srcFs.delete(src, false)
+    if (deleteSource && landed(dstFs, dst, src.getLen))
+      srcFs.delete(src.getPath, false)
   }
 
-  /** Driver-only single-file delete. */
-  def deleteOne(spark: SparkSession, bucket: String, path: String): Unit = {
-    val c = FileManifest.hadoopConf(spark)
-    val fs = FileSystem.get(new URI(bucket), c)
-    val p = new Path(s"$bucket/$path")
-    if (!fs.exists(p)) throw BlueprintError.FileNotFound(path)
-    fs.delete(p, false)
-  }
+  /** Driver-only single-file delete of a status [[FileManifest.lookup]]
+    * returned.
+    */
+  def deleteOne(spark: SparkSession, st: FileStatus): Unit =
+    st.getPath.getFileSystem(FileManifest.hadoopConf(spark))
+      .delete(st.getPath, false)
 }

@@ -306,23 +306,30 @@ object FileManifest {
 
   /** Exact-match point lookup (no listing, no Spark job) — the reference's
     * keyed `get_blob` access path (download_file.py:211-225, SURVEY §4-R2).
+    * One status RPC when the object exists; the bucket root is probed
+    * only when it does not, so a missing bucket still raises
+    * [[BlueprintError.InvalidBucket]] and a missing object
+    * [[BlueprintError.FileNotFound]]. Returns the object's status, which
+    * `FileOps.copyOne`/`deleteOne` take so they do not stat it again.
     */
   def lookup(
       spark: SparkSession,
       bucketUri: String,
       folderName: String,
-      fileName: String): FileEntry = {
+      fileName: String): FileStatus = {
     val root = bucketUri.stripSuffix("/")
     val rel = PathAlg.combine(folderName, fileName)
     val fs = fileSystemFor(spark, root)
-    if (!fs.exists(new Path(root)))
-      throw BlueprintError.InvalidBucket(bucketUri)
-    val p = new Path(s"$root/$rel")
-    if (!fs.exists(p) || !fs.getFileStatus(p).isFile)
-      throw BlueprintError.FileNotFound(rel)
-    val st = fs.getFileStatus(p)
-    FileEntry(root, rel, p.getName, st.getLen,
-      new java.sql.Timestamp(st.getModificationTime))
+    val st =
+      try fs.getFileStatus(new Path(s"$root/$rel"))
+      catch {
+        case _: java.io.FileNotFoundException =>
+          if (!fs.exists(new Path(root)))
+            throw BlueprintError.InvalidBucket(bucketUri)
+          throw BlueprintError.FileNotFound(rel)
+      }
+    if (!st.isFile) throw BlueprintError.FileNotFound(rel)
+    st
   }
 
   /** Regex predicate over the bucket-relative object name — the reference's
@@ -364,8 +371,11 @@ object FileManifest {
     *
     * Mirrors `determine_destination_file_name` + enumeration
     * (download_file.py:74-106): explicit name, enumerated `name_{i}.ext`, or
-    * basename of the source. The running counter is a `zipWithIndex` over
-    * the path-sorted manifest — explicit and deterministic where the
+    * basename of the source. Without an explicit name (`None`, the
+    * reference's default) `dest` is a per-row projection of the
+    * basename: no index, no Spark job. With one, the plan is indexed
+    * here, eagerly: the running counter is a `zipWithIndex` over the
+    * path-sorted manifest — explicit and deterministic where the
     * reference implicitly relied on GCS's lexicographic listing order
     * (SURVEY §4-P5), and distributed: the sort is a range-partitioned
     * shuffle and zipWithIndex a per-partition offset job, so no
@@ -385,7 +395,8 @@ object FileManifest {
     * frame the returned plan reads — same contract as
     * [[ScannedManifest.release]]: call it once the plan is consumed
     * (the Blueprints pipelines do, right after their sink action);
-    * re-reading afterwards just re-executes the lineage.
+    * re-reading afterwards just re-executes the lineage. Without an
+    * explicit name nothing is persisted and the hook does nothing.
     */
   def withDestinationManaged(
       manifest: Dataset[FileEntry],
@@ -395,43 +406,43 @@ object FileManifest {
     val spark = manifest.sparkSession
     import spark.implicits._
     val folder = PathAlg.cleanFolderName(destinationFolderName)
-    // persist across the three consumers (count, sort sampling, sort
-    // exec) — without it each action re-executes the whole listing
-    // lineage; the indexed result is persisted + materialized so the
-    // caller's downstream actions reuse it too (manifests are
-    // metadata-sized; the cache is released by the returned hook, or
-    // by the ContextCleaner for plain-withDestination callers)
-    val cached = manifest.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val total = cached.count()
-    val indexed = spark.createDataset(
-      cached.orderBy("path").as[FileEntry].rdd
-        .zipWithIndex().map { case (e, i) => (e, i + 1) })
-      .select(col("_1.*"), col("_2").as("file_number"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    indexed.count()
-    cached.unpersist(blocking = false)
-    val n = col("file_number")
-    val baseName = element_at(split(col("path"), "/"), -1)
-    val destName = destinationFileName match {
-      case None => baseName
+    def under(name: Column): Column =
+      if (folder.isEmpty) name else concat(lit(folder + "/"), name)
+    destinationFileName match {
+      case None =>
+        (manifest.toDF().withColumn("dest",
+          under(element_at(split(col("path"), "/"), -1))), () => ())
       case Some(dest) =>
+        // persist across the three consumers (count, sort sampling, sort
+        // exec) — without it each action re-executes the whole listing
+        // lineage; the indexed result is persisted + materialized so the
+        // caller's downstream actions reuse it too (manifests are
+        // metadata-sized; the cache is released by the returned hook, or
+        // by the ContextCleaner for plain-withDestination callers)
+        val cached = manifest.persist(
+          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val total = cached.count()
+        val indexed = spark.createDataset(
+          cached.orderBy("path").as[FileEntry].rdd
+            .zipWithIndex().map { case (e, i) => (e, i + 1) })
+          .select(col("_1.*"), col("_2").as("file_number"))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        indexed.count()
+        cached.unpersist(blocking = false)
+        val n = col("file_number")
         val dotIdx = dest.indexOf('.')
         def enumerated(i: Column) =
           if (dotIdx < 0) concat(lit(dest + "_"), i)
           else concat(lit(dest.substring(0, dotIdx) + "_"), i,
             lit(dest.substring(dotIdx)))
-        policy match {
+        val destName = policy match {
           case EnumeratePolicy.Always => enumerated(n)
           case EnumeratePolicy.IfMultiple =>
             if (total > 1) enumerated(n) else lit(dest)
         }
+        (indexed.withColumn("dest", under(destName)).drop("file_number"),
+          () => indexed.unpersist(blocking = false))
     }
-    val dest =
-      if (folder.isEmpty) destName
-      else concat(lit(folder + "/"), destName)
-    (indexed.withColumn("dest", dest).drop("file_number"),
-      () => indexed.unpersist(blocking = false))
   }
 
   private[graft] def fileSystemFor(spark: SparkSession, uri: String): FileSystem =

@@ -176,6 +176,38 @@ class BlueprintsSpec extends SparkSpec {
     assert(names(b) == Set("x.txt.bak"))
   }
 
+  test("regex download and remove stay within their Spark job budgets") {
+    // one listing job, at most one planning aggregate and one sink
+    // action. Adaptive execution runs each shuffle stage as its own job:
+    // download = listing 1 + collision aggregate 3 + sink 2; remove =
+    // listing 1 + sink 2. No count-only or index-only jobs in between.
+    val src = freshBucket("logs/top.csv" -> "t", "logs/d0/a.csv" -> "a",
+      "logs/d0/b.csv" -> "b", "logs/d1/c.csv" -> "c")
+    val dst = Files.createTempDirectory(root, "dl")
+    val sc = spark.sparkContext
+    def jobs(group: String)(body: => Unit): Int = {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      org.apache.spark.graft.TestBus.drain(sc)
+      sc.statusTracker.getJobIdsForGroup(group).length
+    }
+    val downloadJobs = jobs(s"budget-download-$dst") {
+      val st = Blueprints.download(spark,
+        DownloadConfig(uri(src), "logs", ".*[.]csv", MatchType.RegexMatch,
+          "out", None), uri(dst))
+      assert(st == FileOps.CopyStats(4, 4, 0))
+    }
+    assert(names(dst) ==
+      Set("out/top.csv", "out/a.csv", "out/b.csv", "out/c.csv"))
+    val removeJobs = jobs(s"budget-remove-$src") {
+      assert(Blueprints.remove(spark,
+        RemoveConfig(uri(src), "logs", ".*[.]csv", MatchType.RegexMatch)) == 4)
+    }
+    assert(names(src).isEmpty)
+    assert(downloadJobs <= 6, s"regex download ran $downloadJobs jobs")
+    assert(removeJobs <= 3, s"regex remove ran $removeJobs jobs")
+  }
+
   // --- exit codes (exit_codes.py:1-3, uniform per SURVEY §2A-O12) ---
 
   test("missing bucket raises InvalidBucket with exit code 201") {

@@ -254,10 +254,41 @@ class FileManifestSpec extends SparkSpec {
       .withDestination(m, "", Some("r.txt"), EnumeratePolicy.Always)
     val n1 = FileOps.copy(planned, Some(s"file://$dst"), deleteSource = true)
     assert(n1 == FileOps.CopyStats(2, 2, 0))
-    // re-running the same plan: sources are gone, dests exist — the
-    // retried work must skip, not throw (speculation/retry semantics)
-    val m2 = FileManifest.scan(spark, s"file://$b")
-    assert(m2.count() == 0)
+    assert(FileManifest.scan(spark, s"file://$b").count() == 0)
+    // re-running the same persisted plan: sources are gone, dests exist —
+    // the retried work must skip, not throw (speculation/retry semantics)
+    val n2 = FileOps.copy(planned, Some(s"file://$dst"), deleteSource = true)
+    assert(n2 == FileOps.CopyStats(2, 0, 2))
+    assert(Files.readString(dst.resolve("r_1.txt")) == "0-0")
+    assert(Files.readString(dst.resolve("r_2.txt")) == "0-1")
+  }
+
+  test("a cross-bucket move costs at most 6 store RPCs per object") {
+    // counting:// takes the Hadoop FileUtil path on both sides (no nio
+    // shortcut). Per object: the source status, FileUtil's destination
+    // check, open, create, the verify-before-delete status and the
+    // source delete — no existence probes, no mkdirs, no re-stat
+    import spark.implicits._
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.counting.impl", classOf[CountingFileSystem].getName)
+    val b = mkTree(nDirs = 2, filesPerDir = 4)
+    val dst = Files.createTempDirectory("graft-rpc")
+    val rels = for (d <- 0 until 2; f <- 0 until 4) yield f"d$d%03d/f$f%03d.dat"
+    val plan = rels.map(r => (s"counting://$b", r, s"out/$r"))
+      .toDF("bucket", "path", "dest")
+    CountingFileSystem.reset()
+    val st = FileOps.copy(plan, Some(s"counting://$dst"), deleteSource = true)
+    assert(st == FileOps.CopyStats(8, 8, 0))
+    val calls = {
+      import scala.jdk.CollectionConverters._
+      CountingFileSystem.rpcCalls.asScala.map { case (k, v) => k -> v.get }
+    }
+    assert(calls.values.sum <= 6 * rels.size,
+      s"store RPCs for ${rels.size} moved objects: $calls")
+    rels.foreach { r =>
+      assert(Files.exists(dst.resolve(s"out/$r")), s"$r did not land")
+      assert(!Files.exists(b.resolve(r)), s"$r source kept")
+    }
   }
 
   test("scan with recursive=false lists only the first level") {

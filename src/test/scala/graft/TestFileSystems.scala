@@ -3,7 +3,9 @@ package graft
 import java.net.URI
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
-import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FileStatus, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 
 /** Test-only Hadoop `FileSystem` schemes backed by the local disk.
   *
@@ -15,7 +17,10 @@ import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
   *    per directory, so FileManifestSpec can assert the BFS scan issues
   *    exactly ONE list RPC per directory (the round-7 verdict's #1 ask —
   *    at 10^8 objects the listing RPCs dominate the scan cost, and the
-  *    previous lazy two-job wave listed every level twice).
+  *    previous lazy two-job wave listed every level twice). It also
+  *    counts the per-object store calls (`getFileStatus`, `exists`,
+  *    `mkdirs`, `open`, `create`, `delete`) by kind, so a spec can bound
+  *    the RPCs a moved object costs.
   *  - [[MockSchemeFileSystem]] (`mock://`): a second non-`file` scheme so
   *    BlueprintsSpec can drive a CROSS-SCHEME move (the reference's
   *    two-bucket semantics, move_file.py:18-19) through the
@@ -37,7 +42,9 @@ class CountingFileSystem extends RawLocalFileSystem {
     new FileStatus(st.getLen, st.isDirectory, st.getReplication,
       st.getBlockSize, st.getModificationTime, st.getPath)
 
-  override def listStatus(f: Path): Array[FileStatus] = {
+  import CountingFileSystem.rpc
+
+  override def listStatus(f: Path): Array[FileStatus] = rpc("list") {
     CountingFileSystem.listCalls
       .computeIfAbsent(f.toUri.getPath, _ => new AtomicInteger)
       .incrementAndGet()
@@ -45,13 +52,47 @@ class CountingFileSystem extends RawLocalFileSystem {
   }
 
   override def getFileStatus(f: Path): FileStatus =
-    eager(super.getFileStatus(f))
+    rpc("getFileStatus")(eager(super.getFileStatus(f)))
+  override def exists(f: Path): Boolean = rpc("exists")(super.exists(f))
+  override def mkdirs(f: Path): Boolean = rpc("mkdirs")(super.mkdirs(f))
+  override def mkdirs(f: Path, permission: FsPermission): Boolean =
+    rpc("mkdirs")(super.mkdirs(f, permission))
+  override def open(f: Path, bufferSize: Int): FSDataInputStream =
+    rpc("open")(super.open(f, bufferSize))
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long, progress: Progressable)
+      : FSDataOutputStream =
+    rpc("create")(super.create(f, overwrite, bufferSize, replication,
+      blockSize, progress))
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean,
+      bufferSize: Int, replication: Short, blockSize: Long,
+      progress: Progressable): FSDataOutputStream =
+    rpc("create")(super.create(f, permission, overwrite, bufferSize,
+      replication, blockSize, progress))
+  override def delete(f: Path, recursive: Boolean): Boolean =
+    rpc("delete")(super.delete(f, recursive))
 }
 
 object CountingFileSystem {
   /** dir os-path -> number of listStatus calls observed. */
   val listCalls = new ConcurrentHashMap[String, AtomicInteger]()
-  def reset(): Unit = listCalls.clear()
+  /** call kind -> store calls observed. A call is counted once, at the
+    * outermost overload: what it delegates to (`exists` to
+    * `getFileStatus`, `create` to the parent `mkdirs`, a listing to
+    * its per-child statuses) is part of that one RPC.
+    */
+  val rpcCalls = new ConcurrentHashMap[String, AtomicInteger]()
+  private val depth = ThreadLocal.withInitial[Array[Int]](() => Array(0))
+
+  def rpc[T](kind: String)(body: => T): T = {
+    val d = depth.get()
+    if (d(0) == 0)
+      rpcCalls.computeIfAbsent(kind, _ => new AtomicInteger).incrementAndGet()
+    d(0) += 1
+    try body finally d(0) -= 1
+  }
+
+  def reset(): Unit = { listCalls.clear(); rpcCalls.clear() }
 }
 
 class MockSchemeFileSystem extends RawLocalFileSystem {
