@@ -109,8 +109,8 @@ class BlueprintsSpec extends SparkSpec {
 
   // --- cross-SCHEME move: the two-bucket semantics (move_file.py:18-19)
   // exercised beyond file://→file:// — the mock:// scheme forces the
-  // Hadoop FileUtil.copy path (no local nio fast path), which is the
-  // code that runs for gs://→gs:// ---
+  // Hadoop stream path (no local nio fast path), which is the code that
+  // runs for gs://→gs:// ---
 
   private def registerMockScheme(): Unit =
     spark.sparkContext.hadoopConfiguration
@@ -176,21 +176,24 @@ class BlueprintsSpec extends SparkSpec {
     assert(names(b) == Set("x.txt.bak"))
   }
 
+  /** Spark jobs that `body` starts, counted through a job group. */
+  private def jobs(group: String)(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try body finally sc.clearJobGroup()
+    org.apache.spark.graft.TestBus.drain(sc)
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
   test("regex download and remove stay within their Spark job budgets") {
-    // one listing job, at most one planning aggregate and one sink
-    // action. Adaptive execution runs each shuffle stage as its own job:
-    // download = listing 1 + collision aggregate 3 + sink 2; remove =
-    // listing 1 + sink 2. No count-only or index-only jobs in between.
+    // one listing job, at most one planning aggregate and one sink job.
+    // Adaptive execution runs each shuffle stage of a query as its own
+    // job; a sink is one job (an RDD shuffle and its result stage):
+    // download = listing 1 + collision aggregate 3 + sink 1; remove =
+    // listing 1 + sink 1. No count-only or index-only jobs in between.
     val src = freshBucket("logs/top.csv" -> "t", "logs/d0/a.csv" -> "a",
       "logs/d0/b.csv" -> "b", "logs/d1/c.csv" -> "c")
     val dst = Files.createTempDirectory(root, "dl")
-    val sc = spark.sparkContext
-    def jobs(group: String)(body: => Unit): Int = {
-      sc.setJobGroup(group, group)
-      try body finally sc.clearJobGroup()
-      org.apache.spark.graft.TestBus.drain(sc)
-      sc.statusTracker.getJobIdsForGroup(group).length
-    }
     val downloadJobs = jobs(s"budget-download-$dst") {
       val st = Blueprints.download(spark,
         DownloadConfig(uri(src), "logs", ".*[.]csv", MatchType.RegexMatch,
@@ -204,8 +207,21 @@ class BlueprintsSpec extends SparkSpec {
         RemoveConfig(uri(src), "logs", ".*[.]csv", MatchType.RegexMatch)) == 4)
     }
     assert(names(src).isEmpty)
-    assert(downloadJobs <= 6, s"regex download ran $downloadJobs jobs")
-    assert(removeJobs <= 3, s"regex remove ran $removeJobs jobs")
+    assert(downloadJobs <= 5, s"regex download ran $downloadJobs jobs")
+    assert(removeJobs <= 2, s"regex remove ran $removeJobs jobs")
+  }
+
+  test("a warm sync starts no copy or delete sink") {
+    // two listings (one job each) and the one diff aggregate (5 jobs
+    // under adaptive execution); nothing is stale or extraneous
+    val src = freshBucket("top.csv" -> "t", "d0/a.csv" -> "a", "d1/c.csv" -> "c")
+    val mirror = Files.createTempDirectory(root, "warm")
+    assert(FileOps.sync(spark, uri(src), "", uri(mirror), "").transferred == 3)
+    val warmJobs = jobs(s"budget-warm-sync-$mirror") {
+      assert(FileOps.sync(spark, uri(src), "", uri(mirror), "",
+        deleteExtraneous = true) == FileOps.SyncStats(3, 0, 3, 0, 0))
+    }
+    assert(warmJobs <= 7, s"warm sync ran $warmJobs jobs")
   }
 
   // --- exit codes (exit_codes.py:1-3, uniform per SURVEY §2A-O12) ---
@@ -424,6 +440,46 @@ class BlueprintsSpec extends SparkSpec {
       verifyContent = true)
     assert(again.transferred == 0 && again.upToDate == 2,
       s"verified re-sync must be a no-op: $again")
+  }
+
+  test("sync verifyContent compares multi-range objects range by range") {
+    import graft.operators.FileOps
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.counting.impl", classOf[CountingFileSystem].getName)
+    // two compare ranges (32 MiB each) plus a partial third
+    val size = 2 * (32 << 20) + 1024
+    val bytes = Array.tabulate[Byte](size)(i => (i ^ (i >>> 13)).toByte)
+    val src = freshBucket("empty.bin" -> "")
+    Files.write(src.resolve("big.bin"), bytes)
+    Files.write(src.resolve("twin.bin"), bytes)
+    val dst = Files.createTempDirectory(root, "syncr")
+    // the mirror is a Hadoop-stream scheme, the source a nio one
+    val mirror = s"counting://$dst"
+    try {
+      assert(FileOps.sync(spark, uri(src), "", mirror, "").transferred == 3)
+      // rot one byte in big.bin's last, partial range, keeping its size
+      val raf = new java.io.RandomAccessFile(dst.resolve("big.bin").toFile, "rw")
+      try { raf.seek(size - 10L); val b = raf.read(); raf.seek(size - 10L); raf.write(b ^ 0xff) }
+      finally raf.close()
+      CountingFileSystem.reset()
+      val checked = FileOps.sync(spark, uri(src), "", mirror, "",
+        verifyContent = true)
+      assert(checked == FileOps.SyncStats(3, 1, 2, 0, 0),
+        s"exactly the rotted object is re-copied: $checked")
+      assert(Files.mismatch(src.resolve("big.bin"), dst.resolve("big.bin")) == -1L)
+      val calls = CountingFileSystem.rpcCalls.asScala.map { case (k, v) => k -> v.get }
+      // each range opens the mirror side once (3 per non-empty object;
+      // the zero-length pair is never opened), and only big.bin is
+      // re-created
+      assert(calls.get("open").contains(6) && calls.get("create").contains(1),
+        s"mirror calls: $calls")
+      val again = FileOps.sync(spark, uri(src), "", mirror, "",
+        verifyContent = true)
+      assert(again == FileOps.SyncStats(3, 0, 3, 0, 0),
+        s"verified re-sync must be a no-op: $again")
+    } finally Seq(src, dst).foreach { d => // 260 MB of fixtures
+      Files.walk(d).iterator().asScala.toSeq.reverse.foreach(Files.delete)
+    }
   }
 
   test("sync maps across differing prefixes") {

@@ -263,11 +263,11 @@ class FileManifestSpec extends SparkSpec {
     assert(Files.readString(dst.resolve("r_2.txt")) == "0-1")
   }
 
-  test("a cross-bucket move costs at most 6 store RPCs per object") {
-    // counting:// takes the Hadoop FileUtil path on both sides (no nio
-    // shortcut). Per object: the source status, FileUtil's destination
-    // check, open, create, the verify-before-delete status and the
-    // source delete — no existence probes, no mkdirs, no re-stat
+  test("a cross-bucket move costs at most 5 store RPCs per object") {
+    // counting:// takes the Hadoop stream path on both sides (no nio
+    // shortcut). Per object: the source status, open, create, the
+    // verify-before-delete status and the source delete — no
+    // destination check, no existence probes, no mkdirs, no re-stat
     import spark.implicits._
     spark.sparkContext.hadoopConfiguration
       .set("fs.counting.impl", classOf[CountingFileSystem].getName)
@@ -283,12 +283,53 @@ class FileManifestSpec extends SparkSpec {
       import scala.jdk.CollectionConverters._
       CountingFileSystem.rpcCalls.asScala.map { case (k, v) => k -> v.get }
     }
-    assert(calls.values.sum <= 6 * rels.size,
+    assert(calls.values.sum <= 5 * rels.size,
       s"store RPCs for ${rels.size} moved objects: $calls")
     rels.foreach { r =>
       assert(Files.exists(dst.resolve(s"out/$r")), s"$r did not land")
       assert(!Files.exists(b.resolve(r)), s"$r source kept")
     }
+  }
+
+  test("copy places the rows of two input partitions in two distinct tasks") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    import scala.jdk.CollectionConverters._
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.counting.impl", classOf[CountingFileSystem].getName)
+    val b = mkTree(nDirs = 1, filesPerDir = 2)
+    val rels = Seq("d000/f000.dat", "d000/f001.dat")
+    val schema = StructType(Seq("bucket", "path", "dest")
+      .map(StructField(_, StringType)))
+    // one row per input partition: a sink that starts both partitions'
+    // round-robin at the same offset copies the two objects serially
+    val plan = spark.createDataFrame(spark.sparkContext.parallelize(
+      rels.map(r => Row(s"counting://$b", r, s"out/$r")), 2), schema)
+    Seq(true, false).foreach { check =>
+      val dst = Files.createTempDirectory("graft-spread")
+      CountingFileSystem.reset()
+      assert(FileOps.copy(plan, Some(s"counting://$dst"),
+        checkCollisions = check) == FileOps.CopyStats(2, 2, 0))
+      val tasks = CountingFileSystem.createdIn.asScala
+      assert(tasks.size == 2 && tasks.values.toSet.size == 2,
+        s"checkCollisions=$check: created in partitions $tasks")
+    }
+  }
+
+  test("a directory at a planned destination fails the copy") {
+    import spark.implicits._
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.counting.impl", classOf[CountingFileSystem].getName)
+    val b = mkTree(nDirs = 1, filesPerDir = 1)
+    val dst = Files.createTempDirectory("graft-dirdest")
+    Files.createDirectories(dst.resolve("out/f000.dat"))
+    val plan = Seq((s"counting://$b", "d000/f000.dat", "out/f000.dat"))
+      .toDF("bucket", "path", "dest")
+    // the object never lands inside the directory as out/f000.dat/f000.dat
+    intercept[org.apache.spark.SparkException] {
+      FileOps.copy(plan, Some(s"file://$dst"))
+    }
+    assert(dst.resolve("out/f000.dat").toFile.list().isEmpty)
   }
 
   test("scan with recursive=false lists only the first level") {

@@ -6,6 +6,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FileStatus, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
+import org.apache.spark.TaskContext
 
 /** Test-only Hadoop `FileSystem` schemes backed by the local disk.
   *
@@ -20,11 +21,12 @@ import org.apache.hadoop.util.Progressable
   *    previous lazy two-job wave listed every level twice). It also
   *    counts the per-object store calls (`getFileStatus`, `exists`,
   *    `mkdirs`, `open`, `create`, `delete`) by kind, so a spec can bound
-  *    the RPCs a moved object costs.
+  *    the RPCs a moved object costs, and records which task partition
+  *    created each file, so a spec can see how a sink placed its rows.
   *  - [[MockSchemeFileSystem]] (`mock://`): a second non-`file` scheme so
   *    BlueprintsSpec can drive a CROSS-SCHEME move (the reference's
-  *    two-bucket semantics, move_file.py:18-19) through the
-  *    `FileUtil.copy` path rather than the local nio fast path. Paths
+  *    two-bucket semantics, move_file.py:18-19) through the Hadoop
+  *    stream path rather than the local nio fast path. Paths
   *    whose name contains [[MockSchemeFileSystem.CorruptMarker]] lie
   *    about their length (reported one byte short), simulating a copy
   *    that fails mid-flight so the verify-then-delete guard must keep
@@ -62,13 +64,19 @@ class CountingFileSystem extends RawLocalFileSystem {
   override def create(f: Path, overwrite: Boolean, bufferSize: Int,
       replication: Short, blockSize: Long, progress: Progressable)
       : FSDataOutputStream =
-    rpc("create")(super.create(f, overwrite, bufferSize, replication,
-      blockSize, progress))
+    rpc("create")(created(f)(super.create(f, overwrite, bufferSize,
+      replication, blockSize, progress)))
   override def create(f: Path, permission: FsPermission, overwrite: Boolean,
       bufferSize: Int, replication: Short, blockSize: Long,
       progress: Progressable): FSDataOutputStream =
-    rpc("create")(super.create(f, permission, overwrite, bufferSize,
-      replication, blockSize, progress))
+    rpc("create")(created(f)(super.create(f, permission, overwrite,
+      bufferSize, replication, blockSize, progress)))
+
+  private def created[T](f: Path)(body: => T): T = {
+    CountingFileSystem.createdIn.put(f.toUri.getPath,
+      Option(TaskContext.get()).map(_.partitionId).getOrElse(-1))
+    body
+  }
   override def delete(f: Path, recursive: Boolean): Boolean =
     rpc("delete")(super.delete(f, recursive))
 }
@@ -82,6 +90,10 @@ object CountingFileSystem {
     * its per-child statuses) is part of that one RPC.
     */
   val rpcCalls = new ConcurrentHashMap[String, AtomicInteger]()
+  /** created file os-path -> partition id of the task that created it
+    * (-1 on the driver).
+    */
+  val createdIn = new ConcurrentHashMap[String, Int]()
   private val depth = ThreadLocal.withInitial[Array[Int]](() => Array(0))
 
   def rpc[T](kind: String)(body: => T): T = {
@@ -92,7 +104,7 @@ object CountingFileSystem {
     try body finally d(0) -= 1
   }
 
-  def reset(): Unit = { listCalls.clear(); rpcCalls.clear() }
+  def reset(): Unit = { listCalls.clear(); rpcCalls.clear(); createdIn.clear() }
 }
 
 class MockSchemeFileSystem extends RawLocalFileSystem {
