@@ -99,7 +99,8 @@ object Blueprints {
           matched, dstFolder, dstFile, policy)
         releasePlanned = releaseHook
         // Always-enumerated explicit names are unique by construction —
-        // skip the collision aggregation (a full-manifest shuffle at scale)
+        // skip the collision check (a second shuffle of the whole
+        // manifest and a job of its own)
         val provablyUnique =
           dstFile.isDefined && policy == EnumeratePolicy.Always
         val st = FileOps.copy(planned, Some(dstRoot), deleteSource,

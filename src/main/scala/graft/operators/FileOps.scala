@@ -5,15 +5,14 @@ import java.net.URI
 import java.nio.channels.{Channels, FileChannel}
 import java.nio.file.{Files, StandardCopyOption}
 import scala.reflect.ClassTag
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.HashPartitioner
+import org.apache.spark.{HashPartitioner, SparkContext}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.util.SerializableConfiguration
 import graft.core.BlueprintError
-import graft.sources.FileManifest
+import graft.sources.{FileEntry, FileManifest}
 
 /** Executor-parallel file copy / move / delete over a manifest.
   *
@@ -31,6 +30,13 @@ import graft.sources.FileManifest
   * instead of failing. Skips are counted via an action-scoped
   * accumulator (exactly-once for actions) so [[CopyStats]] separates
   * planned vs actually-transferred rows.
+  *
+  * Spark work: each decision — a copy's collision check, a sync's diff
+  * count, the content compare — is one plain RDD job, never a Catalyst
+  * aggregate that adaptive execution would split into one job per
+  * shuffle stage. A sink is one more job over rows the decision already
+  * shuffled, so Spark reuses that shuffle's output instead of reading
+  * the plan again. The Hadoop conf is broadcast once per operation.
   *
   * Expected columns: `bucket`, `path` (+ `dest` for copy/move; `destBucket`
   * optional — defaults to the source bucket).
@@ -56,14 +62,12 @@ object FileOps {
     */
   private val Range = 32L << 20
 
-  /** Upper bound on copy tasks. One file per task would drown in task
-    * overhead for millions of small files; fewer tasks than cores wastes
-    * executors. `min(rows, 4 × defaultParallelism)` keeps partitions
-    * balanced under skewed file sizes at any manifest size. A caller
-    * that has not counted its rows passes `Long.MaxValue`.
+  /** Partitions of every sink: one file per task
+    * would drown in task overhead for millions of small files; fewer
+    * tasks than cores wastes executors. `4 × defaultParallelism` keeps
+    * partitions balanced under skewed file sizes at any manifest size.
     */
-  private def parallelism(spark: SparkSession, rows: Long): Int =
-    math.max(1, math.min(rows, 4L * spark.sparkContext.defaultParallelism).toInt)
+  private def parallelism(sc: SparkContext): Int = 4 * sc.defaultParallelism
 
   /** Places `rdd`'s rows evenly on `parts` partitions without a job:
     * row i of input partition p (of nIn) goes to partition
@@ -83,11 +87,25 @@ object FileOps {
     keyed.partitionBy(new HashPartitioner(parts)).values
   }
 
+  /** The session's Hadoop conf, broadcast once per operation: a task
+    * reads it from its executor's block manager instead of
+    * deserializing the whole conf (hundreds of properties, tens of KB)
+    * out of its own closure — the same as Spark's `HadoopRDD`.
+    */
+  private def withConf[A](spark: SparkSession)(
+      body: Broadcast[SerializableConfiguration] => A): A = {
+    val conf = spark.sparkContext.broadcast(
+      new SerializableConfiguration(FileManifest.hadoopConf(spark)))
+    try body(conf) finally conf.destroy()
+  }
+
   /** Per-partition `FileSystem` resolver: `FileSystem.get` goes through a
     * synchronized cache + UGI lookup, which serializes copy threads on
     * tiny files, so each bucket is resolved once per partition.
     */
-  private def fsResolver(c: Configuration): String => FileSystem = {
+  private def fsResolver(
+      conf: Broadcast[SerializableConfiguration]): String => FileSystem = {
+    val c = conf.value.value
     val cache = scala.collection.mutable.HashMap.empty[String, FileSystem]
     b => cache.getOrElseUpdate(b, FileSystem.get(new URI(b), c))
   }
@@ -169,21 +187,19 @@ object FileOps {
     * winner nondeterministic — and for a move BOTH sources get deleted
     * with one surviving copy — so collisions are rejected up front.
     *
-    * Spark work: at most one planning aggregate (the collision check,
-    * which also counts the rows to size the sink) and one sink job,
-    * whose rows are placed evenly over its partitions ([[spread]]).
+    * Spark work: the plan is turned into an RDD once and its rows are
+    * placed evenly over `4 × defaultParallelism` partitions
+    * ([[spread]]) — one shuffle. The collision check is one job over
+    * that shuffle's output (a `reduceByKey` on the effective
+    * destination); the sink is a second job over the same placed rows,
+    * so Spark skips the map stage the check already ran. Two jobs with
+    * the check, one without, and the plan is evaluated once either way.
     * `planned` and `skipped` are counted by action-scoped accumulators
-    * in the sink (exactly-once for actions). With the check on, the
-    * plan is evaluated twice — by the check and by the sink — so `df`
-    * must be deterministic: the same rows on every evaluation. The
-    * Blueprints plans are, because they read the persisted listing
-    * waves, which list each directory once.
+    * in the sink (exactly-once for actions).
     *
     * @param checkCollisions pass false only when the caller proves dest
     *   uniqueness by construction (e.g. Always-enumerated explicit
-    *   names, or sync's prefix-relative keys) — skips the planning
-    *   aggregate; the sink then runs at `4 × defaultParallelism`
-    *   partitions instead of being sized from the row count.
+    *   names, or sync's prefix-relative keys) — skips the check job.
     */
   def copy(
       df: DataFrame,
@@ -191,47 +207,62 @@ object FileOps {
       deleteSource: Boolean = false,
       overwrite: Boolean = true,
       checkCollisions: Boolean = true): CopyStats = {
-    val spark = df.sparkSession
-    val conf = new SerializableConfiguration(FileManifest.hadoopConf(spark))
     val hasDestBucket = df.columns.contains("destBucket")
     val cols = Seq("bucket", "path", "dest") ++
       (if (hasDestBucket) Seq("destBucket") else Nil)
-    val rows = df.selectExpr(cols: _*)
-    val parts =
-      if (!checkCollisions) parallelism(spark, Long.MaxValue)
-      else {
-        // group by the EFFECTIVE destination bucket (the same resolution
-        // the copy loop applies): a null destBucket falls back to the
-        // default, then to the row's source bucket — so rows from
-        // different source buckets never falsely collide, and a null row
-        // colliding with an explicitly-equal resolved bucket is caught
-        val effDestBucket = {
-          val default = destBucketDefault.map(lit).getOrElse(col("bucket"))
-          if (hasDestBucket) coalesce(col("destBucket"), default) else default
+    val rows = df.selectExpr(cols: _*).rdd.map(r => (r.getString(0),
+      r.getString(1), r.getString(2),
+      if (hasDestBucket) r.getString(3) else null))
+    withConf(df.sparkSession)(copyRows(rows, destBucketDefault, deleteSource,
+      overwrite, checkCollisions, _))
+  }
+
+  private def greater(a: Option[String], b: Option[String]): Option[String] =
+    Ordering[Option[String]].max(a, b)
+
+  /** [[copy]] over (bucket, path, dest, destBucket or null) rows. */
+  private def copyRows(
+      rows: RDD[(String, String, String, String)],
+      destBucketDefault: Option[String],
+      deleteSource: Boolean,
+      overwrite: Boolean,
+      checkCollisions: Boolean,
+      conf: Broadcast[SerializableConfiguration]): CopyStats = {
+    val sc = rows.sparkContext
+    val placed = spread(rows, parallelism(sc))
+    // a null destBucket falls back to the default, then to the row's
+    // source bucket
+    def effective(srcBucket: String, destBucket: String): String =
+      Option(destBucket).getOrElse(destBucketDefault.getOrElse(srcBucket))
+    if (checkCollisions) {
+      // group by the EFFECTIVE destination bucket (the same resolution
+      // the copy loop applies): rows from different source buckets
+      // never falsely collide, and a null row colliding with an
+      // explicitly-equal resolved bucket is caught
+      val (n, worst, clash) = placed
+        .map { case (srcBucket, _, dest, destBucket) =>
+          ((effective(srcBucket, destBucket), dest), 1L)
         }
-        // one aggregate: row count, worst multiplicity, one colliding dest
-        val plan = rows.groupBy(effDestBucket.as("effBucket"), col("dest"))
-          .agg(count(lit(1)).as("w"))
-          .agg(sum("w"), max("w"), max(when(col("w") > 1, col("dest"))))
-          .head()
-        if (plan.isNullAt(0)) return CopyStats(0L, 0L, 0L)
-        if (plan.getLong(1) > 1)
-          throw BlueprintError.DestinationCollision(plan.getString(2))
-        parallelism(spark, plan.getLong(0))
-      }
+        .reduceByKey(_ + _, sc.defaultParallelism)
+        // row count, worst multiplicity, the greatest colliding dest
+        .aggregate((0L, 0L, Option.empty[String]))(
+          { case ((n, w, c), ((_, dest), k)) =>
+            (n + k, math.max(w, k), if (k > 1) greater(c, Some(dest)) else c) },
+          { case ((n1, w1, c1), (n2, w2, c2)) =>
+            (n1 + n2, math.max(w1, w2), greater(c1, c2)) })
+      if (n == 0) return CopyStats(0L, 0L, 0L)
+      if (worst > 1) throw BlueprintError.DestinationCollision(clash.get)
+    }
     // foreachPartition is an action, so accumulator updates from
     // retried/speculative tasks are applied exactly once
-    val plannedAcc = spark.sparkContext.longAccumulator("graft.copy.planned")
-    val skippedAcc = spark.sparkContext.longAccumulator("graft.copy.skipped")
-    val planRows = rows.rdd.map(r => (r.getString(0), r.getString(1),
-      r.getString(2), if (hasDestBucket) r.getString(3) else null))
-    spread(planRows, parts).foreachPartition { it =>
-      val fsFor = fsResolver(conf.value)
+    val plannedAcc = sc.longAccumulator("graft.copy.planned")
+    val skippedAcc = sc.longAccumulator("graft.copy.skipped")
+    placed.foreachPartition { it =>
+      val fsFor = fsResolver(conf)
       it.foreach { case (srcBucket, src, dest, destBucket) =>
         plannedAcc.add(1L)
         val srcPath = new Path(s"$srcBucket/$src")
-        val dstBucket = Option(destBucket)
-          .getOrElse(destBucketDefault.getOrElse(srcBucket))
+        val dstBucket = effective(srcBucket, destBucket)
         val dstPath = new Path(s"$dstBucket/$dest")
         val srcFs = fsFor(srcBucket)
         val dstFs = fsFor(dstBucket)
@@ -265,14 +296,18 @@ object FileOps {
     * Returns the planned row count, counted by an action-scoped
     * accumulator in the sink — one Spark action, no count job first.
     */
-  def delete(df: DataFrame): Long = {
-    val spark = df.sparkSession
-    val conf = new SerializableConfiguration(FileManifest.hadoopConf(spark))
-    val plannedAcc = spark.sparkContext.longAccumulator("graft.delete.planned")
-    val keys = df.selectExpr("bucket", "path").rdd
-      .map(r => (r.getString(0), r.getString(1)))
-    spread(keys, parallelism(spark, Long.MaxValue)).foreachPartition { it =>
-      val fsFor = fsResolver(conf.value)
+  def delete(df: DataFrame): Long =
+    withConf(df.sparkSession)(deleteRows(df.selectExpr("bucket", "path").rdd
+      .map(r => (r.getString(0), r.getString(1))), _))
+
+  /** [[delete]] over (bucket, path) rows. */
+  private def deleteRows(
+      keys: RDD[(String, String)],
+      conf: Broadcast[SerializableConfiguration]): Long = {
+    val sc = keys.sparkContext
+    val plannedAcc = sc.longAccumulator("graft.delete.planned")
+    spread(keys, parallelism(sc)).foreachPartition { it =>
+      val fsFor = fsResolver(conf)
       it.foreach { case (bucket, path) =>
         plannedAcc.add(1L)
         fsFor(bucket).delete(new Path(s"$bucket/$path"), false)
@@ -331,38 +366,43 @@ object FileOps {
     } catch { case _: EOFException => true } // a seek past a shrunk end
   }
 
-  /** rsync's `-c` at object-store scale: the relative paths (`rp`) of
-    * the same-size pairs in `same` (`rp`, source `bucket`/`path`,
-    * destination `dpath` under `dstBucket`, `size`) whose bytes differ.
-    * Each non-empty pair is cut into aligned [[Range]]-byte ranges,
-    * spread evenly over `4 × defaultParallelism` tasks; a task opens
-    * both sides at its range's offset and compares them 1 MiB at a
-    * time, stopping at the first differing MiB. So each side is read at
-    * most once, by many tasks in parallel, in one Spark job, and a
-    * large object is no longer verified by one task reading serially.
-    * A side that ends early counts as changed (it is re-copied).
-    * Zero-length pairs are equal and never opened. The changed keys,
-    * one per object to re-copy, are collected to the driver.
+  /** One relative path (`rp`) of a [[sync]] diff with its source and
+    * destination entries; a side the path is missing from is null.
     */
-  private def contentDigests(same: DataFrame, dstBucket: String): Array[String] = {
-    val spark = same.sparkSession
-    val conf = new SerializableConfiguration(FileManifest.hadoopConf(spark))
-    val ranges = same.filter(col("size") > 0)
-      .select(col("rp"), col("bucket"), col("path"), col("dpath"), col("size"),
-        explode(sequence(lit(0L), col("size") - 1, lit(Range))).as("off"))
-      .rdd.map { r =>
-        val off = r.getLong(5)
-        (r.getString(0), r.getString(1), r.getString(2), r.getString(3),
-          off, math.min(Range, r.getLong(4) - off))
-      }
-    spread(ranges, parallelism(spark, Long.MaxValue)).mapPartitions { it =>
-      val fsFor = fsResolver(conf.value)
+  private final case class Diff(rp: String, src: FileEntry, dst: FileEntry) {
+    def extra: Boolean = src == null
+    def same: Boolean = src != null && dst != null && dst.size == src.size
+    def stale: Boolean = src != null && !same
+  }
+
+  /** rsync's `-c` at object-store scale: the relative paths (`rp`) of
+    * the same-size pairs in `same` whose bytes differ. Each non-empty
+    * pair is cut into aligned [[Range]]-byte ranges, spread evenly over
+    * `4 × defaultParallelism` tasks; a task opens both sides at its
+    * range's offset and compares them 1 MiB at a time, stopping at the
+    * first differing MiB. So each side is read at most once, by many
+    * tasks in parallel, in one Spark job, and a large object is no
+    * longer verified by one task reading serially. A side that ends
+    * early counts as changed (it is re-copied). Zero-length pairs are
+    * equal and never opened. The changed keys, one per object to
+    * re-copy, are collected to the driver.
+    */
+  private def contentDigests(
+      same: RDD[Diff], dstBucket: String,
+      conf: Broadcast[SerializableConfiguration]): Set[String] = {
+    val ranges = same.flatMap { d =>
+      (0L until d.src.size by Range).iterator.map(off => (d, off))
+    }
+    spread(ranges, parallelism(same.sparkContext)).mapPartitions { it =>
+      val fsFor = fsResolver(conf)
       val (ba, bb) = (new Array[Byte](Buf), new Array[Byte](Buf))
-      it.filter { case (_, bucket, path, dpath, off, len) =>
-        rangeDiffers(fsFor(bucket), new Path(s"$bucket/$path"),
-          fsFor(dstBucket), new Path(s"$dstBucket/$dpath"), off, len, ba, bb)
-      }.map(_._1)
-    }.collect().distinct
+      it.filter { case (d, off) =>
+        val (s, t) = (d.src, d.dst)
+        rangeDiffers(fsFor(s.bucket), new Path(s"${s.bucket}/${s.path}"),
+          fsFor(dstBucket), new Path(s"$dstBucket/${t.path}"),
+          off, math.min(Range, s.size - off), ba, bb)
+      }.map(_._1.rp)
+    }.collect().toSet
   }
 
   /** One-way prefix sync — the incremental mirror job a pipeline runs
@@ -375,15 +415,18 @@ object FileOps {
     *
     * Built ON the existing layers: both sides list via
     * [[FileManifest.scanManaged]] (executor BFS), the diff is ONE
-    * full-outer join on the prefix-relative path (the manifests'
-    * natural key), and the transfer reuses [[copy]]'s
-    * executor-parallel, retry-idempotent path. One aggregate over the
-    * diff counts the scanned, size-stale, extraneous and same-size
-    * objects; a copy or delete with nothing to do is not started, so a
-    * warm sync moves no bytes and runs no sink. Total cost: two
+    * `cogroup` of the two listings on the prefix-relative path (the
+    * manifests' natural key), and the transfer reuses [[copy]]'s
+    * executor-parallel, retry-idempotent path. Total cost: two
     * listings + data movement proportional to the DIFF, never to the
     * tree. Size inequality is the change test (object stores don't
     * preserve mtime across copies).
+    *
+    * Spark work: the listings' jobs (none for a flat folder), then one
+    * job that counts the scanned, size-stale, extraneous and same-size
+    * objects. The compare, copy and delete each run one more job over
+    * the diff, reusing the cogroup's shuffle output, and only when
+    * they have work: a warm sync moves no bytes and runs no sink.
     *
     * @param verifyContent rsync's `-c`: same-size pairs are compared
     *   byte for byte executor-side ([[contentDigests]]) and re-copied on
@@ -397,7 +440,6 @@ object FileOps {
       dstBucket: String, dstPrefix: String,
       deleteExtraneous: Boolean = false,
       verifyContent: Boolean = false): SyncStats = {
-    import org.apache.spark.sql.Column
     import spark.implicits._
     val srcM = FileManifest.scanManaged(spark, srcBucket, srcPrefix)
     // rsync semantics on the destination: a root that doesn't exist
@@ -407,59 +449,52 @@ object FileOps {
       try FileManifest.scanManaged(spark, dstBucket, dstPrefix)
       catch {
         case _: BlueprintError.InvalidBucket =>
-          FileManifest.ScannedManifest(
-            spark.emptyDataset[graft.sources.FileEntry], Nil)
+          FileManifest.ScannedManifest(spark.emptyDataset[FileEntry], Nil, Nil)
       }
-    try {
+    try withConf(spark) { conf =>
       val sp = graft.core.PathAlg.cleanFolderName(srcPrefix)
       val dp = graft.core.PathAlg.cleanFolderName(dstPrefix)
-      def rel(pfx: String, p: Column): Column =
-        if (pfx.isEmpty) p
-        else regexp_replace(p,
-          "^" + java.util.regex.Pattern.quote(pfx + "/"), "")
-      val src = srcM.entries.toDF().select(col("bucket"), col("path"),
-        rel(sp, col("path")).as("rp"), col("size"))
-      val dst = dstM.entries.toDF().select(rel(dp, col("path")).as("rp"),
-        col("size").as("dsize"), col("path").as("dpath"))
-      val joined = src.join(dst, Seq("rp"), "full_outer").cache()
-      try {
-        val isStale = col("path").isNotNull &&
-          (col("dsize").isNull || col("dsize") =!= col("size"))
-        val isSame = col("path").isNotNull && col("dsize") === col("size")
-        val isExtra = col("path").isNull
-        val n = joined.agg(count(col("path")), count(when(isStale, 1)),
-          count(when(isExtra, 1)), count(when(isSame, 1))).head()
-        val (scanned, sizeStale, extraneous, sameSize) =
-          (n.getLong(0), n.getLong(1), n.getLong(2), n.getLong(3))
-        // same-size pairs are the ONLY candidates the size diff can miss
-        val changed =
-          if (!verifyContent || sameSize == 0) Array.empty[String]
-          else contentDigests(joined.filter(isSame), dstBucket)
-        val sizeDiff = joined.filter(isStale)
-        val stale =
-          if (changed.isEmpty) sizeDiff
-          else sizeDiff.unionByName(joined.filter(isSame)
-            .join(changed.toSeq.toDF("rp"), Seq("rp"), "left_semi"))
-        val toCopy = stale
-          .select(col("bucket"), col("path"),
-            (if (dp.isEmpty) col("rp")
-             else concat(lit(dp + "/"), col("rp"))).as("dest"))
-        // dest uniqueness holds by construction: rp is unique per side
-        val stats =
-          if (sizeStale + changed.length == 0) CopyStats(0L, 0L, 0L)
-          else copy(toCopy, Some(dstBucket), checkCollisions = false)
-        val deleted =
-          if (!deleteExtraneous || extraneous == 0) 0L
-          else delete(joined.filter(isExtra)
-            .select(lit(dstBucket).as("bucket"), col("dpath").as("path")))
-        // ADVICE r12: upToDate counts exactly the objects the
-        // manifest diff deemed fresh; copy-level idempotent-retry
-        // skips (planned objects whose bytes turned out to already be
-        // at the destination) are surfaced as their own field instead
-        // of being folded in as "fresh"
-        SyncStats(scanned, stats.transferred,
-          scanned - stats.planned, stats.skipped, deleted)
-      } finally joined.unpersist()
+      // every listed path starts with `pfx/`; a path is unique per
+      // listing, so each side has at most one entry per key
+      def keyed(m: FileManifest.ScannedManifest, pfx: String) =
+        m.rdd.map(e =>
+          (if (pfx.isEmpty) e.path else e.path.stripPrefix(pfx + "/"), e))
+      val diff = keyed(srcM, sp)
+        .cogroup(keyed(dstM, dp), spark.sparkContext.defaultParallelism)
+        .map { case (rp, (s, d)) =>
+          Diff(rp, s.headOption.orNull, d.headOption.orNull)
+        }
+      def flag(b: Boolean) = if (b) 1L else 0L
+      val Array(scanned, sizeStale, extraneous, sameSize) =
+        diff.aggregate(new Array[Long](4))(
+          (n, d) => {
+            n(0) += flag(!d.extra); n(1) += flag(d.stale)
+            n(2) += flag(d.extra); n(3) += flag(d.same); n
+          },
+          (a, b) => { for (i <- a.indices) a(i) += b(i); a })
+      // same-size pairs are the ONLY candidates the size diff can miss
+      val changed =
+        if (!verifyContent || sameSize == 0) Set.empty[String]
+        else contentDigests(diff.filter(_.same), dstBucket, conf)
+      val toCopy = diff.filter(d => d.stale || (d.same && changed(d.rp)))
+        .map(d => (d.src.bucket, d.src.path,
+          if (dp.isEmpty) d.rp else s"$dp/${d.rp}", null: String))
+      // dest uniqueness holds by construction: rp is unique per side
+      val stats =
+        if (sizeStale + changed.size == 0) CopyStats(0L, 0L, 0L)
+        else copyRows(toCopy, Some(dstBucket), deleteSource = false,
+          overwrite = true, checkCollisions = false, conf)
+      val deleted =
+        if (!deleteExtraneous || extraneous == 0) 0L
+        else deleteRows(
+          diff.filter(_.extra).map(d => (dstBucket, d.dst.path)), conf)
+      // ADVICE r12: upToDate counts exactly the objects the
+      // manifest diff deemed fresh; copy-level idempotent-retry
+      // skips (planned objects whose bytes turned out to already be
+      // at the destination) are surfaced as their own field instead
+      // of being folded in as "fresh"
+      SyncStats(scanned, stats.transferred,
+        scanned - stats.planned, stats.skipped, deleted)
     } finally { srcM.release(); dstM.release() }
   }
 

@@ -3,6 +3,7 @@ package graft.sources
 import java.net.URI
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.SerializableConfiguration
@@ -54,8 +55,15 @@ object FileManifest {
     */
   final case class ScannedManifest(
       entries: Dataset[FileEntry],
-      private val waves: Seq[org.apache.spark.rdd.RDD[_]]) {
+      private val waves: Seq[RDD[_]],
+      private val listed: Seq[RDD[FileEntry]]) {
     def release(): Unit = waves.foreach(_.unpersist(blocking = false))
+
+    /** The same entries as a plain RDD — the shallow files plus the wave
+      * listings, with no Catalyst plan in between — for callers that
+      * key and shuffle them in Scala (`FileOps.sync`).
+      */
+    def rdd: RDD[FileEntry] = entries.sparkSession.sparkContext.union(listed)
   }
 
   /** List all files under `bucketUri/prefix` into a manifest Dataset.
@@ -89,13 +97,18 @@ object FileManifest {
     val rootStr = fs.makeQualified(rootPath).toString.stripSuffix("/")
     val listPath = new Path(listRoot)
     if (!fs.exists(listPath))
-      return ScannedManifest(spark.emptyDataset[FileEntry], Nil)
+      return ScannedManifest(spark.emptyDataset[FileEntry], Nil, Nil)
 
     // Shallow first level on the driver: files become entries directly,
     // directories fan out to the executors.
     val (files, dirs) = listShallow(fs, listPath, root, rootStr)
     val shallowDs = spark.createDataset(files)
-    if (dirs.isEmpty || !recursive) ScannedManifest(shallowDs, Nil)
+    val par = spark.sparkContext.defaultParallelism
+    // as many slices as the Dataset's local scan would use
+    val shallowRdd = spark.sparkContext.parallelize(files,
+      math.max(1, math.min(files.length, par)))
+    if (dirs.isEmpty || !recursive)
+      ScannedManifest(shallowDs, Nil, Seq(shallowRdd))
     else {
       // Iterative BFS until the fan-out is wide enough, then recursive
       // subtree walks. A whole-subtree task per FIRST-LEVEL dir would
@@ -125,12 +138,9 @@ object FileManifest {
       // recursive walk, whose walkFileTree detects cycles —
       // correctness never depends on the cap.
       val conf = new SerializableConfiguration(hadoopConf(spark))
-      val par = spark.sparkContext.defaultParallelism
       val MaxWaves = 64
-      val waves = scala.collection.mutable.ArrayBuffer
-        .empty[org.apache.spark.rdd.RDD[FileEntry]]
-      val persisted = scala.collection.mutable.ArrayBuffer
-        .empty[org.apache.spark.rdd.RDD[_]]
+      val waves = scala.collection.mutable.ArrayBuffer.empty[RDD[FileEntry]]
+      val persisted = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
       var pending = dirs
       var wave = 0
       while (pending.nonEmpty && pending.length < 4 * par &&
@@ -159,7 +169,7 @@ object FileManifest {
       ScannedManifest(
         waves.foldLeft(shallowDs)((acc, rdd) =>
           acc.union(spark.createDataset(rdd))),
-        persisted.toSeq)
+        persisted.toSeq, shallowRdd +: waves.toSeq)
     }
   }
 

@@ -186,11 +186,11 @@ class BlueprintsSpec extends SparkSpec {
   }
 
   test("regex download and remove stay within their Spark job budgets") {
-    // one listing job, at most one planning aggregate and one sink job.
-    // Adaptive execution runs each shuffle stage of a query as its own
-    // job; a sink is one job (an RDD shuffle and its result stage):
-    // download = listing 1 + collision aggregate 3 + sink 1; remove =
-    // listing 1 + sink 1. No count-only or index-only jobs in between.
+    // one listing job, at most one collision-check job and one sink job:
+    // the check and the sink are plain RDD jobs over the same placed
+    // rows, so the sink skips the placement stage the check already ran.
+    // download = listing 1 + check 1 + sink 1; remove = listing 1 +
+    // sink 1. No count-only or index-only jobs in between.
     val src = freshBucket("logs/top.csv" -> "t", "logs/d0/a.csv" -> "a",
       "logs/d0/b.csv" -> "b", "logs/d1/c.csv" -> "c")
     val dst = Files.createTempDirectory(root, "dl")
@@ -207,13 +207,34 @@ class BlueprintsSpec extends SparkSpec {
         RemoveConfig(uri(src), "logs", ".*[.]csv", MatchType.RegexMatch)) == 4)
     }
     assert(names(src).isEmpty)
-    assert(downloadJobs <= 5, s"regex download ran $downloadJobs jobs")
+    assert(downloadJobs <= 3, s"regex download ran $downloadJobs jobs")
     assert(removeJobs <= 2, s"regex remove ran $removeJobs jobs")
   }
 
+  test("a flat regex upload and move each run the check and the sink only") {
+    // a flat folder is listed on the driver (no listing job): the
+    // collision check is one job and the sink one more
+    val local = freshBucket("a.csv" -> "a", "b.csv" -> "b", "c.txt" -> "c")
+    val bkt = Files.createTempDirectory(root, "up")
+    val uploadJobs = jobs(s"budget-upload-$bkt") {
+      assert(Blueprints.upload(spark,
+        UploadConfig(uri(bkt), "", ".*[.]csv", MatchType.RegexMatch, "", None),
+        uri(local)) == FileOps.CopyStats(2, 2, 0))
+    }
+    val moved = Files.createTempDirectory(root, "mv")
+    val moveJobs = jobs(s"budget-move-$moved") {
+      assert(Blueprints.move(spark,
+        MoveConfig(uri(bkt), uri(moved), "", ".*[.]csv", MatchType.RegexMatch,
+          "", None)) == FileOps.CopyStats(2, 2, 0))
+    }
+    assert(names(bkt).isEmpty && names(moved) == Set("a.csv", "b.csv"))
+    assert(uploadJobs <= 2, s"flat regex upload ran $uploadJobs jobs")
+    assert(moveJobs <= 2, s"flat regex move ran $moveJobs jobs")
+  }
+
   test("a warm sync starts no copy or delete sink") {
-    // two listings (one job each) and the one diff aggregate (5 jobs
-    // under adaptive execution); nothing is stale or extraneous
+    // two listings (one job each) and the one diff-count job over the
+    // cogroup of both listings; nothing is stale or extraneous
     val src = freshBucket("top.csv" -> "t", "d0/a.csv" -> "a", "d1/c.csv" -> "c")
     val mirror = Files.createTempDirectory(root, "warm")
     assert(FileOps.sync(spark, uri(src), "", uri(mirror), "").transferred == 3)
@@ -221,7 +242,23 @@ class BlueprintsSpec extends SparkSpec {
       assert(FileOps.sync(spark, uri(src), "", uri(mirror), "",
         deleteExtraneous = true) == FileOps.SyncStats(3, 0, 3, 0, 0))
     }
-    assert(warmJobs <= 7, s"warm sync ran $warmJobs jobs")
+    assert(warmJobs <= 3, s"warm sync ran $warmJobs jobs")
+  }
+
+  test("a content-verified sync of flat folders that repairs one object runs 3 jobs") {
+    // no listing job (flat), the diff count, the range compare and the
+    // copy of the one changed object: the compare and the copy reuse
+    // the diff's shuffle output
+    val src = freshBucket("a.txt" -> "alpha", "b.txt" -> "beta!", "c.txt" -> "c")
+    val mirror = Files.createTempDirectory(root, "verify")
+    assert(FileOps.sync(spark, uri(src), "", uri(mirror), "").transferred == 3)
+    write(mirror.resolve("b.txt"), "betA!") // same size, other bytes
+    val verifyJobs = jobs(s"budget-verify-sync-$mirror") {
+      assert(FileOps.sync(spark, uri(src), "", uri(mirror), "",
+        verifyContent = true) == FileOps.SyncStats(3, 1, 2, 0, 0))
+    }
+    assert(Files.readString(mirror.resolve("b.txt")) == "beta!")
+    assert(verifyJobs <= 3, s"verified sync ran $verifyJobs jobs")
   }
 
   // --- exit codes (exit_codes.py:1-3, uniform per SURVEY §2A-O12) ---
@@ -491,6 +528,23 @@ class BlueprintsSpec extends SparkSpec {
     assert(s.scanned == 2 && s.transferred == 2, s"prefix sync: $s")
     assert(names(dst) == Set("mirror/x.txt", "mirror/deep/y.txt"),
       s"got ${names(dst)}")
+  }
+
+  test("sync strips prefixes that hold regex metacharacters literally") {
+    import graft.operators.FileOps
+    val src = freshBucket("a+b.(c)/x.txt" -> "x", "a+b.(c)/deep/y.txt" -> "yy",
+      "a+b.(c)z/other.txt" -> "o", "aab.(c)/near.txt" -> "n")
+    val dst = Files.createTempDirectory(root, "syncm")
+    val cold = FileOps.sync(spark, uri(src), "a+b.(c)", uri(dst), "m[1]")
+    assert(cold == FileOps.SyncStats(2, 2, 0, 0, 0), s"cold: $cold")
+    assert(names(dst) == Set("m[1]/x.txt", "m[1]/deep/y.txt"))
+    val warm = FileOps.sync(spark, uri(src), "a+b.(c)", uri(dst), "m[1]")
+    assert(warm == FileOps.SyncStats(2, 0, 2, 0, 0), s"warm: $warm")
+    write(dst.resolve("m[1]/zombie.txt"), "z")
+    val pruned = FileOps.sync(spark, uri(src), "a+b.(c)", uri(dst), "m[1]",
+      deleteExtraneous = true)
+    assert(pruned == FileOps.SyncStats(2, 0, 2, 0, 1), s"pruned: $pruned")
+    assert(names(dst) == Set("m[1]/x.txt", "m[1]/deep/y.txt"))
   }
 
   test("sync creates a missing destination root (rsync semantics); source typo still guards") {

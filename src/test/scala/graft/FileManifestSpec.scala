@@ -263,6 +263,19 @@ class FileManifestSpec extends SparkSpec {
     assert(Files.readString(dst.resolve("r_2.txt")) == "0-1")
   }
 
+  test("copy evaluates its plan once, collision check included") {
+    import spark.implicits._
+    val b = mkTree(nDirs = 2, filesPerDir = 3)
+    val dst = Files.createTempDirectory("graft-once")
+    val evaluated = spark.sparkContext.longAccumulator("plan rows")
+    val plan = FileManifest.scan(spark, s"file://$b")
+      .map { e => evaluated.add(1L); (e.bucket, e.path, e.path) }
+      .toDF("bucket", "path", "dest")
+    val st = FileOps.copy(plan, Some(s"file://$dst"))
+    assert(st == FileOps.CopyStats(6, 6, 0))
+    assert(evaluated.value == 6L, s"plan rows evaluated ${evaluated.value} times")
+  }
+
   test("a cross-bucket move costs at most 5 store RPCs per object") {
     // counting:// takes the Hadoop stream path on both sides (no nio
     // shortcut). Per object: the source status, open, create, the
