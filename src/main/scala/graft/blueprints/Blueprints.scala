@@ -1,14 +1,17 @@
 package graft.blueprints
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
 import graft.core._
 import graft.operators.FileOps
-import graft.sources.FileManifest
+import graft.sources.{FileEntry, FileManifest}
 
 /** The four reference pipelines (download / upload / move / remove),
-  * re-expressed as manifest-plan builders + executor-parallel sinks.
-  * Lifecycle mapping: SURVEY §3.4. Copy-shaped ops return
+  * re-expressed as a manifest listing + executor-parallel sinks: the
+  * regex filter and the destination names run inside the sink's own
+  * placement step (`FileOps.copyRows`/`deleteRows`), with no SQL plan
+  * in between. Lifecycle mapping: SURVEY §3.4. Copy-shaped ops return
   * [[FileOps.CopyStats]] (planned vs actually-transferred vs skipped);
   * remove returns the planned row count. All throw
   * [[graft.core.BlueprintError]] for the reference's coded failures
@@ -56,9 +59,10 @@ object Blueprints {
       val scanned =
         FileManifest.scanManaged(spark, cfg.bucket, cfg.sourceFolderName)
       try {
-        val matched =
-          FileManifest.regexFilter(scanned.entries, cfg.sourceFileName)
-        val n = FileOps.delete(matched.toDF())
+        val keep = FileManifest.matcher(cfg.sourceFileName)
+        val n = FileOps.withConf(spark)(FileOps.deleteRows(scanned.rdd,
+          (_, it: Iterator[FileEntry]) =>
+            it.filter(keep).map(e => (e.bucket, e.path)), _))
         if (n == 0) throw BlueprintError.FileNotFound(cfg.sourceFileName)
         n
         // the delete action was the manifest's last read — release the
@@ -89,31 +93,34 @@ object Blueprints {
       FileOps.CopyStats(1L, 1L, 0L)
     case MatchType.RegexMatch =>
       val scanned = FileManifest.scanManaged(spark, srcRoot, srcFolder)
-      var releasePlanned: () => Unit = () => ()
       try {
-        val matched =
-          if (matchAbsolute)
-            FileManifest.regexFilterAbsolute(scanned.entries, srcFile)
-          else FileManifest.regexFilter(scanned.entries, srcFile)
-        val (planned, releaseHook) = FileManifest.withDestinationManaged(
-          matched, dstFolder, dstFile, policy)
-        releasePlanned = releaseHook
+        val keep = FileManifest.matcher(srcFile, absolute = matchAbsolute)
         // Always-enumerated explicit names are unique by construction —
         // skip the collision check (a second shuffle of the whole
         // manifest and a job of its own)
         val provablyUnique =
           dstFile.isDefined && policy == EnumeratePolicy.Always
-        val st = FileOps.copy(planned, Some(dstRoot), deleteSource,
-          checkCollisions = !provablyUnique)
+        val st = FileOps.withConf(spark)(copyNamed(
+          FileManifest.naming(scanned.rdd, keep, dstFolder, dstFile, policy),
+          dstRoot, deleteSource, !provablyUnique, _))
         if (st.planned == 0) throw BlueprintError.FileNotFound(srcFile)
         st
         // the copy (and optional source delete) was the manifest's last
-        // read — release the wave caches AND the indexed destination
-        // frame deterministically
-      } finally {
-        releasePlanned()
-        scanned.release()
-      }
+        // read — release the wave caches deterministically
+      } finally scanned.release()
+  }
+
+  /** Copies the named entries to `dstRoot`: the naming runs inside the
+    * copy's placement step.
+    */
+  private def copyNamed[A](
+      n: FileManifest.Naming[A], dstRoot: String, deleteSource: Boolean,
+      checkCollisions: Boolean,
+      conf: Broadcast[SerializableConfiguration]): FileOps.CopyStats = {
+    val name = n.name // the step must not capture `n`, which holds an RDD
+    FileOps.copyRows(n.rows, (p, it: Iterator[A]) =>
+      name(p, it).map { case (e, dest) => (e.bucket, e.path, dest, null: String) },
+      Some(dstRoot), deleteSource, overwrite = true, checkCollisions, conf)
   }
 
   /** Credential injection (download_file.py:44-62 `set_environment_variables`):

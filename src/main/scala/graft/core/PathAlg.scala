@@ -7,8 +7,8 @@ package graft.core
   * upload_file.py:68-151): folder cleaning, folder+file joining, basename
   * extraction, and the `_N`-before-first-dot enumeration used to avoid
   * overwrites on multi-match copies. Pure Scala — unit/property tested with
-  * no Spark dependency; the column-level bulk equivalents live in
-  * [[graft.sources.FileManifest]].
+  * no Spark dependency; [[graft.sources.FileManifest]] applies the name
+  * helpers to every manifest row.
   */
 object PathAlg {
 
@@ -57,7 +57,7 @@ object PathAlg {
     * `archive.tar.gz` -> `archive_1.tar.gz`, `noext` -> `noext_1`.
     * Reference: download_file.py:74-84 (`enumerate_destination_file_name`).
     */
-  def enumerateFileName(fileName: String, n: Int): String = {
+  def enumerateFileName(fileName: String, n: Long): String = {
     val idx = fileName.indexOf('.')
     if (idx < 0) s"${fileName}_$n"
     else s"${fileName.substring(0, idx)}_$n${fileName.substring(idx)}"

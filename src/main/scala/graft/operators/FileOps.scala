@@ -6,10 +6,10 @@ import java.nio.channels.{Channels, FileChannel}
 import java.nio.file.{Files, StandardCopyOption}
 import scala.reflect.ClassTag
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.{HashPartitioner, SparkContext}
+import org.apache.spark.{HashPartitioner, SparkContext, TaskContext}
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.rdd.{CoGroupedRDD, RDD, ShuffledRDD}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.util.SerializableConfiguration
 import graft.core.BlueprintError
 import graft.sources.{FileEntry, FileManifest}
@@ -38,8 +38,13 @@ import graft.sources.{FileEntry, FileManifest}
   * shuffled, so Spark reuses that shuffle's output instead of reading
   * the plan again. The Hadoop conf is broadcast once per operation.
   *
-  * Expected columns: `bucket`, `path` (+ `dest` for copy/move; `destBucket`
-  * optional — defaults to the source bucket).
+  * Closures: the ClosureCleaner parses the bytecode of the class that
+  * declares each closure it cleans, milliseconds of driver time apiece.
+  * So a caller's planning (filter, naming, keying) runs inside the
+  * placement step of [[copyRows]]/[[deleteRows]], one closure per stage,
+  * and jobs start through `runJob`, not through RDD actions whose own
+  * wrappers would be cleaned too. [[copy]]/[[delete]] adapt a DataFrame
+  * of `bucket`, `path` (+ `dest`, optional `destBucket`).
   */
 object FileOps {
 
@@ -69,22 +74,30 @@ object FileOps {
     */
   private def parallelism(sc: SparkContext): Int = 4 * sc.defaultParallelism
 
-  /** Places `rdd`'s rows evenly on `parts` partitions without a job:
-    * row i of input partition p (of nIn) goes to partition
+  /** One row of a copy: (source bucket, source path, destination path,
+    * destination bucket or null).
+    */
+  type Move = (String, String, String, String)
+
+  /** Plans the rows of `rdd` with `plan` (per input partition, given its
+    * index) and places the planned rows evenly on `parts` partitions
+    * without a job: row i of input partition p (of nIn) goes to partition
     * (p·parts/nIn + i) mod parts, so single-row inputs land in distinct
     * tasks. `repartition`'s round-robin starts input partition p at a
     * seeded random offset, and those offsets coincide for p = 0 and 1 at
     * every power-of-two count from 2 to 32: two large objects listed in
     * two input partitions would copy one after the other in one task.
+    * The placed rows keep their placement key; readers take `_._2`.
     */
-  private def spread[T: ClassTag](rdd: RDD[T], parts: Int): RDD[T] = {
+  private def spread[A, T: ClassTag](rdd: RDD[A], parts: Int)(
+      plan: (Int, Iterator[A]) => Iterator[T]): RDD[(Int, T)] = {
     val nIn = rdd.getNumPartitions
     val keyed = rdd.mapPartitionsWithIndex { (p, it) =>
       val start = p.toLong * parts / nIn
-      it.zipWithIndex.map { case (r, i) => (((start + i) % parts).toInt, r) }
+      plan(p, it).zipWithIndex.map { case (r, i) => (((start + i) % parts).toInt, r) }
     }
     // an Int key k in [0, parts) hashes to partition k
-    keyed.partitionBy(new HashPartitioner(parts)).values
+    new ShuffledRDD[Int, T, T](keyed, new HashPartitioner(parts))
   }
 
   /** The session's Hadoop conf, broadcast once per operation: a task
@@ -92,7 +105,7 @@ object FileOps {
     * deserializing the whole conf (hundreds of properties, tens of KB)
     * out of its own closure — the same as Spark's `HadoopRDD`.
     */
-  private def withConf[A](spark: SparkSession)(
+  private[graft] def withConf[A](spark: SparkSession)(
       body: Broadcast[SerializableConfiguration] => A): A = {
     val conf = spark.sparkContext.broadcast(
       new SerializableConfiguration(FileManifest.hadoopConf(spark)))
@@ -187,15 +200,8 @@ object FileOps {
     * winner nondeterministic — and for a move BOTH sources get deleted
     * with one surviving copy — so collisions are rejected up front.
     *
-    * Spark work: the plan is turned into an RDD once and its rows are
-    * placed evenly over `4 × defaultParallelism` partitions
-    * ([[spread]]) — one shuffle. The collision check is one job over
-    * that shuffle's output (a `reduceByKey` on the effective
-    * destination); the sink is a second job over the same placed rows,
-    * so Spark skips the map stage the check already ran. Two jobs with
-    * the check, one without, and the plan is evaluated once either way.
-    * `planned` and `skipped` are counted by action-scoped accumulators
-    * in the sink (exactly-once for actions).
+    * A DataFrame adapter of [[copyRows]]: the plan is turned into an RDD
+    * once, and its rows are read in the placement step.
     *
     * @param checkCollisions pass false only when the caller proves dest
     *   uniqueness by construction (e.g. Always-enumerated explicit
@@ -210,110 +216,126 @@ object FileOps {
     val hasDestBucket = df.columns.contains("destBucket")
     val cols = Seq("bucket", "path", "dest") ++
       (if (hasDestBucket) Seq("destBucket") else Nil)
-    val rows = df.selectExpr(cols: _*).rdd.map(r => (r.getString(0),
-      r.getString(1), r.getString(2),
-      if (hasDestBucket) r.getString(3) else null))
-    withConf(df.sparkSession)(copyRows(rows, destBucketDefault, deleteSource,
-      overwrite, checkCollisions, _))
+    withConf(df.sparkSession)(copyRows(df.selectExpr(cols: _*).rdd,
+      (_, it: Iterator[Row]) => it.map(r => (r.getString(0), r.getString(1),
+        r.getString(2), if (hasDestBucket) r.getString(3) else null)),
+      destBucketDefault, deleteSource, overwrite, checkCollisions, _))
   }
 
-  private def greater(a: Option[String], b: Option[String]): Option[String] =
-    Ordering[Option[String]].max(a, b)
-
-  /** [[copy]] over (bucket, path, dest, destBucket or null) rows. */
-  private def copyRows(
-      rows: RDD[(String, String, String, String)],
+  /** [[copy]] over the [[Move]] rows that `plan` makes of each partition
+    * of `rows`.
+    *
+    * Spark work: the planned rows are placed evenly over
+    * `4 × defaultParallelism` partitions ([[spread]]) — one shuffle, whose
+    * map side runs `plan`. The collision check is one job over that
+    * shuffle's output: the rows are keyed on their effective destination
+    * and shuffled once more, sorted, so a repeated destination shows as
+    * two neighbours. The sink is a second job over the same placed rows,
+    * so Spark skips the map stage the check already ran. Two jobs with
+    * the check, one without, and `plan` runs once per row either way.
+    * `planned` and `skipped` are the sink tasks' results, which Spark
+    * takes once per partition however often a task is retried.
+    */
+  private[graft] def copyRows[A](
+      rows: RDD[A],
+      plan: (Int, Iterator[A]) => Iterator[Move],
       destBucketDefault: Option[String],
       deleteSource: Boolean,
       overwrite: Boolean,
       checkCollisions: Boolean,
       conf: Broadcast[SerializableConfiguration]): CopyStats = {
     val sc = rows.sparkContext
-    val placed = spread(rows, parallelism(sc))
+    val placed = spread(rows, parallelism(sc))(plan)
     // a null destBucket falls back to the default, then to the row's
     // source bucket
     def effective(srcBucket: String, destBucket: String): String =
       Option(destBucket).getOrElse(destBucketDefault.getOrElse(srcBucket))
     if (checkCollisions) {
-      // group by the EFFECTIVE destination bucket (the same resolution
+      // keyed on the EFFECTIVE destination bucket (the same resolution
       // the copy loop applies): rows from different source buckets
       // never falsely collide, and a null row colliding with an
       // explicitly-equal resolved bucket is caught
-      val (n, worst, clash) = placed
-        .map { case (srcBucket, _, dest, destBucket) =>
-          ((effective(srcBucket, destBucket), dest), 1L)
-        }
-        .reduceByKey(_ + _, sc.defaultParallelism)
-        // row count, worst multiplicity, the greatest colliding dest
-        .aggregate((0L, 0L, Option.empty[String]))(
-          { case ((n, w, c), ((_, dest), k)) =>
-            (n + k, math.max(w, k), if (k > 1) greater(c, Some(dest)) else c) },
-          { case ((n1, w1, c1), (n2, w2, c2)) =>
-            (n1 + n2, math.max(w1, w2), greater(c1, c2)) })
-      if (n == 0) return CopyStats(0L, 0L, 0L)
-      if (worst > 1) throw BlueprintError.DestinationCollision(clash.get)
+      val byDest = new ShuffledRDD[(String, String), Null, Null](
+        placed.mapPartitions(_.map { case (_, (srcBucket, _, dest, destBucket)) =>
+          ((effective(srcBucket, destBucket), dest), null)
+        }), new HashPartitioner(sc.defaultParallelism))
+        .setKeyOrdering(Ordering[(String, String)])
+      // per partition, its keys sorted: the row count, the greatest
+      // repeated dest, the last key
+      val found = sc.runJob(byDest,
+        (_: TaskContext, it: Iterator[((String, String), Null)]) =>
+          it.foldLeft((0L, Option.empty[String], null: (String, String))) {
+            case ((n, clash, prev), (k, _)) =>
+              (n + 1, if (k == prev) greater(clash, Some(k._2)) else clash, k)
+          }, byDest.partitions.indices)
+      if (found.map(_._1).sum == 0) return CopyStats(0L, 0L, 0L)
+      found.map(_._2).reduce(greater).foreach(d => throw BlueprintError.DestinationCollision(d))
     }
-    // foreachPartition is an action, so accumulator updates from
-    // retried/speculative tasks are applied exactly once
-    val plannedAcc = sc.longAccumulator("graft.copy.planned")
-    val skippedAcc = sc.longAccumulator("graft.copy.skipped")
-    placed.foreachPartition { it =>
-      val fsFor = fsResolver(conf)
-      it.foreach { case (srcBucket, src, dest, destBucket) =>
-        plannedAcc.add(1L)
-        val srcPath = new Path(s"$srcBucket/$src")
-        val dstBucket = effective(srcBucket, destBucket)
-        val dstPath = new Path(s"$dstBucket/$dest")
-        val srcFs = fsFor(srcBucket)
-        val dstFs = fsFor(dstBucket)
-        val srcStatus =
-          try Some(srcFs.getFileStatus(srcPath))
-          catch { case _: FileNotFoundException => None }
-        srcStatus match {
-          case None =>
-            // idempotent retry: a completed move from a previous attempt
-            // leaves dest present and source gone — skip, don't fail
-            if (!(deleteSource && dstFs.exists(dstPath)))
-              throw BlueprintError.FileNotFound(srcPath.toString)
-            skippedAcc.add(1L)
-          case Some(_) if !overwrite && dstFs.exists(dstPath) =>
-            // overwrite=false: an existing destination wins; skip
-            skippedAcc.add(1L)
-          case Some(st) =>
-            copyFile(srcFs, st, dstFs, dstPath)
-            // verify-then-delete: never drop the source unless the copy landed
-            if (deleteSource && landed(dstFs, dstPath, st.getLen))
-              srcFs.delete(srcPath, false)
+    val done = sc.runJob(placed,
+      (_: TaskContext, it: Iterator[(Int, Move)]) => {
+        val fsFor = fsResolver(conf)
+        var planned = 0L
+        var skipped = 0L
+        it.foreach { case (_, (srcBucket, src, dest, destBucket)) =>
+          planned += 1
+          val srcPath = new Path(s"$srcBucket/$src")
+          val dstBucket = effective(srcBucket, destBucket)
+          val dstPath = new Path(s"$dstBucket/$dest")
+          val srcFs = fsFor(srcBucket)
+          val dstFs = fsFor(dstBucket)
+          val srcStatus =
+            try Some(srcFs.getFileStatus(srcPath))
+            catch { case _: FileNotFoundException => None }
+          srcStatus match {
+            case None =>
+              // idempotent retry: a completed move from a previous attempt
+              // leaves dest present and source gone — skip, don't fail
+              if (!(deleteSource && dstFs.exists(dstPath)))
+                throw BlueprintError.FileNotFound(srcPath.toString)
+              skipped += 1
+            case Some(_) if !overwrite && dstFs.exists(dstPath) =>
+              // overwrite=false: an existing destination wins; skip
+              skipped += 1
+            case Some(st) =>
+              copyFile(srcFs, st, dstFs, dstPath)
+              // verify-then-delete: never drop the source unless the copy landed
+              if (deleteSource && landed(dstFs, dstPath, st.getLen))
+                srcFs.delete(srcPath, false)
+          }
         }
-      }
-    }
-    val planned = plannedAcc.value
-    CopyStats(planned, planned - skippedAcc.value, skippedAcc.value)
+        (planned, skipped)
+      }, placed.partitions.indices)
+    val (planned, skipped) = (done.map(_._1).sum, done.map(_._2).sum)
+    CopyStats(planned, planned - skipped, skipped)
   }
+
+  private def greater(a: Option[String], b: Option[String]): Option[String] =
+    Ordering[Option[String]].max(a, b)
 
   /** Delete each manifest row (remove_file.py:117-123, executor-parallel).
     * Idempotent under retry: deleting an already-deleted file is a no-op.
-    * Returns the planned row count, counted by an action-scoped
-    * accumulator in the sink — one Spark action, no count job first.
+    * Returns the planned row count. A DataFrame adapter of [[deleteRows]].
     */
   def delete(df: DataFrame): Long =
-    withConf(df.sparkSession)(deleteRows(df.selectExpr("bucket", "path").rdd
-      .map(r => (r.getString(0), r.getString(1))), _))
+    withConf(df.sparkSession)(deleteRows(df.selectExpr("bucket", "path").rdd,
+      (_, it: Iterator[Row]) => it.map(r => (r.getString(0), r.getString(1))), _))
 
-  /** [[delete]] over (bucket, path) rows. */
-  private def deleteRows(
-      keys: RDD[(String, String)],
+  /** [[delete]] over the (bucket, path) rows that `plan` makes of each
+    * partition of `rows`: one Spark job, whose tasks return the rows they
+    * deleted — no count job first.
+    */
+  private[graft] def deleteRows[A](
+      rows: RDD[A],
+      plan: (Int, Iterator[A]) => Iterator[(String, String)],
       conf: Broadcast[SerializableConfiguration]): Long = {
-    val sc = keys.sparkContext
-    val plannedAcc = sc.longAccumulator("graft.delete.planned")
-    spread(keys, parallelism(sc)).foreachPartition { it =>
-      val fsFor = fsResolver(conf)
-      it.foreach { case (bucket, path) =>
-        plannedAcc.add(1L)
-        fsFor(bucket).delete(new Path(s"$bucket/$path"), false)
-      }
-    }
-    plannedAcc.value
+    val placed = spread(rows, parallelism(rows.sparkContext))(plan)
+    rows.sparkContext.runJob(placed,
+      (_: TaskContext, it: Iterator[(Int, (String, String))]) => {
+        val fsFor = fsResolver(conf)
+        it.map { case (_, (bucket, path)) =>
+          fsFor(bucket).delete(new Path(s"$bucket/$path"), false); 1L
+        }.sum
+      }, placed.partitions.indices).sum
   }
 
   /** Outcome of one [[sync]] run: source objects seen, objects
@@ -376,7 +398,7 @@ object FileOps {
   }
 
   /** rsync's `-c` at object-store scale: the relative paths (`rp`) of
-    * the same-size pairs in `same` whose bytes differ. Each non-empty
+    * the same-size pairs of `diff` whose bytes differ. Each non-empty
     * pair is cut into aligned [[Range]]-byte ranges, spread evenly over
     * `4 × defaultParallelism` tasks; a task opens both sides at its
     * range's offset and compares them 1 MiB at a time, stopping at the
@@ -385,24 +407,27 @@ object FileOps {
     * longer verified by one task reading serially. A side that ends
     * early counts as changed (it is re-copied). Zero-length pairs are
     * equal and never opened. The changed keys, one per object to
-    * re-copy, are collected to the driver.
+    * re-copy, are returned to the driver.
     */
   private def contentDigests(
-      same: RDD[Diff], dstBucket: String,
+      diff: RDD[Diff], dstBucket: String,
       conf: Broadcast[SerializableConfiguration]): Set[String] = {
-    val ranges = same.flatMap { d =>
-      (0L until d.src.size by Range).iterator.map(off => (d, off))
+    val ranges = spread(diff, parallelism(diff.sparkContext)) { (_, it) =>
+      it.filter(_.same).flatMap { d =>
+        (0L until d.src.size by Range).iterator.map(off => (d, off))
+      }
     }
-    spread(ranges, parallelism(same.sparkContext)).mapPartitions { it =>
-      val fsFor = fsResolver(conf)
-      val (ba, bb) = (new Array[Byte](Buf), new Array[Byte](Buf))
-      it.filter { case (d, off) =>
-        val (s, t) = (d.src, d.dst)
-        rangeDiffers(fsFor(s.bucket), new Path(s"${s.bucket}/${s.path}"),
-          fsFor(dstBucket), new Path(s"$dstBucket/${t.path}"),
-          off, math.min(Range, s.size - off), ba, bb)
-      }.map(_._1.rp)
-    }.collect().toSet
+    diff.sparkContext.runJob(ranges,
+      (_: TaskContext, it: Iterator[(Int, (Diff, Long))]) => {
+        val fsFor = fsResolver(conf)
+        val (ba, bb) = (new Array[Byte](Buf), new Array[Byte](Buf))
+        it.filter { case (_, (d, off)) =>
+          val (s, t) = (d.src, d.dst)
+          rangeDiffers(fsFor(s.bucket), new Path(s"${s.bucket}/${s.path}"),
+            fsFor(dstBucket), new Path(s"$dstBucket/${t.path}"),
+            off, math.min(Range, s.size - off), ba, bb)
+        }.map(_._2._1.rp).toArray
+      }, ranges.partitions.indices).iterator.flatten.toSet
   }
 
   /** One-way prefix sync — the incremental mirror job a pipeline runs
@@ -415,8 +440,8 @@ object FileOps {
     *
     * Built ON the existing layers: both sides list via
     * [[FileManifest.scanManaged]] (executor BFS), the diff is ONE
-    * `cogroup` of the two listings on the prefix-relative path (the
-    * manifests' natural key), and the transfer reuses [[copy]]'s
+    * cogroup of the two listings on the prefix-relative path (the
+    * manifests' natural key), and the transfer reuses [[copyRows]]'s
     * executor-parallel, retry-idempotent path. Total cost: two
     * listings + data movement proportional to the DIFF, never to the
     * tree. Size inequality is the change test (object stores don't
@@ -440,7 +465,7 @@ object FileOps {
       dstBucket: String, dstPrefix: String,
       deleteExtraneous: Boolean = false,
       verifyContent: Boolean = false): SyncStats = {
-    import spark.implicits._
+    val sc = spark.sparkContext
     val srcM = FileManifest.scanManaged(spark, srcBucket, srcPrefix)
     // rsync semantics on the destination: a root that doesn't exist
     // yet is an EMPTY mirror (the copy stage creates it), not a config
@@ -448,8 +473,7 @@ object FileOps {
     val dstM =
       try FileManifest.scanManaged(spark, dstBucket, dstPrefix)
       catch {
-        case _: BlueprintError.InvalidBucket =>
-          FileManifest.ScannedManifest(spark.emptyDataset[FileEntry], Nil, Nil)
+        case _: BlueprintError.InvalidBucket => FileManifest.emptyManifest(spark)
       }
     try withConf(spark) { conf =>
       val sp = graft.core.PathAlg.cleanFolderName(srcPrefix)
@@ -457,37 +481,42 @@ object FileOps {
       // every listed path starts with `pfx/`; a path is unique per
       // listing, so each side has at most one entry per key
       def keyed(m: FileManifest.ScannedManifest, pfx: String) =
-        m.rdd.map(e =>
-          (if (pfx.isEmpty) e.path else e.path.stripPrefix(pfx + "/"), e))
-      val diff = keyed(srcM, sp)
-        .cogroup(keyed(dstM, dp), spark.sparkContext.defaultParallelism)
-        .map { case (rp, (s, d)) =>
-          Diff(rp, s.headOption.orNull, d.headOption.orNull)
-        }
+        m.rdd.mapPartitions(_.map(e =>
+          (if (pfx.isEmpty) e.path else e.path.stripPrefix(pfx + "/"), e)))
+      val diff = new CoGroupedRDD[String](Seq(keyed(srcM, sp), keyed(dstM, dp)),
+        new HashPartitioner(sc.defaultParallelism)).mapPartitions(_.map {
+          case (rp, Array(s, d)) =>
+            def one(side: Iterable[_]) =
+              side.headOption.getOrElse(null).asInstanceOf[FileEntry]
+            Diff(rp, one(s), one(d))
+        })
       def flag(b: Boolean) = if (b) 1L else 0L
-      val Array(scanned, sizeStale, extraneous, sameSize) =
-        diff.aggregate(new Array[Long](4))(
-          (n, d) => {
+      val Array(scanned, sizeStale, extraneous, sameSize) = sc.runJob(diff,
+        (_: TaskContext, it: Iterator[Diff]) => {
+          val n = new Array[Long](4)
+          it.foreach { d =>
             n(0) += flag(!d.extra); n(1) += flag(d.stale)
-            n(2) += flag(d.extra); n(3) += flag(d.same); n
-          },
-          (a, b) => { for (i <- a.indices) a(i) += b(i); a })
+            n(2) += flag(d.extra); n(3) += flag(d.same)
+          }
+          n
+        }, diff.partitions.indices).transpose.map(_.sum)
       // same-size pairs are the ONLY candidates the size diff can miss
       val changed =
         if (!verifyContent || sameSize == 0) Set.empty[String]
-        else contentDigests(diff.filter(_.same), dstBucket, conf)
-      val toCopy = diff.filter(d => d.stale || (d.same && changed(d.rp)))
-        .map(d => (d.src.bucket, d.src.path,
-          if (dp.isEmpty) d.rp else s"$dp/${d.rp}", null: String))
+        else contentDigests(diff, dstBucket, conf)
       // dest uniqueness holds by construction: rp is unique per side
       val stats =
         if (sizeStale + changed.size == 0) CopyStats(0L, 0L, 0L)
-        else copyRows(toCopy, Some(dstBucket), deleteSource = false,
-          overwrite = true, checkCollisions = false, conf)
+        else copyRows(diff, (_, it: Iterator[Diff]) =>
+          it.filter(d => d.stale || (d.same && changed(d.rp)))
+            .map(d => (d.src.bucket, d.src.path,
+              if (dp.isEmpty) d.rp else s"$dp/${d.rp}", null: String)),
+          Some(dstBucket), deleteSource = false, overwrite = true,
+          checkCollisions = false, conf)
       val deleted =
         if (!deleteExtraneous || extraneous == 0) 0L
-        else deleteRows(
-          diff.filter(_.extra).map(d => (dstBucket, d.dst.path)), conf)
+        else deleteRows(diff, (_, it: Iterator[Diff]) =>
+          it.filter(_.extra).map(d => (dstBucket, d.dst.path)), conf)
       // ADVICE r12: upToDate counts exactly the objects the
       // manifest diff deemed fresh; copy-level idempotent-retry
       // skips (planned objects whose bytes turned out to already be

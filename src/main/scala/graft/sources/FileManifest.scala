@@ -1,13 +1,15 @@
 package graft.sources
 
 import java.net.URI
+import java.nio.charset.StandardCharsets.UTF_8
+import java.util.regex.{Pattern, PatternSyntaxException}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.{RangePartitioner, TaskContext}
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.util.SerializableConfiguration
-import graft.core.{BlueprintError, EnumeratePolicy, PathAlg}
+import graft.core.{BlueprintError, EnumeratePolicy, PathAlg, RegexCompat}
 
 /** One object in a bucket-like store. `path` is the bucket-relative object
   * name (the reference's `blob.name`), `name` its basename.
@@ -19,15 +21,16 @@ final case class FileEntry(
     size: Long,
     modificationTime: java.sql.Timestamp)
 
-/** File-manifest layer: listings as DataFrames.
+/** File-manifest layer: listings as RDDs of [[FileEntry]].
   *
   * Replaces the reference's driver-side blob listing
   * (download_file.py:147-152 `find_google_cloud_storage_file_names`) with a
-  * manifest `Dataset[FileEntry]` over Hadoop `FileSystem`, so that
-  * filters/projections/sinks compose as Spark plans and the copy/delete
-  * actions run executor-parallel (SURVEY §4-P1). Prefix pushdown (the
-  * reference's server-side `list_blobs(prefix=…)`, download_file.py:248-249)
-  * maps to scoping the listing root to `bucket/prefix`.
+  * manifest `RDD[FileEntry]` over Hadoop `FileSystem`, whose regex filter
+  * ([[matcher]]) and destination names ([[naming]]) are row functions the
+  * executor-parallel copy/delete actions run (SURVEY §4-P1): no Catalyst
+  * plan on the way. [[scan]] views a listing as a Dataset for SQL
+  * callers. Prefix pushdown (the reference's `list_blobs(prefix=…)`,
+  * download_file.py:248-249) maps to scoping the listing root.
   *
   * Scale (100 TB / 10^8 objects): the driver lists only the FIRST level
   * under the prefix; deeper levels are listed in BFS waves on the
@@ -42,29 +45,29 @@ final case class FileEntry(
   */
 object FileManifest {
 
-  /** A scanned manifest plus an explicit release hook for the
-    * executor-persisted BFS wave RDDs backing it. Without the hook,
-    * reclamation waits on GC + ContextCleaner noticing the manifest
-    * became unreachable — a long-lived manifest reference pins the
-    * full file-entry cache in executor memory/disk, substantial at the
-    * 10^8-object scale the scan targets (ADVICE r8). Callers that know
-    * when the manifest is consumed (every Blueprints pipeline does:
-    * the sink action is the last read) call [[release]] right after;
-    * `release` is idempotent and safe even if the entries Dataset is
-    * re-read afterwards (the listing lineage simply re-executes).
+  /** A scanned manifest: the listing as an RDD (the driver-listed first
+    * level plus the executor-listed BFS waves) and a release hook for the
+    * executor-persisted wave RDDs behind it. Without the hook,
+    * reclamation waits on GC + ContextCleaner — a long-lived manifest
+    * reference pins the whole file-entry cache, substantial at 10^8
+    * objects (ADVICE r8). The Blueprints pipelines call [[release]] after
+    * their sink action; it is idempotent, and a later read re-executes
+    * the listing lineage.
     */
-  final case class ScannedManifest(
-      entries: Dataset[FileEntry],
-      private val waves: Seq[RDD[_]],
-      private val listed: Seq[RDD[FileEntry]]) {
+  final class ScannedManifest private[sources] (
+      spark: SparkSession, val rdd: RDD[FileEntry], waves: Seq[RDD[_]]) {
     def release(): Unit = waves.foreach(_.unpersist(blocking = false))
 
-    /** The same entries as a plain RDD — the shallow files plus the wave
-      * listings, with no Catalyst plan in between — for callers that
-      * key and shuffle them in Scala (`FileOps.sync`).
+    /** The same entries as a Dataset, for callers that query the listing
+      * with SQL. Built on first use, so the blueprint path never plans it.
       */
-    def rdd: RDD[FileEntry] = entries.sparkSession.sparkContext.union(listed)
+    lazy val entries: Dataset[FileEntry] =
+      spark.createDataset(rdd)(Encoders.product[FileEntry])
   }
+
+  /** The manifest of a prefix that does not exist: no entries. */
+  private[graft] def emptyManifest(spark: SparkSession): ScannedManifest =
+    new ScannedManifest(spark, spark.sparkContext.emptyRDD[FileEntry], Nil)
 
   /** List all files under `bucketUri/prefix` into a manifest Dataset.
     * `bucketUri` e.g. `file:///tmp/bucket-a` or `gs://bucket`.
@@ -86,7 +89,7 @@ object FileManifest {
       bucketUri: String,
       prefix: String = "",
       recursive: Boolean = true): ScannedManifest = {
-    import spark.implicits._
+    val sc = spark.sparkContext
     val root = bucketUri.stripSuffix("/")
     val cleanPrefix = PathAlg.cleanFolderName(prefix)
     val listRoot = if (cleanPrefix.isEmpty) root else s"$root/$cleanPrefix"
@@ -95,20 +98,12 @@ object FileManifest {
     if (!fs.exists(rootPath))
       throw BlueprintError.InvalidBucket(bucketUri)
     val rootStr = fs.makeQualified(rootPath).toString.stripSuffix("/")
-    val listPath = new Path(listRoot)
-    if (!fs.exists(listPath))
-      return ScannedManifest(spark.emptyDataset[FileEntry], Nil, Nil)
-
-    // Shallow first level on the driver: files become entries directly,
-    // directories fan out to the executors.
-    val (files, dirs) = listShallow(fs, listPath, root, rootStr)
-    val shallowDs = spark.createDataset(files)
-    val par = spark.sparkContext.defaultParallelism
-    // as many slices as the Dataset's local scan would use
-    val shallowRdd = spark.sparkContext.parallelize(files,
-      math.max(1, math.min(files.length, par)))
-    if (dirs.isEmpty || !recursive)
-      ScannedManifest(shallowDs, Nil, Seq(shallowRdd))
+    // Shallow first level on the driver (a missing prefix lists empty):
+    // files become entries directly, directories fan out to the executors.
+    val (files, dirs) = listLevel(listRoot, root, rootStr, hadoopConf(spark))
+    val par = sc.defaultParallelism
+    val shallow = sc.parallelize(files, math.max(1, math.min(files.length, par)))
+    if (dirs.isEmpty || !recursive) new ScannedManifest(spark, shallow, Nil)
     else {
       // Iterative BFS until the fan-out is wide enough, then recursive
       // subtree walks. A whole-subtree task per FIRST-LEVEL dir would
@@ -147,11 +142,17 @@ object FileManifest {
           wave < MaxWaves) {
         val level = pending
         val slices = math.max(1, math.min(level.length, par))
-        val levelRdd = spark.sparkContext.parallelize(level, slices)
+        val levelRdd = sc.parallelize(level, slices)
           .map(d => listLevel(d, root, rootStr, conf.value))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         persisted += levelRdd
-        pending = levelRdd.flatMap(_._2).collect().toSeq
+        // runJob, not collect(): collect wraps the step in two closures of
+        // Spark's own, each of which the ClosureCleaner cleans by parsing
+        // its declaring class (RDD, SparkContext: ~390 KB of bytecode)
+        pending = sc.runJob(levelRdd,
+          (_: TaskContext, it: Iterator[(Seq[FileEntry], Seq[String])]) =>
+            it.flatMap(_._2).toArray,
+          levelRdd.partitions.indices).toSeq.flatten
         waves += levelRdd.flatMap(_._1)
         wave += 1
       }
@@ -160,16 +161,14 @@ object FileManifest {
         // persisted lazily (first action materializes): subsequent
         // actions reuse the walk instead of re-listing the subtrees,
         // keeping the whole manifest one consistent snapshot
-        val deepRdd = spark.sparkContext.parallelize(pending, slices)
+        val deepRdd = sc.parallelize(pending, slices)
           .flatMap(d => listDeep(d, root, rootStr, conf.value))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         persisted += deepRdd
         waves += deepRdd
       }
-      ScannedManifest(
-        waves.foldLeft(shallowDs)((acc, rdd) =>
-          acc.union(spark.createDataset(rdd))),
-        persisted.toSeq, shallowRdd +: waves.toSeq)
+      new ScannedManifest(spark, sc.union(shallow +: waves.toSeq),
+        persisted.toSeq)
     }
   }
 
@@ -180,38 +179,13 @@ object FileManifest {
   private def isChecksumSidecar(name: String): Boolean =
     name.startsWith(".") && name.endsWith(".crc")
 
-  /** First-level listing. `file:` goes through java.nio: Hadoop's local
-    * status objects fork a shell per entry for permissions (no
-    * native-hadoop), ~30 ms/file — ruinous for large flat directories.
-    * Entries that are neither a directory nor a regular file (broken
-    * symlinks, fifos — which the old `listStatus.filter(_.isFile)` path
-    * also excluded) are skipped, not crashed on.
-    */
-  private def listShallow(
-      fs: FileSystem, listPath: Path, root: String, rootStr: String)
-      : (Seq[FileEntry], Seq[String]) =
-    if (fs.getScheme == "file") {
-      val dir = java.nio.file.Paths.get(listPath.toUri.getPath)
-      val rootOs = java.nio.file.Paths.get(new Path(root).toUri.getPath)
-      val files = scala.collection.mutable.ArrayBuffer.empty[FileEntry]
-      val dirs = scala.collection.mutable.ArrayBuffer.empty[String]
-      val ds = java.nio.file.Files.newDirectoryStream(dir)
-      try ds.forEach { p =>
-        if (java.nio.file.Files.isDirectory(p)) dirs += s"file://$p"
-        else if (java.nio.file.Files.isRegularFile(p) &&
-            !isChecksumSidecar(p.getFileName.toString))
-          files += nioEntry(p, root, rootOs)
-      } finally ds.close()
-      (files.toSeq, dirs.toSeq)
-    } else {
-      val shallow = fs.listStatus(listPath)
-      (shallow.filter(_.isFile).map(toEntry(_, root, rootStr)).toSeq,
-        shallow.filter(_.isDirectory).map(_.getPath.toString).toSeq)
-    }
-
-  /** Executor-side ONE-level listing of a directory (nio for `file:`,
-    * mirroring [[listShallow]]'s scheme split): the BFS-wave unit.
-    * Returns (file entries, subdirectory uris).
+  /** ONE-level listing of a directory: the driver's first level and the
+    * BFS-wave unit. Returns (file entries, subdirectory uris). `file:`
+    * goes through java.nio: Hadoop's local status objects fork a shell
+    * per entry for permissions (no native-hadoop), ~30 ms/file — ruinous
+    * for large flat directories. Entries that are neither a directory
+    * nor a regular file (broken symlinks, fifos) are skipped, not
+    * crashed on.
     */
   private def listLevel(
       d: String, root: String, rootStr: String,
@@ -342,117 +316,105 @@ object FileManifest {
     st
   }
 
-  /** Regex predicate over the bucket-relative object name — the reference's
-    * `re.search` filter (download_file.py:155-164): unanchored substring
-    * semantics, which `rlike` (Java regex) shares for the common dialect
-    * subset (SURVEY §2A-O3). Pattern validity is checked eagerly so a bad
-    * pattern maps to a typed error (move_file.py:174-183 behavior).
+  /** The row predicate of a blueprint regex — the reference's unanchored
+    * `re.search` (download_file.py:155-164), i.e. `Matcher.find`, the
+    * test `rlike` applies too. The pattern is translated from the Python
+    * dialect (SURVEY §2A-O3) and compiled once, here, so a bad one raises
+    * [[BlueprintError.BadRegex]] on the driver (move_file.py:174-183).
+    * Download, move and remove match the bucket-relative name; upload
+    * (`absolute`) matches the ABSOLUTE local path (upload_file.py:159-174
+    * globs `cwd/...` strings), its `file:` scheme (`file:/x`, `file:///x`)
+    * stripped to the OS path the reference saw; other schemes stay.
     */
+  def matcher(pattern: String, absolute: Boolean = false): FileEntry => Boolean = {
+    val p =
+      try Pattern.compile(RegexCompat.toJava(pattern))
+      catch {
+        case e: PatternSyntaxException =>
+          throw BlueprintError.BadRegex(pattern, e.getMessage)
+      }
+    def osPath(b: String) =
+      if (b.startsWith("file:")) b.substring(5).stripPrefix("//") else b
+    if (absolute) e => p.matcher(s"${osPath(e.bucket)}/${e.path}").find()
+    else e => p.matcher(e.path).find()
+  }
+
+  /** [[matcher]] as a Dataset filter. */
   def regexFilter(manifest: Dataset[FileEntry], pattern: String): Dataset[FileEntry] =
-    manifest.filter(compiled(pattern))
+    manifest.filter(matcher(pattern))
 
-  /** Regex predicate over the ABSOLUTE local path — upload's divergent
-    * semantics (upload_file.py:159-174 builds `cwd/...` strings via glob
-    * and matches those): a pattern anchored on the absolute prefix must
-    * match for upload, and must NOT implicitly match for the
-    * bucket-relative ops. Scheme is stripped so the matched string is the
-    * OS path the reference saw (`/tmp/src/folder/file`).
+  /** Destination names for a caller to apply inside its own per-partition
+    * step: `name(p, rows of partition p)` yields each kept row's entry
+    * with its bucket-relative destination.
     */
-  def regexFilterAbsolute(manifest: Dataset[FileEntry], pattern: String): Dataset[FileEntry] = {
-    val abs = concat(
-      regexp_replace(col("bucket"), "^file:(//)?", ""), lit("/"), col("path"))
-    manifest.filter(compiled(pattern, abs))
+  final case class Naming[A](
+      rows: RDD[A], name: (Int, Iterator[A]) => Iterator[(FileEntry, String)]) {
+    def named: RDD[(FileEntry, String)] = rows.mapPartitionsWithIndex(name)
   }
 
-  private def compiled(pattern: String, target: Column = col("path")): Column = {
-    // accept the reference's Python-re dialect (SURVEY §2A-O3):
-    // translate Python-only spellings, then validate eagerly so a bad
-    // pattern maps to a typed error instead of failing inside a task
-    val jpat = graft.core.RegexCompat.toJava(pattern)
-    try java.util.regex.Pattern.compile(jpat)
-    catch {
-      case e: java.util.regex.PatternSyntaxException =>
-        throw BlueprintError.BadRegex(pattern, e.getMessage)
+  /** Names the entries of `manifest` that `keep` accepts, as
+    * `determine_destination_file_name` + enumeration do
+    * (download_file.py:74-106): explicit name, enumerated `name_{i}.ext`
+    * (`_i` before the first dot), or the source's basename, under the
+    * cleaned destination folder. A basename needs no sort and no job.
+    * Enumeration follows the entries sorted on (path, bucket) in UTF-8
+    * byte order — the order GCS lists names in, which the reference
+    * relied on implicitly (SURVEY §4-P5), and the order Catalyst sorts
+    * strings in; `String.compareTo` (UTF-16) differs above U+FFFF. The
+    * sort is a range-partitioned shuffle, and one job counts each sorted
+    * partition: a row's number is its partition's offset plus its place
+    * in it, so no single-task window exists. That count also decides
+    * `IfMultiple`; with `Always` and one sorted partition it is skipped.
+    */
+  def naming(
+      manifest: RDD[FileEntry],
+      keep: FileEntry => Boolean,
+      destinationFolderName: String,
+      destinationFileName: Option[String],
+      policy: EnumeratePolicy): Naming[_] = {
+    val folder = PathAlg.cleanFolderName(destinationFolderName)
+    def under(name: String): String =
+      if (folder.isEmpty) name else s"$folder/$name"
+    destinationFileName match {
+      case None =>
+        Naming[FileEntry](manifest, (_, it) =>
+          it.filter(keep).map(e => (e, under(PathAlg.baseName(e.path)))))
+      case Some(dest) =>
+        // path, NUL (below every other byte), bucket: UTF-8 sort keys
+        val keyed = manifest.mapPartitions(_.filter(keep).map(e =>
+          (s"${e.path}\u0000${e.bucket}".getBytes(UTF_8), e)))
+        val byteOrder: Ordering[Array[Byte]] = java.util.Arrays.compareUnsigned(_, _)
+        val sorted = new ShuffledRDD[Array[Byte], FileEntry, FileEntry](keyed,
+          new RangePartitioner(keyed.getNumPartitions, keyed)(byteOrder, implicitly))
+          .setKeyOrdering(byteOrder)
+        // offsets(p): the rows before sorted partition p
+        val offsets =
+          if (policy == EnumeratePolicy.Always && sorted.getNumPartitions == 1)
+            Array(0L)
+          else sorted.sparkContext.runJob(sorted,
+            (_: TaskContext, it: Iterator[(Array[Byte], FileEntry)]) => it.size.toLong,
+            sorted.partitions.indices).scanLeft(0L)(_ + _)
+        val enumerate = policy == EnumeratePolicy.Always || offsets.last > 1
+        Naming[(Array[Byte], FileEntry)](sorted, (p, it) =>
+          it.zipWithIndex.map { case ((_, e), i) =>
+            (e, under(
+              if (enumerate) PathAlg.enumerateFileName(dest, offsets(p) + i + 1)
+              else dest))
+          })
     }
-    target.rlike(jpat)
   }
 
-  /** Project destination object names onto a manifest.
-    *
-    * Mirrors `determine_destination_file_name` + enumeration
-    * (download_file.py:74-106): explicit name, enumerated `name_{i}.ext`, or
-    * basename of the source. Without an explicit name (`None`, the
-    * reference's default) `dest` is a per-row projection of the
-    * basename: no index, no Spark job. With one, the plan is indexed
-    * here, eagerly: the running counter is a `zipWithIndex` over the
-    * path-sorted manifest — explicit and deterministic where the
-    * reference implicitly relied on GCS's lexicographic listing order
-    * (SURVEY §4-P5), and distributed: the sort is a range-partitioned
-    * shuffle and zipWithIndex a per-partition offset job, so no
-    * single-task global window exists anywhere in the plan.
-    *
-    * Output columns: manifest columns + `dest` (bucket-relative destination).
-    */
+  /** [[naming]] as a DataFrame of the manifest columns plus `dest`. */
   def withDestination(
       manifest: Dataset[FileEntry],
       destinationFolderName: String,
       destinationFileName: Option[String],
-      policy: EnumeratePolicy): DataFrame =
-    withDestinationManaged(manifest, destinationFolderName,
-      destinationFileName, policy)._1
-
-  /** [[withDestination]] plus a release hook for the persisted indexed
-    * frame the returned plan reads — same contract as
-    * [[ScannedManifest.release]]: call it once the plan is consumed
-    * (the Blueprints pipelines do, right after their sink action);
-    * re-reading afterwards just re-executes the lineage. Without an
-    * explicit name nothing is persisted and the hook does nothing.
-    */
-  def withDestinationManaged(
-      manifest: Dataset[FileEntry],
-      destinationFolderName: String,
-      destinationFileName: Option[String],
-      policy: EnumeratePolicy): (DataFrame, () => Unit) = {
-    val spark = manifest.sparkSession
-    import spark.implicits._
-    val folder = PathAlg.cleanFolderName(destinationFolderName)
-    def under(name: Column): Column =
-      if (folder.isEmpty) name else concat(lit(folder + "/"), name)
-    destinationFileName match {
-      case None =>
-        (manifest.toDF().withColumn("dest",
-          under(element_at(split(col("path"), "/"), -1))), () => ())
-      case Some(dest) =>
-        // persist across the three consumers (count, sort sampling, sort
-        // exec) — without it each action re-executes the whole listing
-        // lineage; the indexed result is persisted + materialized so the
-        // caller's downstream actions reuse it too (manifests are
-        // metadata-sized; the cache is released by the returned hook, or
-        // by the ContextCleaner for plain-withDestination callers)
-        val cached = manifest.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val total = cached.count()
-        val indexed = spark.createDataset(
-          cached.orderBy("path").as[FileEntry].rdd
-            .zipWithIndex().map { case (e, i) => (e, i + 1) })
-          .select(col("_1.*"), col("_2").as("file_number"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        indexed.count()
-        cached.unpersist(blocking = false)
-        val n = col("file_number")
-        val dotIdx = dest.indexOf('.')
-        def enumerated(i: Column) =
-          if (dotIdx < 0) concat(lit(dest + "_"), i)
-          else concat(lit(dest.substring(0, dotIdx) + "_"), i,
-            lit(dest.substring(dotIdx)))
-        val destName = policy match {
-          case EnumeratePolicy.Always => enumerated(n)
-          case EnumeratePolicy.IfMultiple =>
-            if (total > 1) enumerated(n) else lit(dest)
-        }
-        (indexed.withColumn("dest", under(destName)).drop("file_number"),
-          () => indexed.unpersist(blocking = false))
-    }
+      policy: EnumeratePolicy): DataFrame = {
+    val named = naming(manifest.rdd, _ => true, destinationFolderName,
+      destinationFileName, policy).named
+    manifest.sparkSession.createDataFrame(named.map { case (e, d) =>
+      (e.bucket, e.path, e.name, e.size, e.modificationTime, d)
+    }).toDF("bucket", "path", "name", "size", "modificationTime", "dest")
   }
 
   private[graft] def fileSystemFor(spark: SparkSession, uri: String): FileSystem =

@@ -261,6 +261,112 @@ class BlueprintsSpec extends SparkSpec {
     assert(verifyJobs <= 3, s"verified sync ran $verifyJobs jobs")
   }
 
+  test("an enumerated regex download over a nested tree runs 4 jobs") {
+    // listing wave 1, the enumeration sort's range sample 1, the sorted
+    // partitions' row count 1 (the offsets), sink 1; no collision check:
+    // Always-enumerated names are unique by construction. The Column-
+    // based naming this replaced ran 10 here.
+    val src = freshBucket("logs/top.csv" -> "t", "logs/d0/a.csv" -> "a",
+      "logs/d0/b.csv" -> "b", "logs/d1/c.csv" -> "c", "logs/d1/skip.txt" -> "s")
+    val dst = Files.createTempDirectory(root, "dl")
+    val n = jobs(s"budget-enumerated-$dst") {
+      assert(Blueprints.download(spark,
+        DownloadConfig(uri(src), "logs", ".*[.]csv", MatchType.RegexMatch,
+          "out", Some("part.csv")), uri(dst)) == FileOps.CopyStats(4, 4, 0))
+    }
+    // path order: d0/a, d0/b, d1/c, top
+    assert((1 to 4).map(i => Files.readString(dst.resolve(s"out/part_$i.csv"))) ==
+      Seq("a", "b", "c", "t"))
+    assert(n <= 4, s"enumerated regex download ran $n jobs")
+  }
+
+  test("explicit names enumerate before the first dot, in path order") {
+    val src = freshBucket("in/b.bin" -> "2", "in/a.bin" -> "1", "in/sub/c.bin" -> "3")
+    val plain = Files.createTempDirectory(root, "dl")
+    Blueprints.download(spark, DownloadConfig(uri(src), "in", "[.]bin$",
+      MatchType.RegexMatch, "", Some("x")), uri(plain))
+    assert(names(plain) == Set("x_1", "x_2", "x_3"))
+    assert(Files.readString(plain.resolve("x_3")) == "3") // in/sub/c.bin sorts last
+    val dotted = Files.createTempDirectory(root, "dl")
+    Blueprints.download(spark, DownloadConfig(uri(src), "in", "[.]bin$",
+      MatchType.RegexMatch, "arch", Some("a.tar.gz")), uri(dotted))
+    assert(names(dotted) ==
+      Set("arch/a_1.tar.gz", "arch/a_2.tar.gz", "arch/a_3.tar.gz"))
+    assert(Files.readString(dotted.resolve("arch/a_1.tar.gz")) == "1")
+  }
+
+  test("IfMultiple over a nested tree: one match keeps the name, several enumerate") {
+    // nested, so the listing runs executor waves before the naming
+    val src = freshBucket("a/d0/x1.txt" -> "1", "a/d1/x2.txt" -> "2",
+      "a/d1/deep/y.txt" -> "y")
+    val one = Files.createTempDirectory(root, "mv")
+    assert(Blueprints.move(spark, MoveConfig(uri(src), uri(one), "a", "y[.]txt",
+      MatchType.RegexMatch, "", Some("solo.txt"))) == FileOps.CopyStats(1, 1, 0))
+    assert(names(one) == Set("solo.txt"))
+    val many = Files.createTempDirectory(root, "mv")
+    assert(Blueprints.move(spark, MoveConfig(uri(src), uri(many), "a", "x\\d",
+      MatchType.RegexMatch, "m", Some("m.txt"))) == FileOps.CopyStats(2, 2, 0))
+    assert(names(many) == Set("m/m_1.txt", "m/m_2.txt"))
+    assert(Files.readString(many.resolve("m/m_2.txt")) == "2")
+    assert(names(src).isEmpty)
+  }
+
+  test("regex blueprints and syncs run no SQL execution and no SQL job") {
+    // the listing, regex filter, naming and sinks are plain RDD work:
+    // no Catalyst plan is built, analysed or code-generated on the way
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val group = s"no-sql-${System.nanoTime()}"
+    val (sqlRuns, allJobs, sqlJobs) = (new java.util.concurrent.atomic.AtomicInteger,
+      new java.util.concurrent.atomic.AtomicInteger, new java.util.concurrent.atomic.AtomicInteger)
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart if s.jobGroupId.contains(group) =>
+          sqlRuns.incrementAndGet()
+        case _ =>
+      }
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.properties != null && j.properties.getProperty("spark.jobGroup.id") == group) {
+          allJobs.incrementAndGet()
+          if (j.properties.getProperty("spark.sql.execution.id") != null)
+            sqlJobs.incrementAndGet()
+        }
+    }
+    val src = freshBucket("logs/top.csv" -> "t", "logs/d0/a.csv" -> "a",
+      "logs/d1/b.csv" -> "bb", "logs/d1/deep/c.csv" -> "c")
+    val local = Files.createTempDirectory(root, "nosql")
+    val bkt = Files.createTempDirectory(root, "nosql-bkt")
+    val arch = Files.createTempDirectory(root, "nosql-arch")
+    val mirror = Files.createTempDirectory(root, "nosql-mirror")
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    try {
+      // a nested-tree regex download (listing waves run), enumerated
+      Blueprints.download(spark, DownloadConfig(uri(src), "logs", ".*[.]csv",
+        MatchType.RegexMatch, "dl", Some("f.csv")), uri(local))
+      Blueprints.upload(spark, UploadConfig(uri(bkt), "", "f_.*[.]csv",
+        MatchType.RegexMatch, "up", None), uri(local))
+      Blueprints.move(spark, MoveConfig(uri(bkt), uri(arch), "up", ".*",
+        MatchType.RegexMatch, "moved", None))
+      Blueprints.remove(spark, RemoveConfig(uri(arch), "moved", "f_[12]",
+        MatchType.RegexMatch))
+      FileOps.sync(spark, uri(src), "logs", uri(mirror), "m")
+      FileOps.sync(spark, uri(src), "logs", uri(mirror), "m")
+      write(mirror.resolve("m/top.csv"), "T")
+      assert(FileOps.sync(spark, uri(src), "logs", uri(mirror), "m",
+        verifyContent = true) == FileOps.SyncStats(4, 1, 3, 0, 0))
+    } finally {
+      sc.clearJobGroup()
+      org.apache.spark.graft.TestBus.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    assert(names(arch) == Set("moved/f_3.csv", "moved/f_4.csv"))
+    assert(allJobs.get > 0, "the listener saw none of the ops' jobs")
+    assert(sqlRuns.get == 0 && sqlJobs.get == 0,
+      s"${sqlRuns.get} SQL executions, ${sqlJobs.get} of ${allJobs.get} jobs under one")
+  }
+
   // --- exit codes (exit_codes.py:1-3, uniform per SURVEY §2A-O12) ---
 
   test("missing bucket raises InvalidBucket with exit code 201") {

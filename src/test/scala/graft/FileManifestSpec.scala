@@ -237,6 +237,78 @@ class FileManifestSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.adaptive.enabled", before)
   }
 
+  test("enumeration breaks path ties on the bucket") {
+    // a manifest over two buckets holds the same relative path twice; the
+    // bucket decides which one is _1, whichever listing comes first
+    val Seq(lo, hi) = Seq(mkTree(nDirs = 1, filesPerDir = 1),
+      mkTree(nDirs = 1, filesPerDir = 1)).sortBy(b => s"file://$b")
+    Seq(Seq(hi, lo), Seq(lo, hi)).foreach { order =>
+      val across = order.map(b => FileManifest.scan(spark, s"file://$b"))
+        .reduce(_ unionByName _)
+      val planned = FileManifest
+        .withDestination(across, "", Some("x.dat"), EnumeratePolicy.Always)
+        .collect().map(r => r.getAs[String]("bucket") -> r.getAs[String]("dest"))
+        .toMap
+      assert(planned == Map(s"file://$lo" -> "x_1.dat", s"file://$hi" -> "x_2.dat"))
+    }
+  }
+
+  test("enumeration orders names by their UTF-8 bytes") {
+    // U+E000 sorts after a surrogate pair in UTF-16 but before it in
+    // UTF-8, the order Catalyst sorts strings in and GCS lists names in
+    import spark.implicits._
+    val m = Seq("\uD83D\uDE00.txt", "\uE000.txt", "a.txt").toDS()
+      .map(p => graft.sources.FileEntry("file:///b", p, p, 1L, new java.sql.Timestamp(0L)))
+    val planned = FileManifest
+      .withDestination(m, "", Some("n.txt"), EnumeratePolicy.Always)
+      .collect().map(r => r.getAs[String]("dest") -> r.getAs[String]("path")).toMap
+    assert(planned == Map("n_1.txt" -> "a.txt", "n_2.txt" -> "\uE000.txt",
+      "n_3.txt" -> "\uD83D\uDE00.txt"))
+  }
+
+  test("the Scala regex filter matches what rlike matched") {
+    // oracle: the Column filter this replaced — rlike over the path, or
+    // for upload over the bucket with `^file:(//)?` stripped, plus path
+    import org.apache.spark.sql.functions.{col, concat, lit, regexp_replace}
+    import spark.implicits._
+    import graft.sources.FileEntry
+    val ts = new java.sql.Timestamp(0L)
+    val rows = Seq(
+      FileEntry("file:/x", "a/b.c/obj12.txt", "obj12.txt", 1L, ts),
+      FileEntry("file:///x", "a/bxc/obj3", "obj3", 1L, ts),
+      FileEntry("file://host/x", "b.c", "b.c", 1L, ts),
+      FileEntry("gs://bkt", "data/obj7.bin", "obj7.bin", 1L, ts),
+      FileEntry("simstore://src", "p00/s01/obj.bin", "obj.bin", 1L, ts))
+    val patterns = Seq("b[.]c", "^a/", "^/x/a/", "^x/", "^host/x/",
+      "^gs://bkt/data/", "^/bkt", "(?P<n>obj)\\d+", "obj\\d+[.]", "txt$",
+      "(?i)OBJ3\\Z", "^simstore:")
+    val ds = rows.zipWithIndex.toDS()
+    for (p <- patterns; absolute <- Seq(false, true)) {
+      val target =
+        if (!absolute) col("_1.path")
+        else concat(regexp_replace(col("_1.bucket"), "^file:(//)?", ""),
+          lit("/"), col("_1.path"))
+      val oracle = ds.filter(target.rlike(graft.core.RegexCompat.toJava(p)))
+        .collect().map(_._2).toSet
+      val keep = FileManifest.matcher(p, absolute)
+      val scala = rows.indices.filter(i => keep(rows(i))).toSet
+      assert(scala == oracle, s"pattern $p absolute=$absolute")
+    }
+    // unanchored find: a match in the middle of the name counts
+    assert(FileManifest.matcher("b[.]c")(rows(0)))
+    // upload: both file: spellings give the OS path; other schemes stay
+    assert(FileManifest.matcher("^/x/a/b[.]c/", absolute = true)(rows(0)))
+    assert(FileManifest.matcher("^/x/a/bxc/", absolute = true)(rows(1)))
+    assert(FileManifest.matcher("^gs://bkt/data/obj7", absolute = true)(rows(3)))
+    // the Python named group goes through RegexCompat
+    assert(FileManifest.matcher("(?P<n>obj)\\d+")(rows(3)))
+    assert(!FileManifest.matcher("(?P<n>obj)\\d+")(rows(4)))
+    intercept[graft.core.BlueprintError.BadRegex](FileManifest.matcher("(?P<n>obj"))
+    // the Dataset adapter keeps the same rows
+    assert(FileManifest.regexFilter(rows.toDS(), "b[.]c").collect().toSet ==
+      rows.filter(FileManifest.matcher("b[.]c")).toSet)
+  }
+
   test("IfMultiple keeps the plain name for a single match") {
     val b = mkTree(nDirs = 1, filesPerDir = 1)
     val m = FileManifest.scan(spark, s"file://$b")
