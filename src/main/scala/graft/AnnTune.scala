@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.{Ann, Q}
 
@@ -20,14 +19,7 @@ import graft.operators.{Ann, Q}
   */
 object AnnTune {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session()
 
     val sb = new StringBuilder
     def out(s: String): Unit = { println(s); sb.append(s).append('\n') }

@@ -21,48 +21,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to the machine's cores: the target environment is
-    // local[32] (SURVEY §6) and a hardwired 4 silently benchmarks an
-    // 8×-undersized executor when the env var is absent
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Partition-count hygiene for the skinny persisted/iterative
-      // frames (r17, guide §2.2 "let AQE coalesce small partitions"):
-      // with the default canChangeCachedPlanOutputPartitioning=false,
-      // every `managed` (persisted) fragment pins its pre-AQE output
-      // partitioning — 32 partitions of kilobytes for the fixpoint
-      // loops' node/edge frames — and every downstream stage pays 32
-      // near-empty tasks to read them (PageRank/HITS/CC/k-core, the
-      // shared shingle/gram caches). Allowing AQE inside cached-plan
-      // materialization coalesces those to size-appropriate counts
-      // (q245 measured 6.6 → 3.5 s from this line alone; a config
-      // matrix over parallelismFirst/advisorySize showed the Spark
-      // defaults for those two are best at BOTH ends — parallelism-
-      // first keeps mid-size CPU-heavy stages parallel locally, and
-      // at 100 TB shuffles exceed the advisory size anyway, so only
-      // this cached-plan setting moves the needle). Env-overridable
-      // for A/B runs.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_CACHED_REPART", "true"))
-      .config("spark.ui.enabled", "false")
-      // NO periodic-GC override (r11 set 1min): the ContextCleaner's
-      // periodic System.gc() fires on its own thread, i.e. INSIDE
-      // whatever timed pass is running when the minute ticks — the
-      // prime suspect for r11's unexplained 1.5-2.7× pass-to-pass
-      // swings on q99/q117 (isolated runs don't reproduce them; a full
-      // sweep crosses the timer ~9 times). The explicit per-query
-      // System.gc() below already does the cleaner's job ~130 times a
-      // sweep, OUTSIDE the timed passes, so the timer bought nothing
-      // but mid-pass stop-the-world pauses. The per-pass gc array in
-      // the sidecar now attributes any residual swing either way.
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
 
     // SPARK_GRAFT_BENCH_ONLY=q27,q98 restricts to a comma-separated
     // qNN-prefix subset — for iterating on one query's plan without
@@ -94,10 +53,6 @@ object Bench {
     // records a timeout error like any other per-query failure.
     val passTimeoutSec =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_TIMEOUT_SEC", "300").toLong
-    val pool = java.util.concurrent.Executors.newCachedThreadPool(
-      (r: Runnable) => {
-        val t = new Thread(r, "bench-pass"); t.setDaemon(true); t
-      })
     sealed trait Pass
     final case class Ok(sec: Double, gcSec: Double, stageSec: Double,
       shufMb: Double, spillMb: Double) extends Pass
@@ -176,56 +131,51 @@ object Bench {
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : Pass = {
       val tag = s"bench-$name-${System.nanoTime()}"
-        val fut = pool.submit(
-          new java.util.concurrent.Callable[
-            Either[String, (Double, Double, Double, Double, Double)]] {
-            def call()
-                : Either[String, (Double, Double, Double, Double, Double)] =
-              try {
-                spark.sparkContext.setJobGroup(tag, name,
-                  interruptOnCancel = true)
-                val g0 = gcMillis()
-                val s0 = stageWallMs.get()
-                val sh0 = shufBytes.get()
-                val sp0 = spillBytes.get()
-                val t0 = System.nanoTime()
-                fn(spark, sfDir).collect()
-                val sec = (System.nanoTime() - t0) / 1e9
-                // stage-completion events arrive on the async listener
-                // bus: spin (outside the timed region) until the
-                // counter is stable so the pass's stages are counted
-                // against the right pass. Known limit: a TIMED-OUT
-                // pass's cancelled stages can finish during the next
-                // pass's window and inflate ITS stage column — the
-                // arrays are attribution-grade (read them with the
-                // pass wall next to them), not an accounting ledger.
-                var last = stageWallMs.get(); var tries = 0
-                var stable = false
-                while (!stable && tries < 20) {
-                  Thread.sleep(15)
-                  val cur = stageWallMs.get()
-                  stable = cur == last; last = cur; tries += 1
-                }
-                Right((sec, (gcMillis() - g0) / 1e3,
-                  (last - s0) / 1e3,
-                  (shufBytes.get() - sh0) / 1e6,
-                  (spillBytes.get() - sp0) / 1e6))
-              } catch {
-                case e: Throwable =>
-                  Left(e.toString.takeWhile(_ != '\n').take(200))
-              }
-          })
-        // ADVICE r12: the callable returns (sec, gc, stage) and ALL
-        // bookkeeping appends happen on the main thread in the Ok
-        // path — a timed-out worker that finishes late can no longer
-        // append an orphan gc sample and misalign the sidecar arrays
+      val fut = graft.operators.Q.async(spark) {
+        try {
+          spark.sparkContext.setJobGroup(tag, name,
+            interruptOnCancel = true)
+          val g0 = gcMillis()
+          val s0 = stageWallMs.get()
+          val sh0 = shufBytes.get()
+          val sp0 = spillBytes.get()
+          val t0 = System.nanoTime()
+          fn(spark, sfDir).collect()
+          val sec = (System.nanoTime() - t0) / 1e9
+          // stage-completion events arrive on the async listener
+          // bus: spin (outside the timed region) until the
+          // counter is stable so the pass's stages are counted
+          // against the right pass. Known limit: a TIMED-OUT
+          // pass's cancelled stages can finish during the next
+          // pass's window and inflate ITS stage column — the
+          // arrays are attribution-grade (read them with the
+          // pass wall next to them), not an accounting ledger.
+          var last = stageWallMs.get(); var tries = 0
+          var stable = false
+          while (!stable && tries < 20) {
+            Thread.sleep(15)
+            val cur = stageWallMs.get()
+            stable = cur == last; last = cur; tries += 1
+          }
+          Right((sec, (gcMillis() - g0) / 1e3,
+            (last - s0) / 1e3,
+            (shufBytes.get() - sh0) / 1e6,
+            (spillBytes.get() - sp0) / 1e6))
+        } catch {
+          case e: Throwable =>
+            Left(e.toString.takeWhile(_ != '\n').take(200))
+        }
+      }
+      // ADVICE r12: the pass returns (sec, gc, stage) and ALL
+      // bookkeeping appends happen on the main thread in the Ok
+      // path — a timed-out worker that finishes late can no longer
+      // append an orphan gc sample and misalign the sidecar arrays
       try fut.get(passTimeoutSec, java.util.concurrent.TimeUnit.SECONDS)
         .fold(Crashed(_),
           { case (s, g, st, sh, sp) => Ok(s, g, st, sh, sp) })
       catch {
         case _: java.util.concurrent.TimeoutException =>
           spark.sparkContext.cancelJobGroup(tag)
-          fut.cancel(true)
           TimedOut
         case e: Throwable =>
           Crashed(e.toString.takeWhile(_ != '\n').take(200))
@@ -260,9 +210,10 @@ object Bench {
       .grouped(4).flatMap { batch =>
         val futs = batch.map { case (name, fn) =>
           val t0 = System.nanoTime()
-          name -> java.util.concurrent.CompletableFuture.supplyAsync(
-            () => { passFor(s"$name-storewarm", fn)
-              (System.nanoTime() - t0) / 1e9 })
+          name -> graft.operators.Q.async(spark) {
+            passFor(s"$name-storewarm", fn)
+            (System.nanoTime() - t0) / 1e9
+          }
         }
         val done = futs.map { case (name, f) => name -> f.join() }
         graft.operators.Q.releaseManaged()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev harness: run ONE registered query by name and print its result —
   * the fast inner loop when authoring a new `SparkEntry.queries` entry
   * (the full `Verify` pass re-runs all of them).
@@ -12,15 +10,7 @@ object RunOne {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     val df = SparkEntry.queries(name)(spark, sfDir)
     df.show(100, truncate = false)
     if (args.contains("--explain")) df.explain("formatted")

@@ -27,17 +27,8 @@ object Cli {
     f.getOrElse(key,
       throw BlueprintError.UsageError(s"the following argument is required: --$key"))
 
-  def session(): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-blueprints")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
+  def session(): SparkSession =
+    graft.Session(master = sys.env.get("SPARK_MASTER"))
 
   /** "verbed N file(s)" with transferred (not planned) as N, so skipped
     * rows (overwrite=false, idempotent retries) are never overstated.

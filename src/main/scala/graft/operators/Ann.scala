@@ -942,38 +942,12 @@ object Ann {
     * embedding store, PQ is the index that fits the scan in the page
     * cache.
     */
-  /** Fit-once memo for the in-plan IVF-PQ anchor (VERDICT r14 ask #7 —
-    * the q179 `pcaFit` treatment applied to the PQ/OPQ fit): the
-    * coarse quantizer + codebook/rotation training is a deterministic
-    * pure function of (table content, params), so q126's recall
-    * contract fits ONCE per session and every later invocation —
-    * including every timed bench pass after the warmup — probes the
-    * memoized artifacts through [[ivfPqTopK]]'s `quantizer`/`codebooks`
-    * injection points. The key carries the embeddings table's content
-    * fingerprint (a regenerated corpus at the same path re-fits — the
-    * ADVICE r12 staleness class) plus every training parameter; the
-    * training frame is derived HERE from (s, dir) rather than taken
-    * from the caller, so the key can never disagree with what was
-    * trained on (a caller-supplied filtered frame would silently
-    * poison or serve the shared entry — ADVICE r15). Entries are
-    * bounded by distinct (corpus, params) pairs per session. A racing
-    * double-compute is harmless (identical result).
-    */
-  private val pqFitCache = scala.collection.concurrent.TrieMap
-    .empty[String, (org.apache.spark.ml.clustering.KMeansModel, PqModel)]
-
-  /** Session memo for the bare coarse-quantizer fit — [[pqFitMemo]]'s
-    * discipline (frame derived HERE from (s, dir), fingerprint in the
-    * key) for the callers that need only the KMeans model (q98's
-    * recall gate, q122's cell-balance audit): the fit is a pure
-    * function of (corpus, params), and re-training it on every timed
+  /** The session memo ([[FitMemo]]) for the bare coarse-quantizer fit,
+    * for the callers that need only the KMeans model (q98's recall
+    * gate, q122's cell-balance audit): re-training it on every timed
     * pass cost q98 ~30 driver-sequential KMeans jobs per pass (r17
-    * profile) for a bitwise-identical model. A racing double-compute
-    * is harmless (identical result).
+    * profile) for a bitwise-identical model.
     */
-  private val coarseFitCache = scala.collection.concurrent.TrieMap
-    .empty[String, org.apache.spark.ml.clustering.KMeansModel]
-
   def coarseFitMemo(
       s: org.apache.spark.sql.SparkSession,
       dir: String,
@@ -981,19 +955,17 @@ object Ann {
       seed: Long = 7L,
       trainTarget: Long = 0L)
       : org.apache.spark.ml.clustering.KMeansModel =
-    coarseFitCache.getOrElseUpdate(
-      dir + "#" + Q.tableFingerprint(s, dir, "embeddings") +
-        s"#$nlist#$seed#$trainTarget",
+    FitMemo(s, dir, "embeddings", "coarse", nlist, seed, trainTarget) {
       coarseQuantizer(
         Q.table(s, dir, "embeddings").select("vec_id", "embedding"),
-        nlist, seed, trainTarget))
+        nlist, seed, trainTarget)
+    }
 
   /** [[coarseFitMemo]] for a quantizer trained on a frame DERIVED from
     * the embeddings table (q138 trains on its semantic-dedup
-    * survivors, not the raw table): same discipline — the training
-    * frame is a deterministic function of the table, the key carries
-    * the table fingerprint plus the caller's derivation `tag`, so a
-    * regenerated corpus refits and two different derivations can never
+    * survivors, not the raw table): the training frame is a
+    * deterministic function of the table, and the key carries the
+    * caller's derivation `tag`, so two different derivations can never
     * share a model. A fit memo of model parameters, not a result
     * cache: every pass re-runs the full dataflow from parquet; only
     * the ~25 driver-sequential KMeans training jobs are paid once per
@@ -1008,11 +980,15 @@ object Ann {
       seed: Long = 7L,
       trainTarget: Long = 0L)
       : org.apache.spark.ml.clustering.KMeansModel =
-    coarseFitCache.getOrElseUpdate(
-      dir + "#" + Q.tableFingerprint(s, dir, "embeddings") +
-        s"#$tag#$nlist#$seed#$trainTarget",
+    FitMemo(s, dir, "embeddings", "coarse", tag, nlist, seed, trainTarget)(
       coarseQuantizer(train, nlist, seed, trainTarget))
 
+  /** The in-plan IVF-PQ anchor's fit as a [[FitMemo]] (VERDICT r14 ask
+    * #7): the coarse quantizer + codebook/rotation training fits ONCE
+    * per session, and every later invocation — including every timed
+    * bench pass after the warmup — probes the memoized artifacts
+    * through [[ivfPqTopK]]'s `quantizer`/`codebooks` injection points.
+    */
   def pqFitMemo(
       s: org.apache.spark.sql.SparkSession,
       dir: String,
@@ -1023,15 +999,14 @@ object Ann {
       trainTarget: Long = 0L,
       opqIters: Int = 0)
       : (org.apache.spark.ml.clustering.KMeansModel, PqModel) =
-    pqFitCache.getOrElseUpdate(
-      dir + "#" + Q.tableFingerprint(s, dir, "embeddings") +
-        s"#$nlist#$m#$ksub#$seed#$trainTarget#$opqIters", {
-        val corpus = Q.table(s, dir, "embeddings")
-          .select("vec_id", "embedding")
-        val model = coarseQuantizer(corpus, nlist, seed, trainTarget)
-        (model, pqCodebooks(corpus, model, m, ksub, trainTarget,
-          opqIters = opqIters))
-      })
+    FitMemo(s, dir, "embeddings", "pq", nlist, m, ksub, seed, trainTarget,
+        opqIters) {
+      val corpus = Q.table(s, dir, "embeddings")
+        .select("vec_id", "embedding")
+      val model = coarseQuantizer(corpus, nlist, seed, trainTarget)
+      (model, pqCodebooks(corpus, model, m, ksub, trainTarget,
+        opqIters = opqIters))
+    }
 
   def ivfPqTopK(
       corpus: DataFrame,

@@ -1758,12 +1758,11 @@ object Dedup {
         // the bloom (guide §2.6, the q100/q192 overlap discipline), so
         // the pass costs max(exact, bloom) instead of their sum; the
         // checkpointed flag frame is skinny (flagged doc_ids only).
-        val exactFut = java.util.concurrent.CompletableFuture.supplyAsync(
-          () => corpusG.join(benchG, "g")
-            .groupBy("doc_id").agg(count(lit(1)).as("n_hit"))
-            .filter(col("n_hit") >= 5)
-            .select(col("doc_id"), lit(1L).as("ex"))
-            .localCheckpoint(true))
+        val exactFut = Q.async(s)(corpusG.join(benchG, "g")
+          .groupBy("doc_id").agg(count(lit(1)).as("n_hit"))
+          .filter(col("n_hit") >= 5)
+          .select(col("doc_id"), lit(1L).as("ex"))
+          .localCheckpoint(true))
         val bloomFlag = bloomHitDocs(corpusG, gramBloom(benchG), minHits = 5)
           .select(col("doc_id"), lit(1L).as("bl"))
         val exactFlag = exactFut.join()

@@ -336,72 +336,67 @@ object Graph {
     if (dedup) out.distinct() else out
   }
 
+  /** The speculative fixpoint loop of [[ccStarEdges]] and
+    * [[kcorePeel]]: apply `round` up to `rounds` times from `init`,
+    * localCheckpoint'ing every frame (skinny, so plan depth stays O(1)
+    * in the round count — the q178/q237 fixpoint discipline). Returns
+    * (second-to-last, last, provenStationary) so the caller can derive
+    * the convergence bit in-plan; `provenStationary` true means the
+    * loop's own probe observed last == prev, so a caller needing the
+    * convergence fact (census bit, store fail-loud gate) can skip
+    * re-deriving it — false only means "unproven" (the cap was hit
+    * before a probe confirmed), never "diverged".
+    *
+    * The stationarity probe `stationary(prev, last)` is the one
+    * deliberate exception to the "no convergence polling" discipline
+    * of q178/q245: a graph that converges in k* rounds would otherwise
+    * pay (R − k*) full tail rounds to re-derive its own fixpoint
+    * (measured 6.2 s → ~3 s at sf0.1 for CC, k* = 3 and R = 8), and
+    * the exit is invisible to the declared semantics — a stationary
+    * frame IS the fixpoint, so the oracle's full R-round unroll agrees
+    * bit-for-bit. The probe runs through [[Q.async]] WHILE this thread
+    * speculatively computes the next round (guide §2.6 "overlap
+    * independent jobs"): both depend only on the just-checkpointed
+    * frame, so each round costs max(round, probe) instead of the sum.
+    * On the exit round the speculative frame is dropped; it re-ran an
+    * already-stationary frame, the loop's cheapest round, and its
+    * checkpoint blocks are reclaimed by the ContextCleaner.
+    */
+  private def speculate(init: DataFrame, rounds: Int)(
+      round: DataFrame => DataFrame)(
+      stationary: (DataFrame, DataFrame) => Boolean)
+      : (DataFrame, DataFrame, Boolean) = {
+    def step(e: DataFrame) = round(e).localCheckpoint(true)
+    var prev = init.localCheckpoint(true)
+    var last = if (rounds > 0) step(prev) else prev
+    var k = 1
+    var proven = false
+    while (k < rounds && !proven) {
+      val (p, e) = (prev, last)
+      val probe = Q.async(e.sparkSession)(stationary(p, e))
+      val next = step(e)
+      proven = probe.join()
+      if (!proven) { prev = e; last = next; k += 1 }
+    }
+    (prev, last, proven)
+  }
+
   /** Run `rounds` large+small star rounds over a canonical undirected
-    * edge frame; returns (second-to-last, last) edge frames so the
-    * caller can derive the convergence bit in-plan (last == prev ⇔
-    * the stars are a fixpoint ⇔ the census counts true components),
-    * plus the PROVEN-stationary bit: true means the loop's own probe
-    * observed last == prev, so a caller needing the convergence fact
-    * (census bit, store fail-loud gate) can skip re-deriving it with
-    * its own anti-join jobs — false only means "unproven" (the cap
-    * was hit before a probe confirmed), never "diverged".
-    * Each round's output is localCheckpoint'd (skinny, ≤ |nodes|−1
-    * rows once stars form) so plan depth stays O(1) in the round
-    * count — the q178/q237 fixpoint discipline.
+    * edge frame through [[speculate]] (last == prev ⇔ the stars are a
+    * fixpoint ⇔ the census counts true components). The probe is ONE
+    * bounded job: the union of the two anti-joins is empty iff both
+    * are, and isEmpty short-circuits on the first row instead of
+    * counting the whole diff (r17).
     */
   private def ccStarEdges(
-      und: DataFrame, rounds: Int): (DataFrame, DataFrame, Boolean) = {
-    var e = und.localCheckpoint(true)
-    var prev = e
-    var k = 0
-    var stationary = false
-    // speculative next round, see below — null means "not computed"
-    var spec: DataFrame = null
-    while (k < rounds && !stationary) {
-      prev = e
-      e = if (spec != null) spec
-        else ccPhase(ccPhase(e, large = true, dedup = false),
-          large = false).localCheckpoint(true)
-      spec = null
-      k += 1
-      // stationarity probe — the one deliberate exception to the
-      // "no convergence polling" discipline of q178/q245: a graph
-      // that contracts in k* rounds would otherwise pay (R − k*) full
-      // tail rounds (two phases + an eager checkpoint each) to
-      // re-derive its own fixpoint — measured 6.2 s → ~3 s at sf0.1
-      // where k* = 3 and R = 8. The probe is two anti-join counts
-      // over just-checkpointed skinny frames (bounded jobs), and the
-      // exit is invisible to the declared semantics: a stationary set
-      // IS the fixpoint, rounds k*..R are provable no-ops, so the
-      // oracle's full R-round unroll must agree bit-for-bit (the
-      // correctness gate checks exactly that).
-      if (k < rounds) {
-        // ONE bounded job, not two: the union of the two anti-joins is
-        // empty iff both are, and isEmpty short-circuits on the first
-        // row instead of counting the whole diff (r17 opt: the probe
-        // cost two full count jobs per round on the hot fixpoint loop).
-        // The probe runs on a driver thread WHILE the main thread
-        // speculatively computes round k+1 (r18, guide §2.6 "overlap
-        // independent jobs"): both depend only on the just-
-        // checkpointed e, so each round's wall is max(round, probe)
-        // instead of round + probe. On the exit round the speculative
-        // frame is discarded — it contracted an already-stationary
-        // star set (the cheapest round of the loop; the checkpoint
-        // blocks are reclaimed by the ContextCleaner like every other
-        // dropped round frame).
-        val ep = e; val pp = prev
-        val probeFut = java.util.concurrent.CompletableFuture.supplyAsync(
-          () => ep.join(pp, Seq("a", "b"), "left_anti")
-            .union(pp.join(ep, Seq("a", "b"), "left_anti"))
-            .isEmpty)
-        spec = ccPhase(ccPhase(e, large = true, dedup = false),
-          large = false).localCheckpoint(true)
-        stationary = probeFut.join()
-        if (stationary) spec = null
-      }
+      und: DataFrame, rounds: Int): (DataFrame, DataFrame, Boolean) =
+    speculate(und, rounds)(e =>
+      ccPhase(ccPhase(e, large = true, dedup = false), large = false)) {
+      (prev, e) =>
+        e.join(prev, Seq("a", "b"), "left_anti")
+          .union(prev.join(e, Seq("a", "b"), "left_anti"))
+          .isEmpty
     }
-    (prev, e, stationary)
-  }
 
   /** Component labels (node, comp) for every node of the graph, comp =
     * the component's minimum node id — the public operator API (the
@@ -591,52 +586,22 @@ object Graph {
   }
 
   /** Iterated peel to the k-core fixpoint over a canonical undirected
-    * frame; returns (second-to-last, last) so the caller derives the
-    * convergence bit in-plan. Peeling is MONOTONE (eᵣ ⊆ eᵣ₋₁), so
+    * frame through [[speculate]]. Peeling is MONOTONE (eᵣ ⊆ eᵣ₋₁), so
     * equal COUNTS prove equal sets — the stationarity probe is one
-    * count on a just-checkpointed frame (cheaper than the CC probe's
-    * anti-join pair, and exact by the subset structure).
+    * count on the just-checkpointed frame (cheaper than the CC probe's
+    * anti-join pair, and exact by the subset structure). The previous
+    * round's count is carried from the previous probe, so each round
+    * costs one count job, not two (r18).
     */
   private def kcorePeel(
       und: DataFrame, k: Int, rounds: Int)
       : (DataFrame, DataFrame, Boolean) = {
-    var e = und.localCheckpoint(true)
-    var prev = e
-    var r = 0
-    var stationary = false
-    // |prev| carried from the previous round's probe (peeling is
-    // monotone decreasing, so count equality ⇔ stationary): the old
-    // loop re-counted BOTH frames every round — 2 probe jobs × ~18
-    // chain-peel rounds at sf0.1 (r18)
     var prevCnt = -1L
-    // speculative next round (the ccStarEdges discipline, r18): the
-    // count probe of round r and the peel of round r+1 both depend
-    // only on the just-checkpointed e, so they overlap on a driver
-    // thread — each round costs max(peel, probe) instead of the sum;
-    // the speculative frame is discarded on the exit round (where the
-    // peel is a no-op over the converged core, the loop's cheapest).
-    var spec: DataFrame = null
-    while (r < rounds && !stationary) {
-      prev = e
-      e = if (spec != null) spec
-        else peelRound(e, k).localCheckpoint(true)
-      spec = null
-      r += 1
-      if (r < rounds) {
-        val ep = e; val pp = prev; val pc = prevCnt
-        val probeFut = java.util.concurrent.CompletableFuture.supplyAsync(
-          () => {
-            val base = if (pc >= 0) pc else pp.count()
-            (base, ep.count())
-          })
-        spec = peelRound(e, k).localCheckpoint(true)
-        val (base, c) = probeFut.join()
-        prevCnt = c
-        stationary = c == base
-        if (stationary) spec = null
-      }
+    speculate(und, rounds)(peelRound(_, k)) { (prev, e) =>
+      val base = if (prevCnt >= 0) prevCnt else prev.count()
+      prevCnt = e.count()
+      prevCnt == base
     }
-    (prev, e, stationary)
   }
 
   /** k-core census over a directed edge list — one row per k:

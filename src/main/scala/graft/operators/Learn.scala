@@ -93,23 +93,13 @@ object Learn {
   private[graft] final case class ProbeFit(dim: Int, w: Array[Double],
       b: Double, report: Seq[(Long, Long, Long, Long, Long)])
 
-  /** [[probeFit]] is a pure function of the table directory (exact
-    * decimal moments + deterministic driver arithmetic), so the fit is
-    * memoized per dir for the life of the session - q181's report and
-    * q183's corpus gate share one training run, the same
-    * fit-once/probe-many discipline as [[Similarity.pcaFit]] and the
-    * persisted ANN indexes. A racing double-compute is harmless
-    * (identical result).
+  /** [[probeFit]] is a pure function of the table (exact decimal
+    * moments + deterministic driver arithmetic), so it is a
+    * [[FitMemo]] - q181's report and q183's corpus gate share one
+    * training run.
     */
-  private val probeFitCache =
-    scala.collection.concurrent.TrieMap.empty[String, ProbeFit]
-
   private[graft] def probeFit(s: SparkSession, dir: String): ProbeFit =
-    // key carries a content fingerprint so a regenerated table at the
-    // same path re-fits instead of serving the stale memo (ADVICE r12)
-    probeFitCache.getOrElseUpdate(
-      dir + "#" + tableFingerprint(s, dir, "embeddings"),
-      probeFitUncached(s, dir))
+    FitMemo(s, dir, "embeddings", "probe")(probeFitUncached(s, dir))
 
   /** The Spark half of the training recipe: the feature frame is
     * persisted once (8 iterations re-read it - q178's contrib

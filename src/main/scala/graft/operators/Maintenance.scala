@@ -152,26 +152,25 @@ object Maintenance {
         // signal pass already produced feeds the report as a rowsNow/
         // rowsAtBuild override so stalenessReport re-counts nothing.
         // The ten statistic jobs are INDEPENDENT scans over disjoint
-        // tables, so they run concurrently from a driver thread pool
+        // tables, so they run concurrently through [[Q.async]]
         // (guide §2.6 — "overlap independent jobs"): sequential they
         // cost the SUM of ten small-job latencies; overlapped the
         // report costs ~the heaviest scan. FIFO scheduling backfills
         // the tails; per-family ordering of the report is unchanged.
-        def fut[T](body: => T): java.util.concurrent.CompletableFuture[T] =
-          java.util.concurrent.CompletableFuture.supplyAsync(() => body)
         // corpus-side counts for the write-once families (one scan)
-        val erF = fut(emb.agg(count(lit(1)).as("n"),
+        val erF = Q.async(s)(emb.agg(count(lit(1)).as("n"),
           sum((col("vec_id") % 4 =!= 0).cast("long")).as("nb")).head())
         // family drift signals (each one distributed job, scalar out)
-        val spanDriftF = fut(IndexMaintenance.spanDfDriftMicro(
+        val spanDriftF = Q.async(s)(IndexMaintenance.spanDfDriftMicro(
           s, s"${name}_span", toks(docs)))
-        val pcaDriftF = fut(IndexMaintenance.meanShiftMicro(baseEmb, emb))
+        val pcaDriftF =
+          Q.async(s)(IndexMaintenance.meanShiftMicro(baseEmb, emb))
         // per-store row counts feeding rowsNow (one count agg each) —
         // the measured signal_ok health bits live in IndexMaintenance
         // .healthBits, asserted suite-side, NOT in this compared
         // report (scaladoc above: not oracle-reproducible)
         def tcount(t: String) =
-          fut(s.table(t).agg(count(lit(1))).head().getLong(0))
+          Q.async(s)(s.table(t).agg(count(lit(1))).head().getLong(0))
         val shinglesNowF = tcount(s"${name}_band_shingles")
         val gramsNowF = tcount(s"${name}_gram_grams")
         val spanNowF = tcount(s"${name}_span_pgrams")
@@ -184,13 +183,13 @@ object Maintenance {
         // (the one-agg-per-statistic job budget above): lexical's
         // distinct (doc, term) postings and positional's total token
         // count (one posting per position)
-        val lexPosF = fut(docs
+        val lexPosF = Q.async(s)(docs
           .select(col("doc_id"),
             explode(TextAnalysis.tokens(col("text"))).as("t"))
           .agg(countDistinct(col("doc_id"), col("t")),
             count(lit(1)))
           .head())
-        val docsNowF = fut(docs.count())
+        val docsNowF = Q.async(s)(docs.count())
         val er = erF.join()
         val (nEmb, nBaseEmb) = (er.getLong(0), er.getLong(1))
         val spanDrift = spanDriftF.join()

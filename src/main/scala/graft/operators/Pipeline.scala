@@ -81,14 +81,6 @@ object Pipeline {
             docs.filter(col("doc_id") % 50 === 0))
           .select(col("doc_id").as("bench_id"), explode(col("sh")).as("g"))
           .managedPersist
-        // The bloom build (one agg job over the eval grams) and the CC
-        // fixpoint (stage 3) are independent builder-time actions on
-        // disjoint inputs — overlap them on a driver thread (guide
-        // §2.6) so the bloom's scan backfills executors the fixpoint's
-        // small sequential rounds leave idle. Joined before stage 4
-        // needs the serialized filter; failures rethrow there.
-        val bloomFut = java.util.concurrent.CompletableFuture.supplyAsync(
-          () => Dedup.gramBloom(benchSh.select("g").distinct()))
         // 4 (decision, hoisted). decontamination — q96 semantics: eval
         // stand-ins (doc_id % 50 = 0) leave the corpus, and any
         // survivor sharing ≥ 5 shingles with a single stand-in is
@@ -115,7 +107,12 @@ object Pipeline {
         // reads plausibly-contaminated docs; at 100 TB this turns the
         // stage from a full corpus-gram shuffle into a map-only probe
         // plus a small join, with the hashed output provably unchanged.
-        val contFut = bloomFut.thenApplyAsync { bloom =>
+        // The bloom build (one agg job over the eval grams) runs first
+        // in the same overlapped body, so its scan too backfills the
+        // executors the fixpoint's small sequential rounds leave idle;
+        // failures rethrow at the join below.
+        val contFut = Q.async(s) {
+          val bloom = Dedup.gramBloom(benchSh.select("g").distinct())
           val corpusSh = sh2.filter(col("doc_id") % 50 =!= 0)
             .select(col("doc_id"), explode(col("sh")).as("g"))
           val plausible = Dedup.bloomHitDocs(corpusSh, bloom, minHits = 5)

@@ -54,7 +54,7 @@ object Q {
   }
 
   private val storeLocks =
-    scala.collection.concurrent.TrieMap.empty[String, Object]
+    new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
   /** Serialize check-then-create of a SHARED persisted store: the
     * `if (!tableExists(name)) build(name)` idiom races when two
@@ -63,7 +63,39 @@ object Q {
     * store name — builders of different stores stay fully parallel.
     */
   def syncStore[T](name: String)(body: => T): T =
-    storeLocks.getOrElseUpdate(name, new Object).synchronized(body)
+    storeLocks.computeIfAbsent(name, _ => new Object).synchronized(body)
+
+  /** Overlap driver work: run `body` on the `graft-async` pool with the
+    * caller's active session and local properties (job group, job
+    * description, scheduler pool), so the jobs it starts carry the
+    * caller's labels and die with the caller's `cancelJobGroup`. This is
+    * the primitive Spark's own broadcast and subquery execs use
+    * (`SQLExecution.withThreadLocalCaptured`), over a daemon pool bounded
+    * like Spark's broadcast-exchange pool
+    * (`spark.sql.broadcastExchange.maxThreadThreshold`, 128). The pool
+    * grows on demand rather than being small and fixed: an overlapped
+    * body may wait on work it forks itself (a store warmed concurrently
+    * whose builder overlaps its own jobs), which a small pool would
+    * deadlock.
+    */
+  def async[T](s: SparkSession)(body: => T)
+      : java.util.concurrent.CompletableFuture[T] =
+    org.apache.spark.sql.execution.SQLExecution.withThreadLocalCaptured(
+      s.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      asyncPool)(body)
+
+  private lazy val asyncPool = {
+    import java.util.concurrent._
+    val n = new atomic.AtomicInteger
+    val p = new ThreadPoolExecutor(128, 128, 60L, TimeUnit.SECONDS,
+      new LinkedBlockingQueue[Runnable](), (r: Runnable) => {
+        val t = new Thread(r, s"graft-async-${n.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+    p.allowCoreThreadTimeOut(true)
+    p
+  }
 
   /** `.managedPersist` chains where `.persist(...)` used to — every
     * query-builder shared fragment routes its cache through
@@ -117,12 +149,11 @@ object Q {
 
   /** Cheap content fingerprint of one test table's parquet files
     * (file count, max mtime, total bytes — one driver-side listing,
-    * no data read). Session-lifetime fit memos (probeFit, pcaFit) key
-    * on `dir + fingerprint` instead of the directory string alone, so
-    * regenerating the parquet at the same path within a session
-    * (re-scaled fixtures, refreshed corpora) invalidates the memo
-    * instead of silently serving a fit trained on the old data
-    * (ADVICE r12).
+    * no data read). [[FitMemo]] keys on `dir + fingerprint` instead
+    * of the directory string alone, so regenerating the parquet at
+    * the same path within a session (re-scaled fixtures, refreshed
+    * corpora) invalidates the memo instead of silently serving a fit
+    * trained on the old data (ADVICE r12).
     */
   def tableFingerprint(
       spark: SparkSession, dir: String, name: String): String = {

@@ -177,23 +177,13 @@ object Similarity {
     * `sxy/n - (s1p/np)*(s1q/nq)` on identical doubles, so every
     * downstream iterate is bitwise equal between engines.
     */
-  /** [[pcaFit]] is a pure function of the table directory (exact
-    * moments + deterministic iteration), so the fit is memoized per
-    * dir for the life of the session — q179 and q180 share one moment
-    * scan instead of paying it per invocation, the same
-    * fit-once/probe-many discipline as the persisted ANN indexes. A
-    * racing double-compute is harmless (identical result).
+  /** [[pcaFit]] is a pure function of the table (exact moments +
+    * deterministic iteration), so it is a [[FitMemo]] — q179 and q180
+    * share one moment scan instead of paying it per invocation.
     */
-  private val pcaFitCache =
-    scala.collection.concurrent.TrieMap.empty[String, PcaFit]
-
   private[graft] def pcaFit(
       s: org.apache.spark.sql.SparkSession, dir: String): PcaFit =
-    // key carries a content fingerprint so a regenerated table at the
-    // same path re-fits instead of serving the stale memo (ADVICE r12)
-    pcaFitCache.getOrElseUpdate(
-      dir + "#" + tableFingerprint(s, dir, "embeddings"),
-      pcaFitUncached(s, dir))
+    FitMemo(s, dir, "embeddings", "pca")(pcaFitUncached(s, dir))
 
   private def pcaFitUncached(
       s: org.apache.spark.sql.SparkSession, dir: String): PcaFit = {

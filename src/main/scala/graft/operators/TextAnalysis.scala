@@ -4313,19 +4313,10 @@ object TextAnalysis {
        |    sequence(1, least($maxPieceLen, char_length(word) - i + 1)),
        |    l -> substring(word, i, l))))""".stripMargin)
 
-  /** Fit-once memo for [[unigramTrain]] (the `Ann.pqFitMemo` /
-    * `pcaFit` discipline): the trained vocab is a deterministic pure
-    * function of (corpus content, params), so contract queries and
-    * bench passes train ONCE per session and probe the memoized
-    * artifact. Keyed by the documents table's content fingerprint
-    * plus every training parameter; the training frame is derived
-    * HERE from (s, dir), never taken from the caller, so the key can
-    * never disagree with what was trained on (ADVICE r15). Entries
-    * are bounded by distinct (corpus, params) pairs per session.
+  /** [[unigramTrain]] as a [[FitMemo]]: the trained vocab is a
+    * deterministic pure function of (corpus content, params), trained
+    * on the documents table derived HERE from (s, dir).
     */
-  private val unigramFitCache = scala.collection.concurrent.TrieMap
-    .empty[String, Seq[(String, Long)]]
-
   def unigramTrainMemo(
       s: org.apache.spark.sql.SparkSession,
       dir: String,
@@ -4333,11 +4324,11 @@ object TextAnalysis {
       maxPieceLen: Int = 4,
       seedSize: Int = 200,
       emIters: Int = 3): Seq[(String, Long)] =
-    unigramFitCache.getOrElseUpdate(
-      dir + "#" + tableFingerprint(s, dir, "documents") +
-        s"#$vocabSize#$maxPieceLen#$seedSize#$emIters",
+    FitMemo(s, dir, "documents", "unigram", vocabSize, maxPieceLen,
+        seedSize, emIters) {
       unigramTrain(table(s, dir, "documents").select("text"),
-        vocabSize, maxPieceLen, seedSize, emIters))
+        vocabSize, maxPieceLen, seedSize, emIters)
+    }
 
   /** The q212/q235 fixture store: ONE persisted unigram vocab per
     * (sfDir, corpus fingerprint) — the tokenizer artifact a release
