@@ -8,10 +8,13 @@ import graft.operators.FileOps
 import graft.sources.{FileEntry, FileManifest}
 
 /** The four reference pipelines (download / upload / move / remove),
-  * re-expressed as a manifest listing + executor-parallel sinks: the
-  * regex filter and the destination names run inside the sink's own
-  * placement step (`FileOps.copyRows`/`deleteRows`), with no SQL plan
-  * in between. Lifecycle mapping: SURVEY §3.4. Copy-shaped ops return
+  * re-expressed as a manifest listing + parallel sinks. A listing held
+  * on the driver is filtered, named and checked there, and its rows run
+  * on the driver or in one sink job by their size
+  * (`FileOps.copyHeld`/`deleteHeld`); a larger listing is an RDD whose
+  * regex filter and destination names run inside the sink's own
+  * placement step (`FileOps.copyRows`/`deleteRows`). No SQL plan either
+  * way. Lifecycle mapping: SURVEY §3.4. Copy-shaped ops return
   * [[FileOps.CopyStats]] (planned vs actually-transferred vs skipped);
   * remove returns the planned row count. All throw
   * [[graft.core.BlueprintError]] for the reference's coded failures
@@ -60,9 +63,13 @@ object Blueprints {
         FileManifest.scanManaged(spark, cfg.bucket, cfg.sourceFolderName)
       try {
         val keep = FileManifest.matcher(cfg.sourceFileName)
-        val n = FileOps.withConf(spark)(FileOps.deleteRows(scanned.rdd,
-          (_, it: Iterator[FileEntry]) =>
-            it.filter(keep).map(e => (e.bucket, e.path)), _))
+        val n = scanned.held match {
+          case Some(es) =>
+            FileOps.deleteHeld(spark, es.filter(keep).map(e => (e.bucket, e.path)))
+          case None => FileOps.withConf(spark)(FileOps.deleteRows(scanned.rdd,
+            (_, it: Iterator[FileEntry]) =>
+              it.filter(keep).map(e => (e.bucket, e.path)), _))
+        }
         if (n == 0) throw BlueprintError.FileNotFound(cfg.sourceFileName)
         n
         // the delete action was the manifest's last read — release the
@@ -100,9 +107,17 @@ object Blueprints {
         // manifest and a job of its own)
         val provablyUnique =
           dstFile.isDefined && policy == EnumeratePolicy.Always
-        val st = FileOps.withConf(spark)(copyNamed(
-          FileManifest.naming(scanned.rdd, keep, dstFolder, dstFile, policy),
-          dstRoot, deleteSource, !provablyUnique, _))
+        val st = scanned.held match {
+          case Some(es) =>
+            val named = FileManifest.namingHeld(es, keep, dstFolder, dstFile, policy)
+            FileOps.copyHeld(spark,
+              named.map { case (e, dest) => (e.bucket, e.path, dest, null: String) },
+              named.map(_._1.size).sum, Some(dstRoot), deleteSource,
+              overwrite = true, !provablyUnique)
+          case None => FileOps.withConf(spark)(copyNamed(
+            FileManifest.naming(scanned.rdd, keep, dstFolder, dstFile, policy),
+            dstRoot, deleteSource, !provablyUnique, _))
+        }
         if (st.planned == 0) throw BlueprintError.FileNotFound(srcFile)
         st
         // the copy (and optional source delete) was the manifest's last

@@ -4,7 +4,9 @@ import java.io.{EOFException, FileNotFoundException, InputStream}
 import java.net.URI
 import java.nio.channels.{Channels, FileChannel}
 import java.nio.file.{Files, StandardCopyOption}
+import java.util.concurrent.ConcurrentHashMap
 import scala.reflect.ClassTag
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.{HashPartitioner, SparkContext, TaskContext}
 import org.apache.spark.broadcast.Broadcast
@@ -14,22 +16,29 @@ import org.apache.spark.util.SerializableConfiguration
 import graft.core.BlueprintError
 import graft.sources.{FileEntry, FileManifest}
 
-/** Executor-parallel file copy / move / delete over a manifest.
+/** Parallel file copy / move / delete over a manifest, on the driver or
+  * on the executors.
   *
   * The reference executes one sequential driver-side loop per pipeline
   * (download_file.py:254-262, upload_file.py:242-253, move_file.py:185-196,
-  * remove_file.py:156-158); here the manifest rows are partitioned across
-  * executors and each partition opens its own `FileSystem` handles — the
-  * single biggest designed improvement for the 100 TB goal (SURVEY §4-P1).
-  * Bytes stream through one copy kernel ([[copyFile]]) on the executor,
-  * 1 MiB at a time; nothing is ever materialized on the driver.
+  * remove_file.py:156-158). Here one row function per op ([[copyRow]],
+  * [[deleteRow]]) runs in one of two placements, chosen by size:
+  *  - a driver-held manifest (`FileManifest.ScannedManifest.held`) of at
+  *    most `FileManifest.DriverRows` rows and one compare [[Range]] of
+  *    bytes runs its rows on at most `defaultParallelism` driver workers
+  *    (`Q.parallel`) — no Spark job, whose scheduling would cost more
+  *    than the rows' own store round trips;
+  *  - anything larger is partitioned across executors, and each
+  *    partition opens its own `FileSystem` handles — the single biggest
+  *    designed improvement for the 100 TB goal (SURVEY §4-P1).
+  * Bytes stream through one copy kernel ([[copyFile]]), 1 MiB at a
+  * time; past the driver bound, no row is materialized on the driver.
   *
   * Retry/speculation safety: per-file work is idempotent — a retried
-  * partition that finds the source already gone but the destination
-  * present (a completed move from the first attempt) skips the file
-  * instead of failing. Skips are counted via an action-scoped
-  * accumulator (exactly-once for actions) so [[CopyStats]] separates
-  * planned vs actually-transferred rows.
+  * row that finds the source already gone but the destination present
+  * (a completed move from the first attempt) skips the file instead of
+  * failing. Skips are counted per sink task (or per driver row), so
+  * [[CopyStats]] separates planned vs actually-transferred rows.
   *
   * Spark work: each decision — a copy's collision check, a sync's diff
   * count, the content compare — is one plain RDD job, never a Catalyst
@@ -37,6 +46,8 @@ import graft.sources.{FileEntry, FileManifest}
   * shuffle stage. A sink is one more job over rows the decision already
   * shuffled, so Spark reuses that shuffle's output instead of reading
   * the plan again. The Hadoop conf is broadcast once per operation.
+  * For driver-held rows the decisions run on the driver, and only large
+  * byte work (the sink, the content compare) runs a job.
   *
   * Closures: the ClosureCleaner parses the bytecode of the class that
   * declares each closure it cleans, milliseconds of driver time apiece.
@@ -67,12 +78,19 @@ object FileOps {
     */
   private val Range = 32L << 20
 
-  /** Partitions of every sink: one file per task
+  /** Partitions of a sink: one file per task
     * would drown in task overhead for millions of small files; fewer
     * tasks than cores wastes executors. `4 × defaultParallelism` keeps
     * partitions balanced under skewed file sizes at any manifest size.
     */
   private def parallelism(sc: SparkContext): Int = 4 * sc.defaultParallelism
+
+  /** Whether driver-held rows run on the driver: at most
+    * `FileManifest.DriverRows` rows moving at most one [[Range]] of
+    * bytes. A delete moves none.
+    */
+  private def onDriver(rows: Int, bytes: Long): Boolean =
+    rows <= FileManifest.DriverRows && bytes <= Range
 
   /** One row of a copy: (source bucket, source path, destination path,
     * destination bucket or null).
@@ -112,15 +130,22 @@ object FileOps {
     try body(conf) finally conf.destroy()
   }
 
-  /** Per-partition `FileSystem` resolver: `FileSystem.get` goes through a
-    * synchronized cache + UGI lookup, which serializes copy threads on
-    * tiny files, so each bucket is resolved once per partition.
+  /** Driver-held rows placed on executors: `parallelize` slices them
+    * evenly over one partition per row, up to `4 × defaultParallelism`,
+    * so two large objects never share a task. Keyed like [[spread]]'s
+    * output (the key is the row's index).
     */
-  private def fsResolver(
-      conf: Broadcast[SerializableConfiguration]): String => FileSystem = {
-    val c = conf.value.value
-    val cache = scala.collection.mutable.HashMap.empty[String, FileSystem]
-    b => cache.getOrElseUpdate(b, FileSystem.get(new URI(b), c))
+  private def placeHeld[T: ClassTag](sc: SparkContext, rows: IndexedSeq[T]): RDD[(Int, T)] =
+    sc.parallelize(rows.indices.map(i => (i, rows(i))), math.min(parallelism(sc), rows.length))
+
+  /** `FileSystem` resolver of one sink task or one driver op:
+    * `FileSystem.get` goes through a synchronized cache + UGI lookup,
+    * which serializes copy threads on tiny files, so each bucket is
+    * resolved once.
+    */
+  private def fsResolver(c: Configuration): String => FileSystem = {
+    val cache = new ConcurrentHashMap[String, FileSystem]()
+    b => cache.computeIfAbsent(b, _ => FileSystem.get(new URI(b), c))
   }
 
   private def isLocal(fs: FileSystem): Boolean = fs.getScheme == "file"
@@ -223,7 +248,7 @@ object FileOps {
   }
 
   /** [[copy]] over the [[Move]] rows that `plan` makes of each partition
-    * of `rows`.
+    * of `rows`, on the executors.
     *
     * Spark work: the planned rows are placed evenly over
     * `4 × defaultParallelism` partitions ([[spread]]) — one shuffle, whose
@@ -246,10 +271,7 @@ object FileOps {
       conf: Broadcast[SerializableConfiguration]): CopyStats = {
     val sc = rows.sparkContext
     val placed = spread(rows, parallelism(sc))(plan)
-    // a null destBucket falls back to the default, then to the row's
-    // source bucket
-    def effective(srcBucket: String, destBucket: String): String =
-      Option(destBucket).getOrElse(destBucketDefault.getOrElse(srcBucket))
+    val effective = effectiveBucket(destBucketDefault) _
     if (checkCollisions) {
       // keyed on the EFFECTIVE destination bucket (the same resolution
       // the copy loop applies): rows from different source buckets
@@ -271,37 +293,96 @@ object FileOps {
       if (found.map(_._1).sum == 0) return CopyStats(0L, 0L, 0L)
       found.map(_._2).reduce(greater).foreach(d => throw BlueprintError.DestinationCollision(d))
     }
-    val done = sc.runJob(placed,
+    copySink(placed, destBucketDefault, deleteSource, overwrite, conf)
+  }
+
+  /** [[copyRows]] over driver-held rows moving `bytes` in all: the
+    * collision check is a driver-side group-by (the same greatest
+    * repeated destination), and the rows run on the driver
+    * ([[onDriver]]) or, past that bound, in one sink job of
+    * `min(4 × defaultParallelism, rows)` tasks ([[placeHeld]]).
+    */
+  private[graft] def copyHeld(
+      spark: SparkSession,
+      rows: IndexedSeq[Move],
+      bytes: Long,
+      destBucketDefault: Option[String],
+      deleteSource: Boolean,
+      overwrite: Boolean,
+      checkCollisions: Boolean): CopyStats = {
+    val effective = effectiveBucket(destBucketDefault) _
+    val moves = rows.map { case (sb, s, d, db) => (sb, s, d, effective(sb, db)) }
+    if (checkCollisions)
+      moves.groupBy(m => (m._4, m._3)).collect { case ((_, d), ms) if ms.length > 1 => d }
+        .maxOption.foreach(d => throw BlueprintError.DestinationCollision(d))
+    if (moves.isEmpty) CopyStats(0L, 0L, 0L)
+    else if (onDriver(moves.length, bytes)) {
+      val row = copyRow(fsResolver(FileManifest.hadoopConf(spark)), deleteSource, overwrite) _
+      val skipped = Q.parallel(moves, spark.sparkContext.defaultParallelism) {
+        case (sb, s, d, db) => row(sb, s, db, d)
+      }.count(identity).toLong
+      CopyStats(moves.length, moves.length - skipped, skipped)
+    } else withConf(spark)(copySink(placeHeld(spark.sparkContext, moves),
+      destBucketDefault, deleteSource, overwrite, _))
+  }
+
+  /** A null destination bucket falls back to the default, then to the
+    * row's source bucket.
+    */
+  private def effectiveBucket(default: Option[String])(
+      srcBucket: String, destBucket: String): String =
+    Option(destBucket).getOrElse(default.getOrElse(srcBucket))
+
+  /** One row of a copy, the body of both placements: copies
+    * `srcBucket/src` to `dstBucket/dest` through [[copyFile]] with one
+    * source stat, and under `deleteSource` deletes the source once the
+    * copy is seen to have landed (verify-then-delete). Returns whether
+    * the row was skipped: an existing destination under
+    * `overwrite=false`, or a move an earlier attempt completed (source
+    * gone, destination present) — an idempotent retry, not a failure.
+    */
+  private def copyRow(fsFor: String => FileSystem, deleteSource: Boolean,
+      overwrite: Boolean)(srcBucket: String, src: String, dstBucket: String,
+      dest: String): Boolean = {
+    val srcPath = new Path(s"$srcBucket/$src")
+    val dstPath = new Path(s"$dstBucket/$dest")
+    val srcFs = fsFor(srcBucket)
+    val dstFs = fsFor(dstBucket)
+    val srcStatus =
+      try Some(srcFs.getFileStatus(srcPath))
+      catch { case _: FileNotFoundException => None }
+    srcStatus match {
+      case None =>
+        if (!(deleteSource && dstFs.exists(dstPath)))
+          throw BlueprintError.FileNotFound(srcPath.toString)
+        true
+      case Some(_) if !overwrite && dstFs.exists(dstPath) => true
+      case Some(st) =>
+        copyFile(srcFs, st, dstFs, dstPath)
+        if (deleteSource && landed(dstFs, dstPath, st.getLen))
+          srcFs.delete(srcPath, false)
+        false
+    }
+  }
+
+  /** The copy sink: one job running [[copyRow]] over the placed rows;
+    * each task returns its (planned, skipped) counts.
+    */
+  private def copySink(
+      placed: RDD[(Int, Move)],
+      destBucketDefault: Option[String],
+      deleteSource: Boolean,
+      overwrite: Boolean,
+      conf: Broadcast[SerializableConfiguration]): CopyStats = {
+    val done = placed.sparkContext.runJob(placed,
       (_: TaskContext, it: Iterator[(Int, Move)]) => {
-        val fsFor = fsResolver(conf)
+        val row = copyRow(fsResolver(conf.value.value), deleteSource, overwrite) _
+        val effective = effectiveBucket(destBucketDefault) _
         var planned = 0L
         var skipped = 0L
         it.foreach { case (_, (srcBucket, src, dest, destBucket)) =>
           planned += 1
-          val srcPath = new Path(s"$srcBucket/$src")
-          val dstBucket = effective(srcBucket, destBucket)
-          val dstPath = new Path(s"$dstBucket/$dest")
-          val srcFs = fsFor(srcBucket)
-          val dstFs = fsFor(dstBucket)
-          val srcStatus =
-            try Some(srcFs.getFileStatus(srcPath))
-            catch { case _: FileNotFoundException => None }
-          srcStatus match {
-            case None =>
-              // idempotent retry: a completed move from a previous attempt
-              // leaves dest present and source gone — skip, don't fail
-              if (!(deleteSource && dstFs.exists(dstPath)))
-                throw BlueprintError.FileNotFound(srcPath.toString)
-              skipped += 1
-            case Some(_) if !overwrite && dstFs.exists(dstPath) =>
-              // overwrite=false: an existing destination wins; skip
-              skipped += 1
-            case Some(st) =>
-              copyFile(srcFs, st, dstFs, dstPath)
-              // verify-then-delete: never drop the source unless the copy landed
-              if (deleteSource && landed(dstFs, dstPath, st.getLen))
-                srcFs.delete(srcPath, false)
-          }
+          if (row(srcBucket, src, effective(srcBucket, destBucket), dest)) skipped += 1
         }
         (planned, skipped)
       }, placed.partitions.indices)
@@ -321,22 +402,38 @@ object FileOps {
       (_, it: Iterator[Row]) => it.map(r => (r.getString(0), r.getString(1))), _))
 
   /** [[delete]] over the (bucket, path) rows that `plan` makes of each
-    * partition of `rows`: one Spark job, whose tasks return the rows they
-    * deleted — no count job first.
+    * partition of `rows`, on the executors: one Spark job, whose tasks
+    * return the rows they deleted — no count job first.
     */
   private[graft] def deleteRows[A](
       rows: RDD[A],
       plan: (Int, Iterator[A]) => Iterator[(String, String)],
-      conf: Broadcast[SerializableConfiguration]): Long = {
-    val placed = spread(rows, parallelism(rows.sparkContext))(plan)
-    rows.sparkContext.runJob(placed,
+      conf: Broadcast[SerializableConfiguration]): Long =
+    deleteSink(spread(rows, parallelism(rows.sparkContext))(plan), conf)
+
+  /** [[deleteRows]] over driver-held rows: on the driver up to
+    * `FileManifest.DriverRows` rows, else one sink job of
+    * `min(4 × defaultParallelism, rows)` tasks.
+    */
+  private[graft] def deleteHeld(spark: SparkSession, rows: IndexedSeq[(String, String)]): Long =
+    if (rows.isEmpty) 0L
+    else if (onDriver(rows.length, 0L)) {
+      val row = deleteRow(fsResolver(FileManifest.hadoopConf(spark))) _
+      Q.parallel(rows, spark.sparkContext.defaultParallelism) { case (b, p) => row(b, p) }
+      rows.length.toLong
+    } else withConf(spark)(deleteSink(placeHeld(spark.sparkContext, rows), _))
+
+  /** One row of a delete, the body of both placements. */
+  private def deleteRow(fsFor: String => FileSystem)(bucket: String, path: String): Unit =
+    fsFor(bucket).delete(new Path(s"$bucket/$path"), false)
+
+  private def deleteSink(placed: RDD[(Int, (String, String))],
+      conf: Broadcast[SerializableConfiguration]): Long =
+    placed.sparkContext.runJob(placed,
       (_: TaskContext, it: Iterator[(Int, (String, String))]) => {
-        val fsFor = fsResolver(conf)
-        it.map { case (_, (bucket, path)) =>
-          fsFor(bucket).delete(new Path(s"$bucket/$path"), false); 1L
-        }.sum
+        val row = deleteRow(fsResolver(conf.value.value)) _
+        it.map { case (_, (bucket, path)) => row(bucket, path); 1L }.sum
       }, placed.partitions.indices).sum
-  }
 
   /** Outcome of one [[sync]] run: source objects seen, objects
     * actually transferred (missing or size-changed at the
@@ -398,28 +495,23 @@ object FileOps {
   }
 
   /** rsync's `-c` at object-store scale: the relative paths (`rp`) of
-    * the same-size pairs of `diff` whose bytes differ. Each non-empty
-    * pair is cut into aligned [[Range]]-byte ranges, spread evenly over
-    * `4 × defaultParallelism` tasks; a task opens both sides at its
-    * range's offset and compares them 1 MiB at a time, stopping at the
-    * first differing MiB. So each side is read at most once, by many
-    * tasks in parallel, in one Spark job, and a large object is no
-    * longer verified by one task reading serially. A side that ends
-    * early counts as changed (it is re-copied). Zero-length pairs are
-    * equal and never opened. The changed keys, one per object to
-    * re-copy, are returned to the driver.
+    * the same-size pairs whose bytes differ. `placed` holds each
+    * non-empty same-size pair cut into aligned [[Range]]-byte ranges
+    * ([[ranges]]), spread evenly over tasks; a task opens both sides at
+    * its range's offset and compares them 1 MiB at a time, stopping at
+    * the first differing MiB. So each side is read at most once, by many
+    * tasks in parallel, in one Spark job, and a large object is no longer
+    * verified by one task reading serially. A side that ends early
+    * counts as changed (it is re-copied). Zero-length pairs are equal and
+    * never opened. The changed keys, one per object to re-copy, are
+    * returned to the driver.
     */
   private def contentDigests(
-      diff: RDD[Diff], dstBucket: String,
-      conf: Broadcast[SerializableConfiguration]): Set[String] = {
-    val ranges = spread(diff, parallelism(diff.sparkContext)) { (_, it) =>
-      it.filter(_.same).flatMap { d =>
-        (0L until d.src.size by Range).iterator.map(off => (d, off))
-      }
-    }
-    diff.sparkContext.runJob(ranges,
+      placed: RDD[(Int, (Diff, Long))], dstBucket: String,
+      conf: Broadcast[SerializableConfiguration]): Set[String] =
+    placed.sparkContext.runJob(placed,
       (_: TaskContext, it: Iterator[(Int, (Diff, Long))]) => {
-        val fsFor = fsResolver(conf)
+        val fsFor = fsResolver(conf.value.value)
         val (ba, bb) = (new Array[Byte](Buf), new Array[Byte](Buf))
         it.filter { case (_, (d, off)) =>
           val (s, t) = (d.src, d.dst)
@@ -427,7 +519,26 @@ object FileOps {
             fsFor(dstBucket), new Path(s"$dstBucket/${t.path}"),
             off, math.min(Range, s.size - off), ba, bb)
         }.map(_._2._1.rp).toArray
-      }, ranges.partitions.indices).iterator.flatten.toSet
+      }, placed.partitions.indices).iterator.flatten.toSet
+
+  /** The compare ranges of a diff entry: one per [[Range]] bytes of a
+    * same-size pair, none otherwise.
+    */
+  private def ranges(d: Diff): Iterator[(Diff, Long)] =
+    if (!d.same) Iterator.empty
+    else (0L until d.src.size by Range).iterator.map(off => (d, off))
+
+  /** Per diff entry: scanned (a source object), size-stale, extraneous,
+    * same-size.
+    */
+  private def tally(it: Iterator[Diff]): Array[Long] = {
+    def flag(b: Boolean) = if (b) 1L else 0L
+    val n = new Array[Long](4)
+    it.foreach { d =>
+      n(0) += flag(!d.extra); n(1) += flag(d.stale)
+      n(2) += flag(d.extra); n(3) += flag(d.same)
+    }
+    n
   }
 
   /** One-way prefix sync — the incremental mirror job a pipeline runs
@@ -439,25 +550,29 @@ object FileOps {
     * unconditionally — this is the operation users script around them.
     *
     * Built ON the existing layers: both sides list via
-    * [[FileManifest.scanManaged]] (executor BFS), the diff is ONE
-    * cogroup of the two listings on the prefix-relative path (the
-    * manifests' natural key), and the transfer reuses [[copyRows]]'s
-    * executor-parallel, retry-idempotent path. Total cost: two
-    * listings + data movement proportional to the DIFF, never to the
+    * [[FileManifest.scanManaged]], the diff joins the two listings on
+    * the prefix-relative path (the manifests' natural key), and the
+    * transfer reuses [[copyRows]]'s retry-idempotent rows. Total cost:
+    * two listings + data movement proportional to the DIFF, never to the
     * tree. Size inequality is the change test (object stores don't
     * preserve mtime across copies).
     *
-    * Spark work: the listings' jobs (none for a flat folder), then one
-    * job that counts the scanned, size-stale, extraneous and same-size
-    * objects. The compare, copy and delete each run one more job over
-    * the diff, reusing the cogroup's shuffle output, and only when
-    * they have work: a warm sync moves no bytes and runs no sink.
+    * Spark work: when both listings are held on the driver, the diff
+    * and its counts are a driver-side join, and the copy and delete run
+    * on the driver or in one sink job by their size ([[copyHeld]],
+    * [[deleteHeld]]); a small sync runs no job at all. Otherwise the
+    * listings' jobs, then ONE cogroup and one job that counts the
+    * scanned, size-stale, extraneous and same-size objects; the copy and
+    * delete each run one more job over the diff, reusing the cogroup's
+    * shuffle output, and only when they have work: a warm sync moves no
+    * bytes and runs no sink.
     *
     * @param verifyContent rsync's `-c`: same-size pairs are compared
     *   byte for byte executor-side ([[contentDigests]]) and re-copied on
     *   a difference — catches the same-size content change the size
     *   diff is blind to. Cost: one read of each side of the matched set
-    *   only, range-parallel, stopping at the first difference.
+    *   only, range-parallel, stopping at the first difference, in one job
+    *   in either placement.
     */
   def sync(
       spark: SparkSession,
@@ -475,55 +590,76 @@ object FileOps {
       catch {
         case _: BlueprintError.InvalidBucket => FileManifest.emptyManifest(spark)
       }
-    try withConf(spark) { conf =>
+    try {
       val sp = graft.core.PathAlg.cleanFolderName(srcPrefix)
       val dp = graft.core.PathAlg.cleanFolderName(dstPrefix)
       // every listed path starts with `pfx/`; a path is unique per
       // listing, so each side has at most one entry per key
-      def keyed(m: FileManifest.ScannedManifest, pfx: String) =
-        m.rdd.mapPartitions(_.map(e =>
-          (if (pfx.isEmpty) e.path else e.path.stripPrefix(pfx + "/"), e)))
-      val diff = new CoGroupedRDD[String](Seq(keyed(srcM, sp), keyed(dstM, dp)),
-        new HashPartitioner(sc.defaultParallelism)).mapPartitions(_.map {
-          case (rp, Array(s, d)) =>
-            def one(side: Iterable[_]) =
-              side.headOption.getOrElse(null).asInstanceOf[FileEntry]
-            Diff(rp, one(s), one(d))
-        })
-      def flag(b: Boolean) = if (b) 1L else 0L
-      val Array(scanned, sizeStale, extraneous, sameSize) = sc.runJob(diff,
-        (_: TaskContext, it: Iterator[Diff]) => {
-          val n = new Array[Long](4)
-          it.foreach { d =>
-            n(0) += flag(!d.extra); n(1) += flag(d.stale)
-            n(2) += flag(d.extra); n(3) += flag(d.same)
-          }
-          n
-        }, diff.partitions.indices).transpose.map(_.sum)
-      // same-size pairs are the ONLY candidates the size diff can miss
-      val changed =
-        if (!verifyContent || sameSize == 0) Set.empty[String]
-        else contentDigests(diff, dstBucket, conf)
+      def key(pfx: String)(e: FileEntry): String =
+        if (pfx.isEmpty) e.path else e.path.stripPrefix(pfx + "/")
+      // the rows to copy: size-stale, or same-size with changed bytes
+      def copies(changed: Set[String])(d: Diff): Boolean =
+        d.stale || (d.same && changed(d.rp))
+      def move(d: Diff): Move =
+        (d.src.bucket, d.src.path, if (dp.isEmpty) d.rp else s"$dp/${d.rp}", null)
       // dest uniqueness holds by construction: rp is unique per side
-      val stats =
-        if (sizeStale + changed.size == 0) CopyStats(0L, 0L, 0L)
-        else copyRows(diff, (_, it: Iterator[Diff]) =>
-          it.filter(d => d.stale || (d.same && changed(d.rp)))
-            .map(d => (d.src.bucket, d.src.path,
-              if (dp.isEmpty) d.rp else s"$dp/${d.rp}", null: String)),
-          Some(dstBucket), deleteSource = false, overwrite = true,
-          checkCollisions = false, conf)
-      val deleted =
-        if (!deleteExtraneous || extraneous == 0) 0L
-        else deleteRows(diff, (_, it: Iterator[Diff]) =>
-          it.filter(_.extra).map(d => (dstBucket, d.dst.path)), conf)
+      val (scanned, copied, deleted) = (srcM.held, dstM.held) match {
+        case (Some(srcs), Some(dsts)) =>
+          val srcBy = srcs.map(e => key(sp)(e) -> e).toMap
+          val dstBy = dsts.map(e => key(dp)(e) -> e).toMap
+          val diff = (srcBy.keySet ++ dstBy.keySet).toIndexedSeq.map(rp =>
+            Diff(rp, srcBy.getOrElse(rp, null), dstBy.getOrElse(rp, null)))
+          val Array(scanned, _, extraneous, sameSize) = tally(diff.iterator)
+          val compared = if (verifyContent && sameSize > 0) diff.flatMap(ranges) else Vector.empty
+          val changed =
+            if (compared.isEmpty) Set.empty[String]
+            else withConf(spark)(contentDigests(placeHeld(sc, compared), dstBucket, _))
+          val todo = diff.filter(copies(changed))
+          val stats = copyHeld(spark, todo.map(move), todo.map(_.src.size).sum,
+            Some(dstBucket), deleteSource = false, overwrite = true,
+            checkCollisions = false)
+          val deleted =
+            if (!deleteExtraneous || extraneous == 0) 0L
+            else deleteHeld(spark, diff.filter(_.extra).map(d => (dstBucket, d.dst.path)))
+          (scanned, stats, deleted)
+        case _ => withConf(spark) { conf =>
+          def keyed(m: FileManifest.ScannedManifest, pfx: String) =
+            m.rdd.mapPartitions(_.map(e => (key(pfx)(e), e)))
+          val diff = new CoGroupedRDD[String](Seq(keyed(srcM, sp), keyed(dstM, dp)),
+            new HashPartitioner(sc.defaultParallelism)).mapPartitions(_.map {
+              case (rp, Array(s, d)) =>
+                def one(side: Iterable[_]) =
+                  side.headOption.getOrElse(null).asInstanceOf[FileEntry]
+                Diff(rp, one(s), one(d))
+            })
+          val Array(scanned, sizeStale, extraneous, sameSize) = sc.runJob(diff,
+            (_: TaskContext, it: Iterator[Diff]) => tally(it),
+            diff.partitions.indices).transpose.map(_.sum)
+          // same-size pairs are the ONLY candidates the size diff can miss
+          val changed =
+            if (!verifyContent || sameSize == 0) Set.empty[String]
+            else contentDigests(spread(diff, parallelism(sc))((_, it) =>
+              it.flatMap(ranges)), dstBucket, conf)
+          val stats =
+            if (sizeStale + changed.size == 0) CopyStats(0L, 0L, 0L)
+            else copyRows(diff, (_, it: Iterator[Diff]) =>
+              it.filter(copies(changed)).map(move),
+              Some(dstBucket), deleteSource = false, overwrite = true,
+              checkCollisions = false, conf)
+          val deleted =
+            if (!deleteExtraneous || extraneous == 0) 0L
+            else deleteRows(diff, (_, it: Iterator[Diff]) =>
+              it.filter(_.extra).map(d => (dstBucket, d.dst.path)), conf)
+          (scanned, stats, deleted)
+        }
+      }
       // ADVICE r12: upToDate counts exactly the objects the
       // manifest diff deemed fresh; copy-level idempotent-retry
       // skips (planned objects whose bytes turned out to already be
       // at the destination) are surfaced as their own field instead
       // of being folded in as "fresh"
-      SyncStats(scanned, stats.transferred,
-        scanned - stats.planned, stats.skipped, deleted)
+      SyncStats(scanned, copied.transferred,
+        scanned - copied.planned, copied.skipped, deleted)
     } finally { srcM.release(); dstM.release() }
   }
 

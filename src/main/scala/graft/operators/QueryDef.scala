@@ -84,6 +84,48 @@ object Q {
       s.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
       asyncPool)(body)
 
+  /** `f` over `items` on at most `width` workers of the `graft-async`
+    * pool, for plain driver work that starts no Spark job (a listing
+    * level, the rows of a small file op): no SQL execution, no captured
+    * local properties. The caller waits and gets the results in item
+    * order. A failing item stops the workers from taking further items,
+    * and its error is rethrown. An interrupt of the caller does the
+    * same and is rethrown as the `InterruptedException`, but only once
+    * every worker has finished its current item, so that no item is
+    * still running when this returns. Workers are not interrupted, as
+    * Spark's tasks are not by default (`interruptOnCancel = false`,
+    * because HDFS may take an interrupted read for a dead node): a stop
+    * waits for at most one item per worker.
+    */
+  def parallel[A, B](items: IndexedSeq[A], width: Int)(f: A => B): IndexedSeq[B] = {
+    import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicReference}
+    val out = new Array[Any](items.length)
+    val next = new AtomicInteger
+    val stop = new AtomicBoolean
+    val failure = new AtomicReference[Throwable]
+    val workers = Seq.fill(math.min(width, items.length))(
+      asyncPool.submit(new Runnable {
+        def run(): Unit = {
+          var i = next.getAndIncrement()
+          while (!stop.get && i < items.length) {
+            try out(i) = f(items(i))
+            catch { case t: Throwable => failure.compareAndSet(null, t); stop.set(true) }
+            i = next.getAndIncrement()
+          }
+        }
+      }))
+    var interrupted: InterruptedException = null
+    workers.foreach { w =>
+      var waiting = true
+      while (waiting)
+        try { w.get(); waiting = false }
+        catch { case e: InterruptedException => stop.set(true); interrupted = e }
+    }
+    if (interrupted != null) throw interrupted
+    Option(failure.get).foreach(throw _)
+    out.toIndexedSeq.asInstanceOf[IndexedSeq[B]]
+  }
+
   private lazy val asyncPool = {
     import java.util.concurrent._
     val n = new atomic.AtomicInteger

@@ -10,6 +10,7 @@ import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.util.SerializableConfiguration
 import graft.core.{BlueprintError, EnumeratePolicy, PathAlg, RegexCompat}
+import graft.operators.Q
 
 /** One object in a bucket-like store. `path` is the bucket-relative object
   * name (the reference's `blob.name`), `name` its basename.
@@ -32,22 +33,37 @@ final case class FileEntry(
   * callers. Prefix pushdown (the reference's `list_blobs(prefix=…)`,
   * download_file.py:248-249) maps to scoping the listing root.
   *
-  * Scale (100 TB / 10^8 objects): the driver lists only the FIRST level
-  * under the prefix; deeper levels are listed in BFS waves on the
-  * executors — each wave re-parallelizes the dirs the previous wave
-  * discovered, so a skewed tree (one top-level dir hiding the whole
-  * corpus) still fans out to the cluster instead of serializing on one
-  * task. Once a level is wider than 4× the parallelism, remaining
-  * subtrees are walked recursively per dir (the fan-out is already
-  * there). The driver never materializes the deep listing; its memory
-  * is bounded by the widest level's dir NAMES, not the object count —
-  * the same contract as Spark's InMemoryFileIndex parallel discovery.
+  * Scale (100 TB / 10^8 objects): the driver lists level by level while
+  * the listing stays small — the first level, then each next level's
+  * directories concurrently on at most `defaultParallelism` driver
+  * workers — and holds the entries ([[ScannedManifest.held]]), so a file
+  * op over them needs no Spark job. Once the pending directories or the
+  * listed entries pass [[DriverRows]], the remaining directories are
+  * listed in BFS waves on the executors — each wave re-parallelizes the
+  * dirs the previous wave discovered, so a skewed tree (one top-level
+  * dir hiding the whole corpus) still fans out to the cluster instead of
+  * serializing on one task. Once a level is wider than 4× the
+  * parallelism, remaining subtrees are walked recursively per dir (the
+  * fan-out is already there). Past the threshold the driver never
+  * materializes the deep listing; its memory is bounded by the held
+  * entries and the widest level's dir NAMES, not the object count — the
+  * same contract as Spark's InMemoryFileIndex, which lists on the driver
+  * below `parallelPartitionDiscovery.threshold` and with a job above it.
   */
 object FileManifest {
 
-  /** A scanned manifest: the listing as an RDD (the driver-listed first
-    * level plus the executor-listed BFS waves) and a release hook for the
-    * executor-persisted wave RDDs behind it. Without the hook,
+  /** Rows a listing or a file op may have and still run on the driver,
+    * one object-store list page: a listing level is listed on the driver
+    * while neither its directories nor the entries listed so far pass
+    * it, and a driver-held op of at most this many rows runs its row loop
+    * on the driver (`FileOps`), with no Spark job either way.
+    */
+  private[graft] val DriverRows = 1000
+
+  /** A scanned manifest: the entries, held on the driver when the whole
+    * listing stayed small ([[held]]), else an RDD of the driver-listed
+    * levels plus the executor-listed BFS waves, and a release hook for
+    * the executor-persisted wave RDDs behind it. Without the hook,
     * reclamation waits on GC + ContextCleaner — a long-lived manifest
     * reference pins the whole file-entry cache, substantial at 10^8
     * objects (ADVICE r8). The Blueprints pipelines call [[release]] after
@@ -55,8 +71,33 @@ object FileManifest {
     * the listing lineage.
     */
   final class ScannedManifest private[sources] (
-      spark: SparkSession, val rdd: RDD[FileEntry], waves: Seq[RDD[_]]) {
-    def release(): Unit = waves.foreach(_.unpersist(blocking = false))
+      spark: SparkSession,
+      listing: Either[IndexedSeq[FileEntry], RDD[FileEntry]],
+      waves: Seq[RDD[_]]) {
+
+    /** The entries, when the listing is held on the driver. */
+    def held: Option[IndexedSeq[FileEntry]] = listing.left.toOption
+
+    private var heldView: RDD[FileEntry] = _
+
+    /** The entries as an RDD. A held listing's view is built on first
+      * use and cached like a wave, so [[release]] frees whatever reading
+      * it cached, whichever way the listing was made.
+      */
+    def rdd: RDD[FileEntry] = listing match {
+      case Right(r) => r
+      case Left(es) => synchronized {
+        if (heldView == null)
+          heldView = spark.sparkContext.parallelize(es, slices(spark, es.length))
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        heldView
+      }
+    }
+
+    def release(): Unit = {
+      waves.foreach(_.unpersist(blocking = false))
+      synchronized(Option(heldView).foreach(_.unpersist(blocking = false)))
+    }
 
     /** The same entries as a Dataset, for callers that query the listing
       * with SQL. Built on first use, so the blueprint path never plans it.
@@ -65,9 +106,13 @@ object FileManifest {
       spark.createDataset(rdd)(Encoders.product[FileEntry])
   }
 
+  /** Partitions of an RDD over `n` driver-listed items. */
+  private def slices(spark: SparkSession, n: Int): Int =
+    math.max(1, math.min(n, spark.sparkContext.defaultParallelism))
+
   /** The manifest of a prefix that does not exist: no entries. */
   private[graft] def emptyManifest(spark: SparkSession): ScannedManifest =
-    new ScannedManifest(spark, spark.sparkContext.emptyRDD[FileEntry], Nil)
+    new ScannedManifest(spark, Left(IndexedSeq.empty), Nil)
 
   /** List all files under `bucketUri/prefix` into a manifest Dataset.
     * `bucketUri` e.g. `file:///tmp/bucket-a` or `gs://bucket`.
@@ -82,7 +127,13 @@ object FileManifest {
     scanManaged(spark, bucketUri, prefix, recursive).entries
 
   /** [[scan]] returning a [[ScannedManifest]] whose `release()`
-    * unpersists the per-wave listing caches deterministically.
+    * unpersists the per-wave listing caches deterministically. The
+    * driver lists while the listing stays within [[DriverRows]] (the
+    * scale paragraph above). A listing that ends there is held on the
+    * driver ([[ScannedManifest.held]]) and has run no Spark job; else its
+    * deeper levels run as executor waves and the driver-listed entries
+    * are the shallow part of its RDD. Each directory is listed exactly
+    * once either way.
     */
   def scanManaged(
       spark: SparkSession,
@@ -98,12 +149,31 @@ object FileManifest {
     if (!fs.exists(rootPath))
       throw BlueprintError.InvalidBucket(bucketUri)
     val rootStr = fs.makeQualified(rootPath).toString.stripSuffix("/")
-    // Shallow first level on the driver (a missing prefix lists empty):
-    // files become entries directly, directories fan out to the executors.
-    val (files, dirs) = listLevel(listRoot, root, rootStr, hadoopConf(spark))
+    // Driver levels (a missing prefix lists empty): files become held
+    // entries, directories the next level, listed concurrently on `par`
+    // driver workers. A worker takes no further directory once the
+    // entries listed so far pass DriverRows; the directories left, and
+    // those the listed ones hold, fan out to the executors.
     val par = sc.defaultParallelism
-    val shallow = sc.parallelize(files, math.max(1, math.min(files.length, par)))
-    if (dirs.isEmpty || !recursive) new ScannedManifest(spark, shallow, Nil)
+    val hc = hadoopConf(spark)
+    val (files, dirs) = listLevel(listRoot, root, rootStr, hc)
+    val held = scala.collection.mutable.ArrayBuffer.from(files)
+    var pending = if (recursive) dirs else Nil
+    while (pending.nonEmpty && pending.length <= DriverRows &&
+        held.length <= DriverRows) {
+      val listed = new java.util.concurrent.atomic.AtomicLong(held.length)
+      val levels = Q.parallel(pending.toIndexedSeq, par) { d =>
+        if (listed.get > DriverRows) None
+        else {
+          val level = listLevel(d, root, rootStr, hc)
+          listed.addAndGet(level._1.length)
+          Some(level)
+        }
+      }
+      pending = pending.zip(levels).flatMap { case (d, l) => l.fold(Seq(d))(_._2) }
+      levels.foreach(_.foreach(held ++= _._1))
+    }
+    if (pending.isEmpty) new ScannedManifest(spark, Left(held.toIndexedSeq), Nil)
     else {
       // Iterative BFS until the fan-out is wide enough, then recursive
       // subtree walks. A whole-subtree task per FIRST-LEVEL dir would
@@ -132,17 +202,14 @@ object FileManifest {
       // FOLLOW_LINKS): past it the remainder falls through to the
       // recursive walk, whose walkFileTree detects cycles —
       // correctness never depends on the cap.
-      val conf = new SerializableConfiguration(hadoopConf(spark))
+      val conf = new SerializableConfiguration(hc)
       val MaxWaves = 64
       val waves = scala.collection.mutable.ArrayBuffer.empty[RDD[FileEntry]]
       val persisted = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
-      var pending = dirs
       var wave = 0
       while (pending.nonEmpty && pending.length < 4 * par &&
           wave < MaxWaves) {
-        val level = pending
-        val slices = math.max(1, math.min(level.length, par))
-        val levelRdd = sc.parallelize(level, slices)
+        val levelRdd = sc.parallelize(pending, slices(spark, pending.length))
           .map(d => listLevel(d, root, rootStr, conf.value))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         persisted += levelRdd
@@ -157,17 +224,17 @@ object FileManifest {
         wave += 1
       }
       if (pending.nonEmpty) {
-        val slices = math.max(1, math.min(pending.length, par))
         // persisted lazily (first action materializes): subsequent
         // actions reuse the walk instead of re-listing the subtrees,
         // keeping the whole manifest one consistent snapshot
-        val deepRdd = sc.parallelize(pending, slices)
+        val deepRdd = sc.parallelize(pending, slices(spark, pending.length))
           .flatMap(d => listDeep(d, root, rootStr, conf.value))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         persisted += deepRdd
         waves += deepRdd
       }
-      new ScannedManifest(spark, sc.union(shallow +: waves.toSeq),
+      val shallow = sc.parallelize(held.toSeq, slices(spark, held.length))
+      new ScannedManifest(spark, Right(sc.union(shallow +: waves.toSeq)),
         persisted.toSeq)
     }
   }
@@ -372,21 +439,17 @@ object FileManifest {
       destinationFolderName: String,
       destinationFileName: Option[String],
       policy: EnumeratePolicy): Naming[_] = {
-    val folder = PathAlg.cleanFolderName(destinationFolderName)
-    def under(name: String): String =
-      if (folder.isEmpty) name else s"$folder/$name"
+    val dest = destName(PathAlg.cleanFolderName(destinationFolderName),
+      destinationFileName) _
     destinationFileName match {
       case None =>
         Naming[FileEntry](manifest, (_, it) =>
-          it.filter(keep).map(e => (e, under(PathAlg.baseName(e.path)))))
-      case Some(dest) =>
-        // path, NUL (below every other byte), bucket: UTF-8 sort keys
-        val keyed = manifest.mapPartitions(_.filter(keep).map(e =>
-          (s"${e.path}\u0000${e.bucket}".getBytes(UTF_8), e)))
-        val byteOrder: Ordering[Array[Byte]] = java.util.Arrays.compareUnsigned(_, _)
+          it.filter(keep).map(e => (e, dest(e, false, 0L))))
+      case Some(_) =>
+        val keyed = manifest.mapPartitions(_.filter(keep).map(e => (sortKey(e), e)))
         val sorted = new ShuffledRDD[Array[Byte], FileEntry, FileEntry](keyed,
-          new RangePartitioner(keyed.getNumPartitions, keyed)(byteOrder, implicitly))
-          .setKeyOrdering(byteOrder)
+          new RangePartitioner(keyed.getNumPartitions, keyed)(ByteOrder, implicitly))
+          .setKeyOrdering(ByteOrder)
         // offsets(p): the rows before sorted partition p
         val offsets =
           if (policy == EnumeratePolicy.Always && sorted.getNumPartitions == 1)
@@ -396,13 +459,48 @@ object FileManifest {
             sorted.partitions.indices).scanLeft(0L)(_ + _)
         val enumerate = policy == EnumeratePolicy.Always || offsets.last > 1
         Naming[(Array[Byte], FileEntry)](sorted, (p, it) =>
-          it.zipWithIndex.map { case ((_, e), i) =>
-            (e, under(
-              if (enumerate) PathAlg.enumerateFileName(dest, offsets(p) + i + 1)
-              else dest))
-          })
+          it.zipWithIndex.map { case ((_, e), i) => (e, dest(e, enumerate, offsets(p) + i + 1)) })
     }
   }
+
+  /** [[naming]] of driver-held entries, on the driver: the same names
+    * under the same rules, the enumeration sorted in the same UTF-8 byte
+    * order, with no job.
+    */
+  def namingHeld(
+      entries: IndexedSeq[FileEntry],
+      keep: FileEntry => Boolean,
+      destinationFolderName: String,
+      destinationFileName: Option[String],
+      policy: EnumeratePolicy): IndexedSeq[(FileEntry, String)] = {
+    val dest = destName(PathAlg.cleanFolderName(destinationFolderName),
+      destinationFileName) _
+    val kept = entries.filter(keep)
+    if (destinationFileName.isEmpty) kept.map(e => (e, dest(e, false, 0L)))
+    else {
+      val sorted = kept.map(e => (sortKey(e), e)).sortBy(_._1)(ByteOrder).map(_._2)
+      val enumerate = policy == EnumeratePolicy.Always || sorted.length > 1
+      sorted.zipWithIndex.map { case (e, i) => (e, dest(e, enumerate, i + 1L)) }
+    }
+  }
+
+  /** The destination of `e` under the cleaned `folder`: the explicit
+    * name, numbered `n` when `enumerate`, or else the source's basename.
+    */
+  private def destName(folder: String, fileName: Option[String])(
+      e: FileEntry, enumerate: Boolean, n: Long): String = {
+    val name = fileName.fold(PathAlg.baseName(e.path))(d =>
+      if (enumerate) PathAlg.enumerateFileName(d, n) else d)
+    if (folder.isEmpty) name else s"$folder/$name"
+  }
+
+  /** Enumeration's sort key: path, NUL (below every other byte), bucket,
+    * compared as unsigned UTF-8 bytes ([[ByteOrder]]).
+    */
+  private def sortKey(e: FileEntry): Array[Byte] =
+    s"${e.path}\u0000${e.bucket}".getBytes(UTF_8)
+
+  private val ByteOrder: Ordering[Array[Byte]] = java.util.Arrays.compareUnsigned(_, _)
 
   /** [[naming]] as a DataFrame of the manifest columns plus `dest`. */
   def withDestination(

@@ -23,6 +23,8 @@ import org.apache.spark.TaskContext
   *    `mkdirs`, `open`, `create`, `delete`) by kind, so a spec can bound
   *    the RPCs a moved object costs, and records which task partition
   *    created each file, so a spec can see how a sink placed its rows.
+  *    [[CountingFileSystem.latencyMs]] makes each counted call sleep
+  *    first, a store far enough away that a spec can stop an op midway.
   *  - [[MockSchemeFileSystem]] (`mock://`): a second non-`file` scheme so
   *    BlueprintsSpec can drive a CROSS-SCHEME move (the reference's
   *    two-bucket semantics, move_file.py:18-19) through the Hadoop
@@ -94,12 +96,16 @@ object CountingFileSystem {
     * (-1 on the driver).
     */
   val createdIn = new ConcurrentHashMap[String, Int]()
+  /** Milliseconds each counted call sleeps before it runs (0: none). */
+  @volatile var latencyMs = 0L
   private val depth = ThreadLocal.withInitial[Array[Int]](() => Array(0))
 
   def rpc[T](kind: String)(body: => T): T = {
     val d = depth.get()
-    if (d(0) == 0)
+    if (d(0) == 0) {
       rpcCalls.computeIfAbsent(kind, _ => new AtomicInteger).incrementAndGet()
+      if (latencyMs > 0) Thread.sleep(latencyMs)
+    }
     d(0) += 1
     try body finally d(0) -= 1
   }
