@@ -34,29 +34,33 @@ final case class FileEntry(
   * download_file.py:248-249) maps to scoping the listing root.
   *
   * Scale (100 TB / 10^8 objects): the driver lists level by level while
-  * the listing stays small — the first level, then each next level's
+  * the listing stays small — the root, then each next level's
   * directories concurrently on at most `defaultParallelism` driver
   * workers — and holds the entries ([[ScannedManifest.held]]), so a file
-  * op over them needs no Spark job. Once the pending directories or the
-  * listed entries pass [[DriverRows]], the remaining directories are
-  * listed in BFS waves on the executors — each wave re-parallelizes the
-  * dirs the previous wave discovered, so a skewed tree (one top-level
-  * dir hiding the whole corpus) still fans out to the cluster instead of
-  * serializing on one task. Once a level is wider than 4× the
-  * parallelism, remaining subtrees are walked recursively per dir (the
-  * fan-out is already there). Past the threshold the driver never
-  * materializes the deep listing; its memory is bounded by the held
-  * entries and the widest level's dir NAMES, not the object count — the
-  * same contract as Spark's InMemoryFileIndex, which lists on the driver
-  * below `parallelPartitionDiscovery.threshold` and with a job above it.
+  * op over them needs no Spark job. It admits at most [[DriverRows]]
+  * files in all: a directory whose listing would pass that is dropped
+  * and listed again on the executors, and once the bound is reached or a
+  * level has more than [[DriverRows]] directories, the remaining
+  * directories are listed in BFS waves on the executors — each wave
+  * re-parallelizes the dirs the previous wave discovered, so a skewed
+  * tree (one top-level dir hiding the whole corpus) still fans out to
+  * the cluster instead of serializing on one task. Once a level is wider
+  * than 4× the parallelism, remaining subtrees are walked recursively
+  * per dir (the fan-out is already there). The driver never holds more
+  * than [[DriverRows]] file entries (plus one list page per driver
+  * worker as it streams in) and the widest level's dir NAMES, whatever
+  * the object count — the same contract as Spark's InMemoryFileIndex,
+  * which lists on the driver below `parallelPartitionDiscovery.threshold`
+  * and with a job above it.
   */
 object FileManifest {
 
   /** Rows a listing or a file op may have and still run on the driver,
-    * one object-store list page: a listing level is listed on the driver
-    * while neither its directories nor the entries listed so far pass
-    * it, and a driver-held op of at most this many rows runs its row loop
-    * on the driver (`FileOps`), with no Spark job either way.
+    * one object-store list page: the driver lists at most this many
+    * files of a scan, and a driver-held op of at most this many rows
+    * runs its row loop on the driver (`FileOps`), with no Spark job
+    * either way. Chosen by a measurement of the driver side only: that
+    * the executors win above it is assumed, not measured.
     */
   private[graft] val DriverRows = 1000
 
@@ -78,25 +82,23 @@ object FileManifest {
     /** The entries, when the listing is held on the driver. */
     def held: Option[IndexedSeq[FileEntry]] = listing.left.toOption
 
-    private var heldView: RDD[FileEntry] = _
+    @volatile private var viewed = false
 
     /** The entries as an RDD. A held listing's view is built on first
       * use and cached like a wave, so [[release]] frees whatever reading
       * it cached, whichever way the listing was made.
       */
-    def rdd: RDD[FileEntry] = listing match {
+    lazy val rdd: RDD[FileEntry] = listing match {
       case Right(r) => r
-      case Left(es) => synchronized {
-        if (heldView == null)
-          heldView = spark.sparkContext.parallelize(es, slices(spark, es.length))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        heldView
-      }
+      case Left(es) =>
+        viewed = true
+        spark.sparkContext.parallelize(es, slices(spark, es.length))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
     def release(): Unit = {
       waves.foreach(_.unpersist(blocking = false))
-      synchronized(Option(heldView).foreach(_.unpersist(blocking = false)))
+      if (viewed) rdd.unpersist(blocking = false)
     }
 
     /** The same entries as a Dataset, for callers that query the listing
@@ -133,7 +135,8 @@ object FileManifest {
     * driver ([[ScannedManifest.held]]) and has run no Spark job; else its
     * deeper levels run as executor waves and the driver-listed entries
     * are the shallow part of its RDD. Each directory is listed exactly
-    * once either way.
+    * once either way, except those the driver dropped at its bound (at
+    * most one per driver worker), which a wave lists again in full.
     */
   def scanManaged(
       spark: SparkSession,
@@ -150,28 +153,28 @@ object FileManifest {
       throw BlueprintError.InvalidBucket(bucketUri)
     val rootStr = fs.makeQualified(rootPath).toString.stripSuffix("/")
     // Driver levels (a missing prefix lists empty): files become held
-    // entries, directories the next level, listed concurrently on `par`
-    // driver workers. A worker takes no further directory once the
-    // entries listed so far pass DriverRows; the directories left, and
-    // those the listed ones hold, fan out to the executors.
+    // entries, directories the next level, each level's directories
+    // listed concurrently on `par` driver workers. The driver admits at
+    // most DriverRows files in all: a directory whose listing would pass
+    // that is dropped, its partial listing with it, and goes to the
+    // executors with the directories not yet listed.
     val par = sc.defaultParallelism
     val hc = hadoopConf(spark)
-    val (files, dirs) = listLevel(listRoot, root, rootStr, hc)
-    val held = scala.collection.mutable.ArrayBuffer.from(files)
-    var pending = if (recursive) dirs else Nil
+    val listed = new java.util.concurrent.atomic.AtomicLong
+    val admit = () => listed.incrementAndGet() <= DriverRows
+    val held = scala.collection.mutable.ArrayBuffer.empty[FileEntry]
+    var pending = Seq(listRoot)
     while (pending.nonEmpty && pending.length <= DriverRows &&
-        held.length <= DriverRows) {
-      val listed = new java.util.concurrent.atomic.AtomicLong(held.length)
+        listed.get < DriverRows) {
       val levels = Q.parallel(pending.toIndexedSeq, par) { d =>
-        if (listed.get > DriverRows) None
-        else {
-          val level = listLevel(d, root, rootStr, hc)
-          listed.addAndGet(level._1.length)
-          Some(level)
-        }
+        if (listed.get >= DriverRows) None
+        else listLevel(d, root, rootStr, hc, admit)
       }
-      pending = pending.zip(levels).flatMap { case (d, l) => l.fold(Seq(d))(_._2) }
       levels.foreach(_.foreach(held ++= _._1))
+      pending = pending.zip(levels).flatMap {
+        case (d, None) => Seq(d)
+        case (_, Some((_, dirs))) => if (recursive) dirs else Nil
+      }
     }
     if (pending.isEmpty) new ScannedManifest(spark, Left(held.toIndexedSeq), Nil)
     else {
@@ -189,7 +192,8 @@ object FileManifest {
       // this level's file entries into executor cache — every directory
       // is listed exactly once per scan (the lazy re-list of round 6/7
       // doubled the metadata-RPC bill, the dominant cost of a
-      // 10^8-object scan). The manifest is therefore a SNAPSHOT of the
+      // 10^8-object scan), apart from the few the driver dropped at its
+      // bound. The manifest is therefore a SNAPSHOT of the
       // tree at scan time — the same contract as the reference's
       // list-then-loop pipelines (download_file.py:248-262) and Spark's
       // own InMemoryFileIndex, whose listing caches until refreshed.
@@ -201,16 +205,17 @@ object FileManifest {
       // bounds pathological depth (e.g. a symlink cycle under
       // FOLLOW_LINKS): past it the remainder falls through to the
       // recursive walk, whose walkFileTree detects cycles —
-      // correctness never depends on the cap.
+      // correctness never depends on the cap. A non-recursive scan
+      // gets here only with its root dropped: one wave lists it.
       val conf = new SerializableConfiguration(hc)
-      val MaxWaves = 64
+      val MaxWaves = if (recursive) 64 else 1
       val waves = scala.collection.mutable.ArrayBuffer.empty[RDD[FileEntry]]
       val persisted = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
       var wave = 0
       while (pending.nonEmpty && pending.length < 4 * par &&
           wave < MaxWaves) {
         val levelRdd = sc.parallelize(pending, slices(spark, pending.length))
-          .map(d => listLevel(d, root, rootStr, conf.value))
+          .flatMap(d => listLevel(d, root, rootStr, conf.value, () => true))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         persisted += levelRdd
         // runJob, not collect(): collect wraps the step in two closures of
@@ -223,7 +228,7 @@ object FileManifest {
         waves += levelRdd.flatMap(_._1)
         wave += 1
       }
-      if (pending.nonEmpty) {
+      if (pending.nonEmpty && recursive) {
         // persisted lazily (first action materializes): subsequent
         // actions reuse the walk instead of re-listing the subtrees,
         // keeping the whole manifest one consistent snapshot
@@ -246,43 +251,58 @@ object FileManifest {
   private def isChecksumSidecar(name: String): Boolean =
     name.startsWith(".") && name.endsWith(".crc")
 
-  /** ONE-level listing of a directory: the driver's first level and the
-    * BFS-wave unit. Returns (file entries, subdirectory uris). `file:`
-    * goes through java.nio: Hadoop's local status objects fork a shell
-    * per entry for permissions (no native-hadoop), ~30 ms/file — ruinous
-    * for large flat directories. Entries that are neither a directory
-    * nor a regular file (broken symlinks, fifos) are skipped, not
-    * crashed on.
+  /** ONE-level listing of a directory: the driver's levels and the
+    * BFS-wave unit. Returns (file entries, subdirectory uris), or None as
+    * soon as `admit` refuses a file (the driver's bound; a wave admits
+    * all). The listing is read as it streams in, `listStatusIterator`
+    * page by page on a paged store, so a refused directory costs the
+    * driver no more than a page. `file:` goes through java.nio: Hadoop's
+    * local status objects fork a shell per entry for permissions (no
+    * native-hadoop), ~30 ms/file — ruinous for large flat directories.
+    * Entries that are neither a directory nor a regular file (broken
+    * symlinks, fifos) are skipped, not crashed on.
     */
   private def listLevel(
-      d: String, root: String, rootStr: String,
-      c: Configuration): (Seq[FileEntry], Seq[String]) = try {
+      d: String, root: String, rootStr: String, c: Configuration,
+      admit: () => Boolean): Option[(Seq[FileEntry], Seq[String])] = try {
     val dirPath = new Path(d)
+    val files = scala.collection.mutable.ArrayBuffer.empty[FileEntry]
+    val dirs = scala.collection.mutable.ArrayBuffer.empty[String]
+    var refused = false
     if (dirPath.toUri.getScheme == "file") {
       val rootOs = java.nio.file.Paths.get(new Path(root).toUri.getPath)
-      val files = scala.collection.mutable.ArrayBuffer.empty[FileEntry]
-      val dirs = scala.collection.mutable.ArrayBuffer.empty[String]
       val ds = java.nio.file.Files.newDirectoryStream(
         java.nio.file.Paths.get(dirPath.toUri.getPath))
-      try ds.forEach { p =>
-        if (java.nio.file.Files.isDirectory(p)) dirs += s"file://$p"
-        else if (java.nio.file.Files.isRegularFile(p) &&
-            !isChecksumSidecar(p.getFileName.toString))
-          files += nioEntry(p, root, rootOs)
+      try {
+        val it = ds.iterator()
+        while (!refused && it.hasNext) {
+          val p = it.next()
+          if (java.nio.file.Files.isDirectory(p)) dirs += s"file://$p"
+          else if (java.nio.file.Files.isRegularFile(p) &&
+              !isChecksumSidecar(p.getFileName.toString)) {
+            refused = !admit()
+            if (!refused) files += nioEntry(p, root, rootOs)
+          }
+        }
       } finally ds.close()
-      (files.toSeq, dirs.toSeq)
     } else {
-      val dirFs = FileSystem.get(dirPath.toUri, c)
-      val st = dirFs.listStatus(dirPath)
-      (st.filter(_.isFile).map(toEntry(_, root, rootStr)).toSeq,
-        st.filter(_.isDirectory).map(_.getPath.toString).toSeq)
+      val it = FileSystem.get(dirPath.toUri, c).listStatusIterator(dirPath)
+      while (!refused && it.hasNext) {
+        val st = it.next()
+        if (st.isDirectory) dirs += st.getPath.toString
+        else if (st.isFile) {
+          refused = !admit()
+          if (!refused) files += toEntry(st, root, rootStr)
+        }
+      }
     }
+    if (refused) None else Some((files.toSeq, dirs.toSeq))
   } catch {
     // a dir deleted between its discovery wave and this listing wave is
     // an empty subtree, not a failed 10^8-file scan (the recursive
     // walker's visitFileFailed has given the same tolerance all along)
     case _: java.nio.file.NoSuchFileException |
-        _: java.io.FileNotFoundException => (Seq.empty, Seq.empty)
+        _: java.io.FileNotFoundException => Some((Seq.empty, Seq.empty))
   }
 
   /** Executor-side recursive listing of one subtree (nio for `file:`). */

@@ -44,13 +44,14 @@ class PlacementSpec extends SparkSpec {
     sc.statusTracker.getJobIdsForGroup(group).toSeq
   }
 
-  /** A tree above the driver bound: 4 top dirs of 251 files each (1 004
-    * entries once they are listed) and 2 subdirectories of 2 files under
-    * each, so the 8 subdirectories are left to an executor wave.
+  /** A tree above the driver bound: 4 top dirs of 250 files each, which
+    * fill the driver's 1 000 entries exactly, and 2 subdirectories of 2
+    * files under each, so the 8 subdirectories are left to one executor
+    * wave and no directory is dropped half-listed.
     */
   private def largeTree(): Path = bucket((for {
     d <- 0 until 4
-    f <- 0 until 251
+    f <- 0 until 250
   } yield f"d$d/d${d}_f$f%03d.dat" -> s"$d-$f") ++ (for {
     d <- 0 until 4
     s <- 0 until 2
@@ -94,12 +95,16 @@ class PlacementSpec extends SparkSpec {
     }
   }
 
+  /** The ids of the RDDs persisted now. */
+  private def persisted(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
   test("a listing above the driver bound lists the rest in executor waves, each dir once") {
     spark.sparkContext.hadoopConfiguration
       .set("fs.counting.impl", classOf[CountingFileSystem].getName)
     val b = largeTree()
     assert(tree(b).size > FileManifest.DriverRows)
     CountingFileSystem.reset()
+    val before = persisted()
     var scanned: FileManifest.ScannedManifest = null
     val jobs = jobsOf(s"waves-$b") {
       scanned = FileManifest.scanManaged(spark, s"counting://$b")
@@ -113,11 +118,83 @@ class PlacementSpec extends SparkSpec {
         assert(tasks.forall(_ > 1), s"wave job $j ran stages of $tasks tasks")
       }
       val rows = scanned.rdd.collect()
-      assert(rows.length == 1020 && rows.map(_.path).distinct.length == 1020)
+      assert(rows.length == 1016 && rows.map(_.path).distinct.length == 1016)
       val lists = CountingFileSystem.listCalls.asScala.map { case (k, v) => k -> v.get }
       // the root, 4 top dirs and 8 subdirectories, each listed once
       assert(lists.size == 13 && lists.values.forall(_ == 1), s"list calls: $lists")
+      assert((persisted() -- before).nonEmpty, "the waves persisted nothing")
     } finally scanned.release()
+    assert((persisted() -- before).isEmpty, "release() left wave caches persisted")
+  }
+
+  test("a level too wide for the waves walks each subtree once, following links, cutting cycles") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.counting.impl", classOf[CountingFileSystem].getName)
+    // more top dirs than the driver lists, so the scan goes straight from
+    // the root to one recursive walk per top dir (wider than 4 x the
+    // parallelism); 4 of them hold a file and a link to one at depth 2
+    val b = Files.createTempDirectory("graft-place-deep")
+    val width = FileManifest.DriverRows + 1
+    (0 until width).foreach(d => Files.createDirectories(b.resolve(f"d$d%04d")))
+    val target = Files.createTempFile("graft-place-target", ".dat")
+    Files.writeString(target, "linked")
+    (0 until 4).foreach { d =>
+      val deep = b.resolve(f"d$d%04d/deep")
+      Files.createDirectories(deep)
+      Files.writeString(deep.resolve("f.dat"), s"$d")
+      Files.createSymbolicLink(deep.resolve("link.dat"), target)
+    }
+    val expected = (0 until 4).flatMap(d =>
+      Seq(f"d$d%04d/deep/f.dat", f"d$d%04d/deep/link.dat")).toSet
+    def check(scheme: String): Unit = {
+      val before = persisted()
+      var scanned: FileManifest.ScannedManifest = null
+      val jobs = jobsOf(s"deep-$scheme-$b") {
+        scanned = FileManifest.scanManaged(spark, s"$scheme://$b")
+      }
+      try {
+        assert(scanned.held.isEmpty && jobs.isEmpty, s"$scheme: ${jobs.size} wave jobs")
+        val rows = scanned.rdd.collect()
+        assert(rows.length == 8 && rows.map(_.path).toSet == expected, s"$scheme: ${rows.toSeq}")
+        assert(rows.filter(_.name == "link.dat").forall(_.size == 6))
+        assert((persisted() -- before).nonEmpty, s"$scheme: the walk persisted nothing")
+      } finally scanned.release()
+      assert((persisted() -- before).isEmpty, s"$scheme: release() left the walk persisted")
+    }
+    CountingFileSystem.reset()
+    check("counting")
+    val lists = CountingFileSystem.listCalls.asScala.map { case (k, v) => k -> v.get }
+    // the root, every top dir and the 4 deep dirs, each listed once
+    assert(lists.size == 1 + width + 4 && lists.values.forall(_ == 1),
+      s"listed more than once: ${lists.filter(_._2 > 1)}")
+    // the nio walk follows links and cuts a link back to an ancestor
+    Files.createSymbolicLink(b.resolve("d0000/deep/loop"), b.resolve("d0000"))
+    check("file")
+  }
+
+  test("a directory or a root of more files than the driver bound is not held") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.counting.impl", classOf[CountingFileSystem].getName)
+    val n = FileManifest.DriverRows + 1
+    for (under <- Seq("big/", "")) {
+      val b = bucket(((0 until n).map(f => f"${under}f$f%04d.dat" -> "x") :+
+        ("small/a.dat" -> "a")): _*)
+      val paths = tree(b).keySet
+      // a non-recursive scan of a root without files has nothing to drop
+      for (recursive <- if (under.isEmpty) Seq(true, false) else Seq(true)) {
+        CountingFileSystem.reset()
+        val scanned = FileManifest.scanManaged(spark, s"counting://$b", recursive = recursive)
+        try {
+          assert(scanned.held.isEmpty, s"$under recursive=$recursive: held on the driver")
+          val rows = scanned.rdd.collect().map(_.path)
+          val want = if (recursive) paths else paths.filterNot(_.contains('/'))
+          assert(rows.length == want.size && rows.toSet == want, s"$under recursive=$recursive")
+          val lists = CountingFileSystem.listCalls.asScala.map { case (k, v) => k -> v.get }
+          // a directory the driver dropped at its bound is listed once more
+          assert(lists.values.forall(c => c >= 1 && c <= 2), s"list calls: $lists")
+        } finally scanned.release()
+      }
+    }
   }
 
   test("above the driver bound, blueprints and syncs keep their executor job budgets") {
