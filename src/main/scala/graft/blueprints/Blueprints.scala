@@ -1,20 +1,18 @@
 package graft.blueprints
 
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.util.SerializableConfiguration
 import graft.core._
 import graft.operators.FileOps
-import graft.sources.{FileEntry, FileManifest}
+import graft.sources.FileManifest
 
 /** The four reference pipelines (download / upload / move / remove),
-  * re-expressed as a manifest listing + parallel sinks. A listing held
-  * on the driver is filtered, named and checked there, and its rows run
-  * on the driver or in one sink job by their size
-  * (`FileOps.copyHeld`/`deleteHeld`); a larger listing is an RDD whose
-  * regex filter and destination names run inside the sink's own
-  * placement step (`FileOps.copyRows`/`deleteRows`). No SQL plan either
-  * way. Lifecycle mapping: SURVEY §3.4. Copy-shaped ops return
+  * re-expressed as a manifest listing + parallel sinks, one pipeline
+  * each: the listing's rows ([[FileOps.Rows]], held on the driver or an
+  * RDD) are filtered and named (`FileManifest.naming`), then checked and
+  * moved by `FileOps.copyRows`/`deleteRows`, whose size rule runs them
+  * on the driver or in one sink job. Over an RDD the regex filter and
+  * destination names run inside the sink's own placement step. No SQL
+  * plan either way. Lifecycle mapping: SURVEY §3.4. Copy-shaped ops return
   * [[FileOps.CopyStats]] (planned vs actually-transferred vs skipped);
   * remove returns the planned row count. All throw
   * [[graft.core.BlueprintError]] for the reference's coded failures
@@ -63,13 +61,8 @@ object Blueprints {
         FileManifest.scanManaged(spark, cfg.bucket, cfg.sourceFolderName)
       try {
         val keep = FileManifest.matcher(cfg.sourceFileName)
-        val n = scanned.held match {
-          case Some(es) =>
-            FileOps.deleteHeld(spark, es.filter(keep).map(e => (e.bucket, e.path)))
-          case None => FileOps.withConf(spark)(FileOps.deleteRows(scanned.rdd,
-            (_, it: Iterator[FileEntry]) =>
-              it.filter(keep).map(e => (e.bucket, e.path)), _))
-        }
+        val n = FileOps.deleteRows(scanned.rows.mapPartitions((_, it) =>
+          it.filter(keep).map(e => (e.bucket, e.path))))
         if (n == 0) throw BlueprintError.FileNotFound(cfg.sourceFileName)
         n
         // the delete action was the manifest's last read — release the
@@ -107,35 +100,15 @@ object Blueprints {
         // manifest and a job of its own)
         val provablyUnique =
           dstFile.isDefined && policy == EnumeratePolicy.Always
-        val st = scanned.held match {
-          case Some(es) =>
-            val named = FileManifest.namingHeld(es, keep, dstFolder, dstFile, policy)
-            FileOps.copyHeld(spark,
-              named.map { case (e, dest) => (e.bucket, e.path, dest, null: String) },
-              named.map(_._1.size).sum, Some(dstRoot), deleteSource,
-              overwrite = true, !provablyUnique)
-          case None => FileOps.withConf(spark)(copyNamed(
-            FileManifest.naming(scanned.rdd, keep, dstFolder, dstFile, policy),
-            dstRoot, deleteSource, !provablyUnique, _))
-        }
+        val named = FileManifest.naming(scanned.rows, keep, dstFolder, dstFile, policy)
+        val st = FileOps.copyRows(named.mapPartitions((_, it) => it.map {
+          case (e, dest) => FileOps.Move(e.bucket, e.path, e.size, dest, null)
+        }), Some(dstRoot), deleteSource, overwrite = true, !provablyUnique)
         if (st.planned == 0) throw BlueprintError.FileNotFound(srcFile)
         st
         // the copy (and optional source delete) was the manifest's last
         // read — release the wave caches deterministically
       } finally scanned.release()
-  }
-
-  /** Copies the named entries to `dstRoot`: the naming runs inside the
-    * copy's placement step.
-    */
-  private def copyNamed[A](
-      n: FileManifest.Naming[A], dstRoot: String, deleteSource: Boolean,
-      checkCollisions: Boolean,
-      conf: Broadcast[SerializableConfiguration]): FileOps.CopyStats = {
-    val name = n.name // the step must not capture `n`, which holds an RDD
-    FileOps.copyRows(n.rows, (p, it: Iterator[A]) =>
-      name(p, it).map { case (e, dest) => (e.bucket, e.path, dest, null: String) },
-      Some(dstRoot), deleteSource, overwrite = true, checkCollisions, conf)
   }
 
   /** Credential injection (download_file.py:44-62 `set_environment_variables`):

@@ -5,12 +5,12 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.util.regex.{Pattern, PatternSyntaxException}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.{RangePartitioner, TaskContext}
-import org.apache.spark.rdd.{RDD, ShuffledRDD}
+import org.apache.spark.{SparkContext, TaskContext}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.util.SerializableConfiguration
 import graft.core.{BlueprintError, EnumeratePolicy, PathAlg, RegexCompat}
-import graft.operators.Q
+import graft.operators.{FileOps, Q}
 
 /** One object in a bucket-like store. `path` is the bucket-relative object
   * name (the reference's `blob.name`), `name` its basename.
@@ -22,22 +22,22 @@ final case class FileEntry(
     size: Long,
     modificationTime: java.sql.Timestamp)
 
-/** File-manifest layer: listings as RDDs of [[FileEntry]].
+/** File-manifest layer: listings as [[FileOps.Rows]] of [[FileEntry]].
   *
   * Replaces the reference's driver-side blob listing
   * (download_file.py:147-152 `find_google_cloud_storage_file_names`) with a
-  * manifest `RDD[FileEntry]` over Hadoop `FileSystem`, whose regex filter
-  * ([[matcher]]) and destination names ([[naming]]) are row functions the
-  * executor-parallel copy/delete actions run (SURVEY §4-P1): no Catalyst
-  * plan on the way. [[scan]] views a listing as a Dataset for SQL
-  * callers. Prefix pushdown (the reference's `list_blobs(prefix=…)`,
+  * manifest over Hadoop `FileSystem`, whose regex filter ([[matcher]]) and
+  * destination names ([[naming]]) are steps of the copy/delete pipelines
+  * (SURVEY §4-P1), written once for both placements of the rows: no
+  * Catalyst plan on the way. [[scan]] views a listing as a Dataset for
+  * SQL callers. Prefix pushdown (the reference's `list_blobs(prefix=…)`,
   * download_file.py:248-249) maps to scoping the listing root.
   *
   * Scale (100 TB / 10^8 objects): the driver lists level by level while
   * the listing stays small — the root, then each next level's
   * directories concurrently on at most `defaultParallelism` driver
-  * workers — and holds the entries ([[ScannedManifest.held]]), so a file
-  * op over them needs no Spark job. It admits at most [[DriverRows]]
+  * workers — and holds the entries ([[FileOps.Held]]), so a file op over
+  * them needs no Spark job. It admits at most [[DriverRows]]
   * files in all: a directory whose listing would pass that is dropped
   * and listed again on the executors, and once the bound is reached or a
   * level has more than [[DriverRows]] directories, the remaining
@@ -64,8 +64,8 @@ object FileManifest {
     */
   private[graft] val DriverRows = 1000
 
-  /** A scanned manifest: the entries, held on the driver when the whole
-    * listing stayed small ([[held]]), else an RDD of the driver-listed
+  /** A scanned manifest: the entries ([[rows]]), held on the driver when
+    * the whole listing stayed small, else an RDD of the driver-listed
     * levels plus the executor-listed BFS waves, and a release hook for
     * the executor-persisted wave RDDs behind it. Without the hook,
     * reclamation waits on GC + ContextCleaner — a long-lived manifest
@@ -76,30 +76,13 @@ object FileManifest {
     */
   final class ScannedManifest private[sources] (
       spark: SparkSession,
-      listing: Either[IndexedSeq[FileEntry], RDD[FileEntry]],
+      val rows: FileOps.Rows[FileEntry],
       waves: Seq[RDD[_]]) {
 
-    /** The entries, when the listing is held on the driver. */
-    def held: Option[IndexedSeq[FileEntry]] = listing.left.toOption
+    /** The entries as an RDD; a held listing's is a plain `parallelize`. */
+    lazy val rdd: RDD[FileEntry] = rows.rdd
 
-    @volatile private var viewed = false
-
-    /** The entries as an RDD. A held listing's view is built on first
-      * use and cached like a wave, so [[release]] frees whatever reading
-      * it cached, whichever way the listing was made.
-      */
-    lazy val rdd: RDD[FileEntry] = listing match {
-      case Right(r) => r
-      case Left(es) =>
-        viewed = true
-        spark.sparkContext.parallelize(es, slices(spark, es.length))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
-
-    def release(): Unit = {
-      waves.foreach(_.unpersist(blocking = false))
-      if (viewed) rdd.unpersist(blocking = false)
-    }
+    def release(): Unit = waves.foreach(_.unpersist(blocking = false))
 
     /** The same entries as a Dataset, for callers that query the listing
       * with SQL. Built on first use, so the blueprint path never plans it.
@@ -108,13 +91,13 @@ object FileManifest {
       spark.createDataset(rdd)(Encoders.product[FileEntry])
   }
 
-  /** Partitions of an RDD over `n` driver-listed items. */
-  private def slices(spark: SparkSession, n: Int): Int =
-    math.max(1, math.min(n, spark.sparkContext.defaultParallelism))
+  /** Partitions of an RDD over `n` driver-held items. */
+  private[graft] def slices(sc: SparkContext, n: Int): Int =
+    math.max(1, math.min(n, sc.defaultParallelism))
 
   /** The manifest of a prefix that does not exist: no entries. */
   private[graft] def emptyManifest(spark: SparkSession): ScannedManifest =
-    new ScannedManifest(spark, Left(IndexedSeq.empty), Nil)
+    new ScannedManifest(spark, FileOps.Rows(spark.sparkContext, IndexedSeq.empty[FileEntry]), Nil)
 
   /** List all files under `bucketUri/prefix` into a manifest Dataset.
     * `bucketUri` e.g. `file:///tmp/bucket-a` or `gs://bucket`.
@@ -132,7 +115,7 @@ object FileManifest {
     * unpersists the per-wave listing caches deterministically. The
     * driver lists while the listing stays within [[DriverRows]] (the
     * scale paragraph above). A listing that ends there is held on the
-    * driver ([[ScannedManifest.held]]) and has run no Spark job; else its
+    * driver and has run no Spark job; else its
     * deeper levels run as executor waves and the driver-listed entries
     * are the shallow part of its RDD. Each directory is listed exactly
     * once either way, except those the driver dropped at its bound (at
@@ -176,7 +159,7 @@ object FileManifest {
         case (_, Some((_, dirs))) => if (recursive) dirs else Nil
       }
     }
-    if (pending.isEmpty) new ScannedManifest(spark, Left(held.toIndexedSeq), Nil)
+    if (pending.isEmpty) new ScannedManifest(spark, FileOps.Rows(sc, held.toIndexedSeq), Nil)
     else {
       // Iterative BFS until the fan-out is wide enough, then recursive
       // subtree walks. A whole-subtree task per FIRST-LEVEL dir would
@@ -214,7 +197,7 @@ object FileManifest {
       var wave = 0
       while (pending.nonEmpty && pending.length < 4 * par &&
           wave < MaxWaves) {
-        val levelRdd = sc.parallelize(pending, slices(spark, pending.length))
+        val levelRdd = sc.parallelize(pending, slices(sc, pending.length))
           .flatMap(d => listLevel(d, root, rootStr, conf.value, () => true))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         persisted += levelRdd
@@ -232,14 +215,14 @@ object FileManifest {
         // persisted lazily (first action materializes): subsequent
         // actions reuse the walk instead of re-listing the subtrees,
         // keeping the whole manifest one consistent snapshot
-        val deepRdd = sc.parallelize(pending, slices(spark, pending.length))
+        val deepRdd = sc.parallelize(pending, slices(sc, pending.length))
           .flatMap(d => listDeep(d, root, rootStr, conf.value))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         persisted += deepRdd
         waves += deepRdd
       }
-      val shallow = sc.parallelize(held.toSeq, slices(spark, held.length))
-      new ScannedManifest(spark, Right(sc.union(shallow +: waves.toSeq)),
+      val shallow = sc.parallelize(held.toSeq, slices(sc, held.length))
+      new ScannedManifest(spark, FileOps.Rows(sc.union(shallow +: waves.toSeq)),
         persisted.toSeq)
     }
   }
@@ -430,16 +413,7 @@ object FileManifest {
   def regexFilter(manifest: Dataset[FileEntry], pattern: String): Dataset[FileEntry] =
     manifest.filter(matcher(pattern))
 
-  /** Destination names for a caller to apply inside its own per-partition
-    * step: `name(p, rows of partition p)` yields each kept row's entry
-    * with its bucket-relative destination.
-    */
-  final case class Naming[A](
-      rows: RDD[A], name: (Int, Iterator[A]) => Iterator[(FileEntry, String)]) {
-    def named: RDD[(FileEntry, String)] = rows.mapPartitionsWithIndex(name)
-  }
-
-  /** Names the entries of `manifest` that `keep` accepts, as
+  /** Names the entries of `rows` that `keep` accepts, as
     * `determine_destination_file_name` + enumeration do
     * (download_file.py:74-106): explicit name, enumerated `name_{i}.ext`
     * (`_i` before the first dot), or the source's basename, under the
@@ -447,60 +421,29 @@ object FileManifest {
     * Enumeration follows the entries sorted on (path, bucket) in UTF-8
     * byte order — the order GCS lists names in, which the reference
     * relied on implicitly (SURVEY §4-P5), and the order Catalyst sorts
-    * strings in; `String.compareTo` (UTF-16) differs above U+FFFF. The
-    * sort is a range-partitioned shuffle, and one job counts each sorted
-    * partition: a row's number is its partition's offset plus its place
-    * in it, so no single-task window exists. That count also decides
-    * `IfMultiple`; with `Always` and one sorted partition it is skipped.
+    * strings in; `String.compareTo` (UTF-16) differs above U+FFFF. A
+    * row's number is its sorted partition's offset plus its place in it,
+    * so no single-task window exists (over an RDD the sort is a
+    * range-partitioned shuffle, and one job counts each sorted
+    * partition); the total also decides `IfMultiple`.
     */
   def naming(
-      manifest: RDD[FileEntry],
+      rows: FileOps.Rows[FileEntry],
       keep: FileEntry => Boolean,
       destinationFolderName: String,
       destinationFileName: Option[String],
-      policy: EnumeratePolicy): Naming[_] = {
+      policy: EnumeratePolicy): FileOps.Rows[(FileEntry, String)] = {
     val dest = destName(PathAlg.cleanFolderName(destinationFolderName),
       destinationFileName) _
-    destinationFileName match {
-      case None =>
-        Naming[FileEntry](manifest, (_, it) =>
-          it.filter(keep).map(e => (e, dest(e, false, 0L))))
-      case Some(_) =>
-        val keyed = manifest.mapPartitions(_.filter(keep).map(e => (sortKey(e), e)))
-        val sorted = new ShuffledRDD[Array[Byte], FileEntry, FileEntry](keyed,
-          new RangePartitioner(keyed.getNumPartitions, keyed)(ByteOrder, implicitly))
-          .setKeyOrdering(ByteOrder)
-        // offsets(p): the rows before sorted partition p
-        val offsets =
-          if (policy == EnumeratePolicy.Always && sorted.getNumPartitions == 1)
-            Array(0L)
-          else sorted.sparkContext.runJob(sorted,
-            (_: TaskContext, it: Iterator[(Array[Byte], FileEntry)]) => it.size.toLong,
-            sorted.partitions.indices).scanLeft(0L)(_ + _)
-        val enumerate = policy == EnumeratePolicy.Always || offsets.last > 1
-        Naming[(Array[Byte], FileEntry)](sorted, (p, it) =>
-          it.zipWithIndex.map { case ((_, e), i) => (e, dest(e, enumerate, offsets(p) + i + 1)) })
-    }
-  }
-
-  /** [[naming]] of driver-held entries, on the driver: the same names
-    * under the same rules, the enumeration sorted in the same UTF-8 byte
-    * order, with no job.
-    */
-  def namingHeld(
-      entries: IndexedSeq[FileEntry],
-      keep: FileEntry => Boolean,
-      destinationFolderName: String,
-      destinationFileName: Option[String],
-      policy: EnumeratePolicy): IndexedSeq[(FileEntry, String)] = {
-    val dest = destName(PathAlg.cleanFolderName(destinationFolderName),
-      destinationFileName) _
-    val kept = entries.filter(keep)
-    if (destinationFileName.isEmpty) kept.map(e => (e, dest(e, false, 0L)))
+    val kept = rows.mapPartitions((_, it) => it.filter(keep))
+    if (destinationFileName.isEmpty)
+      kept.mapPartitions((_, it) => it.map(e => (e, dest(e, false, 0L))))
     else {
-      val sorted = kept.map(e => (sortKey(e), e)).sortBy(_._1)(ByteOrder).map(_._2)
-      val enumerate = policy == EnumeratePolicy.Always || sorted.length > 1
-      sorted.zipWithIndex.map { case (e, i) => (e, dest(e, enumerate, i + 1L)) }
+      val launch: FileOps.Launch = (r, t) => r.sparkContext.runJob(r, t)
+      val (sorted, offsets) = kept.sortGlobal(sortKey, ByteOrder, launch)
+      val enumerate = policy == EnumeratePolicy.Always || offsets.last > 1
+      sorted.mapPartitions((p, it) => it.zipWithIndex.map { case (e, i) =>
+        (e, dest(e, enumerate, offsets(p) + i + 1)) })
     }
   }
 
@@ -528,8 +471,8 @@ object FileManifest {
       destinationFolderName: String,
       destinationFileName: Option[String],
       policy: EnumeratePolicy): DataFrame = {
-    val named = naming(manifest.rdd, _ => true, destinationFolderName,
-      destinationFileName, policy).named
+    val named = naming(FileOps.Rows(manifest.rdd), _ => true, destinationFolderName,
+      destinationFileName, policy).rdd
     manifest.sparkSession.createDataFrame(named.map { case (e, d) =>
       (e.bucket, e.path, e.name, e.size, e.modificationTime, d)
     }).toDF("bucket", "path", "name", "size", "modificationTime", "dest")

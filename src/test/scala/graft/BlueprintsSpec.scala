@@ -332,8 +332,10 @@ class BlueprintsSpec extends SparkSpec {
             sqlJobs.incrementAndGet()
         }
     }
+    // c.csv is larger than the driver moves (32 MiB), so every copy, the
+    // cold sync and the content compare run as Spark jobs
     val src = freshBucket("logs/top.csv" -> "t", "logs/d0/a.csv" -> "a",
-      "logs/d1/b.csv" -> "bb", "logs/d1/deep/c.csv" -> "c")
+      "logs/d1/b.csv" -> "bb", "logs/d1/deep/c.csv" -> "c" * ((32 << 20) + 1))
     val local = Files.createTempDirectory(root, "nosql")
     val bkt = Files.createTempDirectory(root, "nosql-bkt")
     val arch = Files.createTempDirectory(root, "nosql-arch")

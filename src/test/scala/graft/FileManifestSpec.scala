@@ -42,27 +42,39 @@ class FileManifestSpec extends SparkSpec {
     assert(m.forall(_.path.startsWith("d002/")))
   }
 
+  /** Whether a scan's listing is held on the driver. */
+  private def held(m: FileManifest.ScannedManifest): Boolean =
+    m.rows.isInstanceOf[FileOps.Held[_]]
+
   test("deep listing fans out across >1 partition (not a driver loop)") {
-    val b = mkTree(nDirs = 8, filesPerDir = 4)
-    val m = FileManifest.scan(spark, s"file://$b")
-    assert(m.rdd.getNumPartitions > 1)
+    // more files than the driver holds: the rest is listed by executor waves
+    val perDir = FileManifest.DriverRows / 8 + 1
+    val b = mkTree(nDirs = 8, filesPerDir = perDir)
+    val scanned = FileManifest.scanManaged(spark, s"file://$b")
+    try {
+      assert(!held(scanned), "the listing is held on the driver")
+      assert(scanned.rdd.getNumPartitions > 1)
+      assert(scanned.entries.count() == 8 * perDir)
+    } finally scanned.release()
   }
 
   test("skewed tree (ONE top-level dir) still fans out across >1 task") {
     // data/{one-dir}/{16 subdirs}/files — the old whole-subtree-per-
     // first-level-dir design walked all of it in a single task; the BFS
-    // waves must re-parallelize the 16 discovered subdirs instead
+    // waves must re-parallelize the discovered subdirs instead. The
+    // driver's bound holds at most 10 of the 16 subdirs, so at least 6
+    // are left to the waves
+    val perDir = FileManifest.DriverRows / 10
     val b = Files.createTempDirectory("graft-skew")
     val top = b.resolve("data")
     (0 until 16).foreach { d =>
       val dir = top.resolve(f"part$d%02d")
       Files.createDirectories(dir)
-      (0 until 5).foreach { f =>
+      (0 until perDir).foreach { f =>
         Files.writeString(dir.resolve(f"f$f.dat"), s"$d-$f")
       }
     }
-    val m = FileManifest.scan(spark, s"file://$b")
-    // count tasks actually run for the wave that lists the 16 subdirs
+    // count tasks actually run for the wave that lists the subdirs
     var maxTasksInStage = 0
     val listener = new org.apache.spark.scheduler.SparkListener {
       private val perStage =
@@ -76,17 +88,20 @@ class FileManifestSpec extends SparkSpec {
       }
     }
     spark.sparkContext.addSparkListener(listener)
+    val scanned = try {
+      val m = FileManifest.scanManaged(spark, s"file://$b")
+      // the scan's own jobs are its waves
+      org.apache.spark.graft.TestBus.drain(spark.sparkContext)
+      m
+    } finally spark.sparkContext.removeSparkListener(listener)
     try {
-      val rows = m.collect()
-      assert(rows.length == 80)
-      assert(rows.map(_.path).distinct.length == 80)
-      // listener delivery is async — poll until the fan-out shows up
-      val deadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
-      while (maxTasksInStage <= 1 && System.nanoTime() < deadline)
-        Thread.sleep(50)
+      assert(!held(scanned), "the listing is held on the driver")
       assert(maxTasksInStage > 1,
         s"deep listing of a 1-top-dir tree ran in $maxTasksInStage task(s)")
-    } finally spark.sparkContext.removeSparkListener(listener)
+      val rows = scanned.rdd.collect()
+      assert(rows.length == 16 * perDir)
+      assert(rows.map(_.path).distinct.length == 16 * perDir)
+    } finally scanned.release()
   }
 
   test("a dir deleted after scan() never fails later actions; a new scan reflects it") {
@@ -121,9 +136,10 @@ class FileManifestSpec extends SparkSpec {
     // files, one for dirs). The counting:// scheme takes the Hadoop
     // listStatus path everywhere (no nio shortcut), so the counter
     // sees every list RPC the scan makes.
-    val b = mkTree(nDirs = 3, filesPerDir = 2)
-    // two deeper levels so at least two BFS waves run
-    (0 until 3).foreach { d =>
+    // the first level fills the driver's bound exactly, so no directory
+    // is dropped half-listed, and the two deeper levels run as two waves
+    val b = mkTree(nDirs = 4, filesPerDir = FileManifest.DriverRows / 4)
+    (0 until 4).foreach { d =>
       val sub = b.resolve(f"d$d%03d/sub")
       Files.createDirectories(sub)
       Files.writeString(sub.resolve("deep.dat"), "x")
@@ -134,21 +150,24 @@ class FileManifestSpec extends SparkSpec {
     spark.sparkContext.hadoopConfiguration
       .set("fs.counting.impl", classOf[CountingFileSystem].getName)
     CountingFileSystem.reset()
-    val m = FileManifest.scan(spark, s"counting://$b")
-    assert(m.collect().length == 3 * 2 + 3 + 3) // files + deep + leafy
+    val m = FileManifest.scanManaged(spark, s"counting://$b")
+    assert(!held(m), "the listing is held on the driver")
+    val files = FileManifest.DriverRows + 4 + 4 // files + deep + leafy
+    assert(m.rdd.collect().length == files)
     def counts = {
       import scala.jdk.CollectionConverters._
       CountingFileSystem.listCalls.asScala.map { case (k, v) => k -> v.get }
     }
-    // every directory (root + 3 top dirs + 3 sub + 3 leaf) listed once
+    // every directory (root + 4 top dirs + 4 sub + 4 leaf) listed once
     assert(counts.values.forall(_ == 1),
       s"directories listed more than once: ${counts.filter(_._2 > 1)}")
-    assert(counts.size == 10, s"unexpected list set: ${counts.keys}")
+    assert(counts.size == 13, s"unexpected list set: ${counts.keys}")
     // snapshot property: a second action reads the cached waves — zero
     // additional list RPCs anywhere
-    assert(m.count() == 12)
+    assert(m.rdd.count() == files)
     assert(counts.values.forall(_ == 1),
       s"re-action re-listed: ${counts.filter(_._2 > 1)}")
+    m.release()
   }
 
   test("scanManaged.release() drops the wave caches; entries stay readable") {
@@ -157,15 +176,18 @@ class FileManifestSpec extends SparkSpec {
     // full file-entry cache. release() must unpersist them all
     // deterministically — and a post-release read must still work (the
     // listing lineage re-executes; it just stops being cached).
-    val b = mkTree(nDirs = 3, filesPerDir = 4)
+    // more files than the driver holds, so executor waves list the rest
+    val b = mkTree(nDirs = 3, filesPerDir = FileManifest.DriverRows / 3 + 1)
     (0 until 3).foreach { d =>
       val sub = b.resolve(f"d$d%03d/sub")
       Files.createDirectories(sub)
       Files.writeString(sub.resolve("deep.dat"), "x")
     }
+    val n = 3 * (FileManifest.DriverRows / 3 + 1) + 3
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val scanned = FileManifest.scanManaged(spark, s"file://$b")
-    assert(scanned.entries.count() == 15)
+    assert(!held(scanned), "the listing is held on the driver")
+    assert(scanned.entries.count() == n)
     val during = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(during.nonEmpty, "scan persisted no wave RDDs to manage")
     scanned.release()
@@ -173,15 +195,16 @@ class FileManifestSpec extends SparkSpec {
     assert(after.isEmpty,
       s"release() left wave RDDs persisted: $after")
     scanned.release() // idempotent
-    assert(scanned.entries.count() == 15) // lineage re-executes fine
+    assert(scanned.entries.count() == n) // lineage re-executes fine
   }
 
   test("wide-level fallback (recursive walk) also lists each directory once") {
-    // first level wider than 4×parallelism skips the BFS waves and
-    // walks each subtree recursively — that path must also touch every
+    // a level wider than 4×parallelism skips the BFS waves and walks
+    // each subtree recursively — that path must also touch every
     // directory exactly once (listFiles → listLocatedStatus → one
-    // listStatus per dir)
-    val b = mkTree(nDirs = 20, filesPerDir = 1) // 20 ≥ 4 × local[4]
+    // listStatus per dir). The top level's files fill the driver's bound
+    // exactly, so the 20 deep dirs (20 ≥ 4 × local[4]) go to the walk
+    val b = mkTree(nDirs = 20, filesPerDir = FileManifest.DriverRows / 20)
     (0 until 20).foreach { d =>
       val sub = b.resolve(f"d$d%03d/deep")
       Files.createDirectories(sub)
@@ -190,8 +213,10 @@ class FileManifestSpec extends SparkSpec {
     spark.sparkContext.hadoopConfiguration
       .set("fs.counting.impl", classOf[CountingFileSystem].getName)
     CountingFileSystem.reset()
-    val m = FileManifest.scan(spark, s"counting://$b")
-    assert(m.collect().length == 40)
+    val m = FileManifest.scanManaged(spark, s"counting://$b")
+    assert(!held(m), "the listing is held on the driver")
+    val files = FileManifest.DriverRows + 20
+    assert(m.rdd.collect().length == files)
     val counts = {
       import scala.jdk.CollectionConverters._
       CountingFileSystem.listCalls.asScala.map { case (k, v) => k -> v.get }
@@ -201,8 +226,9 @@ class FileManifestSpec extends SparkSpec {
       s"fallback re-listed: ${counts.filter(_._2 > 1)}")
     assert(counts.size == 41, s"unexpected list set size ${counts.size}")
     // snapshot: a second action adds no RPCs on this path either
-    assert(m.count() == 40)
+    assert(m.rdd.count() == files)
     assert(counts.values.forall(_ == 1))
+    m.release()
   }
 
   test("withDestination enumerates deterministically in path order") {
@@ -374,6 +400,16 @@ class FileManifestSpec extends SparkSpec {
       assert(Files.exists(dst.resolve(s"out/$r")), s"$r did not land")
       assert(!Files.exists(b.resolve(r)), s"$r source kept")
     }
+    // a copy has no verify-before-delete: the source status, open, create
+    val back = rels.map(r => (s"counting://$dst", s"out/$r", r)).toDF("bucket", "path", "dest")
+    CountingFileSystem.reset()
+    assert(FileOps.copy(back, Some(s"counting://$b")) == FileOps.CopyStats(8, 8, 0))
+    val copyCalls = {
+      import scala.jdk.CollectionConverters._
+      CountingFileSystem.rpcCalls.asScala.map { case (k, v) => k -> v.get }
+    }
+    assert(copyCalls.values.sum <= 3 * rels.size,
+      s"store RPCs for ${rels.size} copied objects: $copyCalls")
   }
 
   test("copy places the rows of two input partitions in two distinct tasks") {

@@ -2,11 +2,12 @@ package graft
 
 import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
 import org.apache.spark.graft.TestBus
 import graft.blueprints.Blueprints
 import graft.core._
 import graft.operators.FileOps
-import graft.sources.FileManifest
+import graft.sources.{FileEntry, FileManifest}
 
 /** The two placements of a file op. A listing of at most
   * `FileManifest.DriverRows` entries is held on the driver, and its ops
@@ -95,6 +96,10 @@ class PlacementSpec extends SparkSpec {
     }
   }
 
+  /** Whether a scan's listing is held on the driver. */
+  private def held(m: FileManifest.ScannedManifest): Boolean =
+    m.rows.isInstanceOf[FileOps.Held[_]]
+
   /** The ids of the RDDs persisted now. */
   private def persisted(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
@@ -110,7 +115,7 @@ class PlacementSpec extends SparkSpec {
       scanned = FileManifest.scanManaged(spark, s"counting://$b")
     }
     try {
-      assert(scanned.held.isEmpty, "a listing above the bound stayed on the driver")
+      assert(!held(scanned), "a listing above the bound stayed on the driver")
       assert(jobs.nonEmpty, "no BFS wave ran")
       val tracker = spark.sparkContext.statusTracker
       jobs.foreach { j =>
@@ -153,7 +158,7 @@ class PlacementSpec extends SparkSpec {
         scanned = FileManifest.scanManaged(spark, s"$scheme://$b")
       }
       try {
-        assert(scanned.held.isEmpty && jobs.isEmpty, s"$scheme: ${jobs.size} wave jobs")
+        assert(!held(scanned) && jobs.isEmpty, s"$scheme: ${jobs.size} wave jobs")
         val rows = scanned.rdd.collect()
         assert(rows.length == 8 && rows.map(_.path).toSet == expected, s"$scheme: ${rows.toSeq}")
         assert(rows.filter(_.name == "link.dat").forall(_.size == 6))
@@ -185,7 +190,7 @@ class PlacementSpec extends SparkSpec {
         CountingFileSystem.reset()
         val scanned = FileManifest.scanManaged(spark, s"counting://$b", recursive = recursive)
         try {
-          assert(scanned.held.isEmpty, s"$under recursive=$recursive: held on the driver")
+          assert(!held(scanned), s"$under recursive=$recursive: held on the driver")
           val rows = scanned.rdd.collect().map(_.path)
           val want = if (recursive) paths else paths.filterNot(_.contains('/'))
           assert(rows.length == want.size && rows.toSet == want, s"$under recursive=$recursive")
@@ -268,6 +273,65 @@ class PlacementSpec extends SparkSpec {
     assert(bp.getMessage == df.getMessage && bp.getMessage.contains("out/y.txt"),
       s"${bp.getMessage} vs ${df.getMessage}")
     assert(tree(dst).isEmpty, "bytes moved before the collision was raised")
+  }
+
+  test("held rows and an RDD of the same rows name, check and sync alike") {
+    val sc = spark.sparkContext
+    def both[T: ClassTag](rows: IndexedSeq[T]): Seq[FileOps.Rows[T]] =
+      Seq(FileOps.Rows(sc, rows), FileOps.Rows(sc.parallelize(rows, 3)))
+    def entry(bucket: String, path: String) =
+      FileEntry(bucket, path, path.split('/').last, 1L, new java.sql.Timestamp(0L))
+    // a path in two buckets, and names above U+FFFF: U+E000 sorts before a
+    // surrogate pair in UTF-8, after it in UTF-16
+    val entries = IndexedSeq(entry("file:///b2", "p/a.txt"), entry("file:///b1", "p/a.txt"),
+      entry("file:///b1", "\uD83D\uDE00.txt"), entry("file:///b1", "\uE000.txt"),
+      entry("file:///b1", "q/c.txt"), entry("file:///b1", "r/c.txt"))
+    def names(keep: FileEntry => Boolean, name: Option[String],
+        policy: EnumeratePolicy): Set[(String, String, String)] = {
+      val Seq(held, spread) = both(entries).map(rows =>
+        FileManifest.naming(rows, keep, "out", name, policy).rdd.collect()
+          .map { case (e, d) => (e.bucket, e.path, d) }.toSet)
+      assert(held == spread, s"$name $policy")
+      held
+    }
+    val numbered = Set(("file:///b1", "p/a.txt", "out/x_1.txt"),
+      ("file:///b2", "p/a.txt", "out/x_2.txt"), ("file:///b1", "q/c.txt", "out/x_3.txt"),
+      ("file:///b1", "r/c.txt", "out/x_4.txt"), ("file:///b1", "\uE000.txt", "out/x_5.txt"),
+      ("file:///b1", "\uD83D\uDE00.txt", "out/x_6.txt"))
+    assert(names(_ => true, Some("x.txt"), EnumeratePolicy.Always) == numbered)
+    assert(names(_ => true, Some("x.txt"), EnumeratePolicy.IfMultiple) == numbered)
+    assert(names(_.path == "q/c.txt", Some("x.txt"), EnumeratePolicy.IfMultiple) ==
+      Set(("file:///b1", "q/c.txt", "out/x.txt")))
+    assert(names(_.path == "q/c.txt", Some("x.txt"), EnumeratePolicy.Always) ==
+      Set(("file:///b1", "q/c.txt", "out/x_1.txt")))
+    val basenames = names(_ => true, None, EnumeratePolicy.Always)
+    assert(basenames.map(_._3) == Set("out/a.txt", "out/c.txt", "out/\uE000.txt",
+      "out/\uD83D\uDE00.txt"))
+    // out/a.txt and out/c.txt repeat: both raise the greatest, before any byte moves
+    val clashes = both(entries.map(e => FileOps.Move(e.bucket, e.path, e.size,
+      s"out/${e.name}", null))).map(rows => intercept[BlueprintError.DestinationCollision](
+        FileOps.copyRows(rows, Some("file:///nowhere"), deleteSource = false,
+          overwrite = true, checkCollisions = true)).getMessage)
+    assert(clashes.distinct.length == 1 && clashes.head.contains("out/c.txt"), clashes)
+    // a sync of the same listings: a missing, a size-stale, a same-size
+    // changed, an up-to-date and an extraneous object
+    val src = bucket("logs/new.txt" -> "n", "logs/d/grown.txt" -> "gg",
+      "logs/d/rot.txt" -> "abc", "logs/same.txt" -> "s")
+    val mirrors = Seq.fill(2)(bucket("m/d/grown.txt" -> "g", "m/d/rot.txt" -> "abX",
+      "m/same.txt" -> "s", "m/gone.txt" -> "x"))
+    val srcM = FileManifest.scanManaged(spark, uri(src), "logs")
+    val dstMs = mirrors.map(m => FileManifest.scanManaged(spark, uri(m), "m"))
+    try {
+      assert((srcM +: dstMs).forall(held))
+      val stats = Seq(
+        FileOps.syncRows(srcM.rows, "logs", dstMs(0).rows, uri(mirrors(0)), "m",
+          deleteExtraneous = true, verifyContent = true),
+        FileOps.syncRows(FileOps.Rows(srcM.rdd), "logs", FileOps.Rows(dstMs(1).rdd),
+          uri(mirrors(1)), "m", deleteExtraneous = true, verifyContent = true))
+      assert(stats.distinct == Seq(FileOps.SyncStats(4, 3, 1, 0, 1)), stats)
+      assert(tree(mirrors(0)) == tree(mirrors(1)) && tree(mirrors(0)) ==
+        tree(src).map { case (p, c) => s"m/${p.stripPrefix("logs/")}" -> c })
+    } finally (srcM +: dstMs).foreach(_.release())
   }
 
   test("an interrupted driver-placed move stops, and no source goes without its copy") {

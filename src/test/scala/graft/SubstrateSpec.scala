@@ -8,10 +8,10 @@ import org.apache.spark.sql.functions._
 import graft.operators.{FitMemo, Graph, Learn, Q}
 
 /** The engine's one way to build a session ([[Session]]), overlap driver
-  * work ([[Q.async]]) and memoize a fit ([[FitMemo]]): overlapped jobs
-  * carry the caller's job group and die with it, the memo counts hits
-  * and refits a rewritten table, and `src/main` keeps no second copy of
-  * any of them.
+  * work ([[Q.async]]), memoize a fit ([[FitMemo]]) and run a file op
+  * (`FileOps.Rows`): overlapped jobs carry the caller's job group and die
+  * with it, the memo counts hits and refits a rewritten table, and
+  * `src/main` keeps no second copy of any of them.
   */
 class SubstrateSpec extends SparkSpec {
 
@@ -96,5 +96,11 @@ class SubstrateSpec extends SparkSpec {
     assert(sitesOf("""Executors\.|ThreadPoolExecutor|ForkJoinPool""") ==
       Set("graft/operators/QueryDef.scala"))
     assert(sitesOf("""TrieMap""") == Set("graft/operators/FitMemo.scala"))
+    // one file-op pipeline: no driver-held twin of a step, and driver
+    // workers only in the listing and the placement type's run step
+    assert(sitesOf("""def \w+Held\b""").isEmpty)
+    assert(sources.map { case (f, src) => f -> """Q\.parallel\(""".r.findAllIn(src).size }
+      .filter(_._2 > 0) == Map("graft/sources/FileManifest.scala" -> 1,
+        "graft/operators/FileOps.scala" -> 1))
   }
 }
