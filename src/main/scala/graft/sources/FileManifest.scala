@@ -33,25 +33,26 @@ final case class FileEntry(
   * SQL callers. Prefix pushdown (the reference's `list_blobs(prefix=…)`,
   * download_file.py:248-249) maps to scoping the listing root.
   *
-  * Scale (100 TB / 10^8 objects): the driver lists level by level while
-  * the listing stays small — the root, then each next level's
-  * directories concurrently on at most `defaultParallelism` driver
-  * workers — and holds the entries ([[FileOps.Held]]), so a file op over
-  * them needs no Spark job. It admits at most [[DriverRows]]
-  * files in all: a directory whose listing would pass that is dropped
-  * and listed again on the executors, and once the bound is reached or a
-  * level has more than [[DriverRows]] directories, the remaining
-  * directories are listed in BFS waves on the executors — each wave
-  * re-parallelizes the dirs the previous wave discovered, so a skewed
-  * tree (one top-level dir hiding the whole corpus) still fans out to
-  * the cluster instead of serializing on one task. Once a level is wider
-  * than 4× the parallelism, remaining subtrees are walked recursively
-  * per dir (the fan-out is already there). The driver never holds more
-  * than [[DriverRows]] file entries (plus one list page per driver
-  * worker as it streams in) and the widest level's dir NAMES, whatever
-  * the object count — the same contract as Spark's InMemoryFileIndex,
-  * which lists on the driver below `parallelPartitionDiscovery.threshold`
-  * and with a job above it.
+  * Scale (100 TB / 10^8 objects): one BFS lists the tree a level at a
+  * time, each directory once ([[listLevel]]), and one rule places each
+  * level. While no executor wave has run, at most [[DriverRows]]
+  * directories are pending and fewer than [[DriverRows]] files have been
+  * admitted, the driver lists the level, its directories concurrently on
+  * `defaultParallelism` workers, and holds the entries
+  * ([[FileOps.Held]]), so a file op over them needs no Spark job. A
+  * directory whose listing would pass [[DriverRows]] files in all is
+  * dropped and stays pending. Every other level is one executor wave,
+  * which re-parallelizes the directories the previous level discovered,
+  * so a skewed tree (one top-level dir hiding the whole corpus) still
+  * fans out to the cluster instead of serializing on one task. The
+  * driver never holds more than [[DriverRows]] file entries (plus one
+  * list page per driver worker as it streams in) and the widest level's
+  * dir NAMES, whatever the object count — the same contract as Spark's
+  * InMemoryFileIndex, which lists on the driver below
+  * `parallelPartitionDiscovery.threshold` and with a job above it.
+  * A `file:` listing follows links and cuts cycles by the JDK tree
+  * walker's rule: a directory whose real path is already on its own path
+  * from the bucket root is not entered.
   */
 object FileManifest {
 
@@ -112,14 +113,14 @@ object FileManifest {
     scanManaged(spark, bucketUri, prefix, recursive).entries
 
   /** [[scan]] returning a [[ScannedManifest]] whose `release()`
-    * unpersists the per-wave listing caches deterministically. The
-    * driver lists while the listing stays within [[DriverRows]] (the
-    * scale paragraph above). A listing that ends there is held on the
-    * driver and has run no Spark job; else its
-    * deeper levels run as executor waves and the driver-listed entries
-    * are the shallow part of its RDD. Each directory is listed exactly
-    * once either way, except those the driver dropped at its bound (at
-    * most one per driver worker), which a wave lists again in full.
+    * unpersists the per-wave listing caches deterministically. One BFS
+    * loop lists the tree: a level on the driver while the placement rule
+    * above holds, else as one executor wave. A listing that ends on the
+    * driver is held there and has run no Spark job; else the driver-held
+    * entries are the shallow part of its RDD. Each directory is listed
+    * exactly once, except those the driver dropped at its bound (at most
+    * one per driver worker), which a wave lists again in full. A
+    * non-recursive scan drops every subdirectory it finds.
     */
   def scanManaged(
       spark: SparkSession,
@@ -135,95 +136,67 @@ object FileManifest {
     if (!fs.exists(rootPath))
       throw BlueprintError.InvalidBucket(bucketUri)
     val rootStr = fs.makeQualified(rootPath).toString.stripSuffix("/")
-    // Driver levels (a missing prefix lists empty): files become held
-    // entries, directories the next level, each level's directories
-    // listed concurrently on `par` driver workers. The driver admits at
-    // most DriverRows files in all: a directory whose listing would pass
-    // that is dropped, its partial listing with it, and goes to the
-    // executors with the directories not yet listed.
-    val par = sc.defaultParallelism
+    // One BFS over listLevel (a missing prefix lists empty). A level is
+    // listed on the driver while no wave has run, at most DriverRows
+    // directories are pending and fewer than DriverRows files have been
+    // admitted: a directory whose listing would pass that is dropped, its
+    // partial listing with it, and stays pending. Any other level is one
+    // executor wave.
+    //
+    // Each wave is ONE listLevel evaluation per directory: the tagged
+    // (files, dirs) level RDD persists BEFORE the dirs collect, so the
+    // collect job both discovers the next level and materializes this
+    // level's file entries into executor cache — every directory is
+    // listed exactly once per scan (the lazy re-list of round 6/7 doubled
+    // the metadata-RPC bill, the dominant cost of a 10^8-object scan),
+    // apart from the few the driver dropped at its bound. Driver memory
+    // holds only dir NAMES, bounded per wave by the widest level. The
+    // manifest is therefore a SNAPSHOT of the tree at scan time — the
+    // same contract as the reference's list-then-loop pipelines
+    // (download_file.py:248-262) and Spark's InMemoryFileIndex, whose
+    // listing caches until refreshed. Cache is executor-resident
+    // (MEMORY_AND_DISK: spills past memory, never on the driver) and
+    // released deterministically via ScannedManifest.release() (the
+    // Blueprints pipelines call it once their sink action completes);
+    // plain scan() callers fall back to ContextCleaner reclamation on
+    // unreachability. Depth needs no cap: listLevel cuts link cycles,
+    // and a remote store has no links.
     val hc = hadoopConf(spark)
+    val conf = new SerializableConfiguration(hc)
     val listed = new java.util.concurrent.atomic.AtomicLong
     val admit = () => listed.incrementAndGet() <= DriverRows
     val held = scala.collection.mutable.ArrayBuffer.empty[FileEntry]
+    val waves = scala.collection.mutable.ArrayBuffer.empty[RDD[(Seq[FileEntry], Seq[String])]]
     var pending = Seq(listRoot)
-    while (pending.nonEmpty && pending.length <= DriverRows &&
-        listed.get < DriverRows) {
-      val levels = Q.parallel(pending.toIndexedSeq, par) { d =>
-        if (listed.get >= DriverRows) None
-        else listLevel(d, root, rootStr, hc, admit)
-      }
-      levels.foreach(_.foreach(held ++= _._1))
-      pending = pending.zip(levels).flatMap {
-        case (d, None) => Seq(d)
-        case (_, Some((_, dirs))) => if (recursive) dirs else Nil
-      }
+    while (pending.nonEmpty) {
+      val (dropped, found) =
+        if (waves.isEmpty && pending.length <= DriverRows && listed.get < DriverRows) {
+          val levels = Q.parallel(pending.toIndexedSeq, sc.defaultParallelism) { d =>
+            if (listed.get >= DriverRows) None
+            else listLevel(d, root, rootStr, hc, admit)
+          }
+          levels.foreach(_.foreach(held ++= _._1))
+          (pending.zip(levels).collect { case (d, None) => d }, levels.flatten.flatMap(_._2))
+        } else {
+          val level = sc.parallelize(pending, slices(sc, pending.length))
+            .flatMap(d => listLevel(d, root, rootStr, conf.value, () => true))
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          waves += level
+          // runJob, not collect(): collect wraps the step in two closures of
+          // Spark's own, each of which the ClosureCleaner cleans by parsing
+          // its declaring class (RDD, SparkContext: ~390 KB of bytecode)
+          (Nil, sc.runJob(level,
+            (_: TaskContext, it: Iterator[(Seq[FileEntry], Seq[String])]) =>
+              it.flatMap(_._2).toArray,
+            level.partitions.indices).toSeq.flatten)
+        }
+      pending = if (recursive) dropped ++ found else dropped
     }
-    if (pending.isEmpty) new ScannedManifest(spark, FileOps.Rows(sc, held.toIndexedSeq), Nil)
+    if (waves.isEmpty) new ScannedManifest(spark, FileOps.Rows(sc, held.toIndexedSeq), Nil)
     else {
-      // Iterative BFS until the fan-out is wide enough, then recursive
-      // subtree walks. A whole-subtree task per FIRST-LEVEL dir would
-      // serialize a `data/{one-dir}/10^8-files` bucket on one core; the
-      // BFS waves re-parallelize the DISCOVERED dirs each round, so the
-      // task count follows the tree's true width, not the top level's.
-      // Driver memory holds only dir NAMES, bounded per wave by the
-      // widest level (InMemoryFileIndex's contract).
-      //
-      // Each wave is ONE listLevel evaluation per directory: the tagged
-      // (files, dirs) level RDD persists BEFORE the dirs collect, so
-      // the collect job both discovers the next level and materializes
-      // this level's file entries into executor cache — every directory
-      // is listed exactly once per scan (the lazy re-list of round 6/7
-      // doubled the metadata-RPC bill, the dominant cost of a
-      // 10^8-object scan), apart from the few the driver dropped at its
-      // bound. The manifest is therefore a SNAPSHOT of the
-      // tree at scan time — the same contract as the reference's
-      // list-then-loop pipelines (download_file.py:248-262) and Spark's
-      // own InMemoryFileIndex, whose listing caches until refreshed.
-      // Cache is executor-resident (MEMORY_AND_DISK: spills past
-      // memory, never on the driver) and released deterministically
-      // via ScannedManifest.release() (the Blueprints pipelines call
-      // it once their sink action completes); plain scan() callers
-      // fall back to ContextCleaner reclamation on unreachability. MaxWaves
-      // bounds pathological depth (e.g. a symlink cycle under
-      // FOLLOW_LINKS): past it the remainder falls through to the
-      // recursive walk, whose walkFileTree detects cycles —
-      // correctness never depends on the cap. A non-recursive scan
-      // gets here only with its root dropped: one wave lists it.
-      val conf = new SerializableConfiguration(hc)
-      val MaxWaves = if (recursive) 64 else 1
-      val waves = scala.collection.mutable.ArrayBuffer.empty[RDD[FileEntry]]
-      val persisted = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
-      var wave = 0
-      while (pending.nonEmpty && pending.length < 4 * par &&
-          wave < MaxWaves) {
-        val levelRdd = sc.parallelize(pending, slices(sc, pending.length))
-          .flatMap(d => listLevel(d, root, rootStr, conf.value, () => true))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        persisted += levelRdd
-        // runJob, not collect(): collect wraps the step in two closures of
-        // Spark's own, each of which the ClosureCleaner cleans by parsing
-        // its declaring class (RDD, SparkContext: ~390 KB of bytecode)
-        pending = sc.runJob(levelRdd,
-          (_: TaskContext, it: Iterator[(Seq[FileEntry], Seq[String])]) =>
-            it.flatMap(_._2).toArray,
-          levelRdd.partitions.indices).toSeq.flatten
-        waves += levelRdd.flatMap(_._1)
-        wave += 1
-      }
-      if (pending.nonEmpty && recursive) {
-        // persisted lazily (first action materializes): subsequent
-        // actions reuse the walk instead of re-listing the subtrees,
-        // keeping the whole manifest one consistent snapshot
-        val deepRdd = sc.parallelize(pending, slices(sc, pending.length))
-          .flatMap(d => listDeep(d, root, rootStr, conf.value))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        persisted += deepRdd
-        waves += deepRdd
-      }
       val shallow = sc.parallelize(held.toSeq, slices(sc, held.length))
-      new ScannedManifest(spark, FileOps.Rows(sc.union(shallow +: waves.toSeq)),
-        persisted.toSeq)
+      new ScannedManifest(spark,
+        FileOps.Rows(sc.union(shallow +: waves.toSeq.map(_.flatMap(_._1)))), waves.toSeq)
     }
   }
 
@@ -234,8 +207,8 @@ object FileManifest {
   private def isChecksumSidecar(name: String): Boolean =
     name.startsWith(".") && name.endsWith(".crc")
 
-  /** ONE-level listing of a directory: the driver's levels and the
-    * BFS-wave unit. Returns (file entries, subdirectory uris), or None as
+  /** ONE-level listing of a directory, the unit of the BFS on the driver
+    * and in the waves. Returns (file entries, subdirectory uris), or None as
     * soon as `admit` refuses a file (the driver's bound; a wave admits
     * all). The listing is read as it streams in, `listStatusIterator`
     * page by page on a paged store, so a refused directory costs the
@@ -243,7 +216,14 @@ object FileManifest {
     * local status objects fork a shell per entry for permissions (no
     * native-hadoop), ~30 ms/file — ruinous for large flat directories.
     * Entries that are neither a directory nor a regular file (broken
-    * symlinks, fifos) are skipped, not crashed on.
+    * symlinks, fifos) are skipped, not crashed on. The nio branch follows
+    * links and cuts cycles by the JDK tree walker's rule: a subdirectory
+    * whose real path is already on its own path (the bucket root down to
+    * it, which its pending uri spells) is not entered. Each subdirectory
+    * found costs one `toRealPath`; the real paths of the path above it
+    * are resolved only when a link was followed on the way. A remote
+    * store returns no followed links, so the Hadoop branch needs no such
+    * check.
     */
   private def listLevel(
       d: String, root: String, rootStr: String, c: Configuration,
@@ -254,14 +234,18 @@ object FileManifest {
     var refused = false
     if (dirPath.toUri.getScheme == "file") {
       val rootOs = java.nio.file.Paths.get(new Path(root).toUri.getPath)
-      val ds = java.nio.file.Files.newDirectoryStream(
-        java.nio.file.Paths.get(dirPath.toUri.getPath))
+      val dir = java.nio.file.Paths.get(dirPath.toUri.getPath)
+      lazy val onPath = Iterator.iterate(dir)(_.getParent)
+        .takeWhile(p => p != null && p.startsWith(rootOs)).map(_.toRealPath()).toSet
+      val ds = java.nio.file.Files.newDirectoryStream(dir)
       try {
         val it = ds.iterator()
         while (!refused && it.hasNext) {
           val p = it.next()
-          if (java.nio.file.Files.isDirectory(p)) dirs += s"file://$p"
-          else if (java.nio.file.Files.isRegularFile(p) &&
+          if (java.nio.file.Files.isDirectory(p)) {
+            val real = p.toRealPath()
+            if (real == p || !onPath(real)) dirs += s"file://$p"
+          } else if (java.nio.file.Files.isRegularFile(p) &&
               !isChecksumSidecar(p.getFileName.toString)) {
             refused = !admit()
             if (!refused) files += nioEntry(p, root, rootOs)
@@ -282,61 +266,9 @@ object FileManifest {
     if (refused) None else Some((files.toSeq, dirs.toSeq))
   } catch {
     // a dir deleted between its discovery wave and this listing wave is
-    // an empty subtree, not a failed 10^8-file scan (the recursive
-    // walker's visitFileFailed has given the same tolerance all along)
+    // an empty subtree, not a failed 10^8-file scan
     case _: java.nio.file.NoSuchFileException |
         _: java.io.FileNotFoundException => Some((Seq.empty, Seq.empty))
-  }
-
-  /** Executor-side recursive listing of one subtree (nio for `file:`). */
-  private def listDeep(
-      d: String, root: String, rootStr: String,
-      c: Configuration): Iterator[FileEntry] = {
-    val dirPath = new Path(d)
-    if (dirPath.toUri.getScheme == "file") {
-      val rootOs = java.nio.file.Paths.get(new Path(root).toUri.getPath)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[FileEntry]
-      // FOLLOW_LINKS matches the shallow path (Files.isRegularFile) and the
-      // Hadoop listStatus path, which both resolve symlinks; broken links
-      // still land in visitFileFailed and are skipped, and walkFileTree
-      // detects link cycles (reported as failures) rather than looping.
-      java.nio.file.Files.walkFileTree(
-        java.nio.file.Paths.get(dirPath.toUri.getPath),
-        java.util.EnumSet.of(java.nio.file.FileVisitOption.FOLLOW_LINKS),
-        Int.MaxValue,
-        new java.nio.file.SimpleFileVisitor[java.nio.file.Path] {
-          override def visitFile(
-              p: java.nio.file.Path,
-              attrs: java.nio.file.attribute.BasicFileAttributes)
-              : java.nio.file.FileVisitResult = {
-            if (attrs.isRegularFile &&
-                !isChecksumSidecar(p.getFileName.toString))
-              buf += FileEntry(root, rootOs.relativize(p).toString,
-                p.getFileName.toString, attrs.size(),
-                new java.sql.Timestamp(attrs.lastModifiedTime.toMillis))
-            java.nio.file.FileVisitResult.CONTINUE
-          }
-          // broken symlink: stat fails — skip like the Hadoop path did
-          override def visitFileFailed(
-              p: java.nio.file.Path, e: java.io.IOException)
-              : java.nio.file.FileVisitResult =
-            java.nio.file.FileVisitResult.CONTINUE
-        })
-      buf.iterator
-    } else {
-      val dirFs = FileSystem.get(dirPath.toUri, c)
-      try {
-        val it = dirFs.listFiles(dirPath, true)
-        new Iterator[FileEntry] {
-          def hasNext: Boolean = it.hasNext
-          def next(): FileEntry = toEntry(it.next(), root, rootStr)
-        }
-      } catch {
-        // vanished between discovery and walk: empty subtree (the nio
-        // branch gets the same via visitFileFailed)
-        case _: java.io.FileNotFoundException => Iterator.empty
-      }
-    }
   }
 
   private def nioEntry(

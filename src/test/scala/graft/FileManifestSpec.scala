@@ -135,39 +135,49 @@ class FileManifestSpec extends SparkSpec {
     // round-7 wave loop listed every BFS level twice (one job for
     // files, one for dirs). The counting:// scheme takes the Hadoop
     // listStatus path everywhere (no nio shortcut), so the counter
-    // sees every list RPC the scan makes.
-    // the first level fills the driver's bound exactly, so no directory
-    // is dropped half-listed, and the two deeper levels run as two waves
-    val b = mkTree(nDirs = 4, filesPerDir = FileManifest.DriverRows / 4)
+    // sees every list RPC the scan makes. In both trees the first level
+    // fills the driver's bound exactly, so no directory is dropped
+    // half-listed: 4 top dirs whose two deeper levels run as two waves,
+    // and 20 top dirs whose 20 deep dirs run as one.
+    val narrow = mkTree(nDirs = 4, filesPerDir = FileManifest.DriverRows / 4)
     (0 until 4).foreach { d =>
-      val sub = b.resolve(f"d$d%03d/sub")
+      val sub = narrow.resolve(f"d$d%03d/sub")
       Files.createDirectories(sub)
       Files.writeString(sub.resolve("deep.dat"), "x")
       val subsub = sub.resolve("leaf")
       Files.createDirectories(subsub)
       Files.writeString(subsub.resolve("leafy.dat"), "y")
     }
+    val wide = mkTree(nDirs = 20, filesPerDir = FileManifest.DriverRows / 20)
+    (0 until 20).foreach { d =>
+      val sub = wide.resolve(f"d$d%03d/deep")
+      Files.createDirectories(sub)
+      Files.writeString(sub.resolve("x.dat"), "x")
+    }
     spark.sparkContext.hadoopConfiguration
       .set("fs.counting.impl", classOf[CountingFileSystem].getName)
-    CountingFileSystem.reset()
-    val m = FileManifest.scanManaged(spark, s"counting://$b")
-    assert(!held(m), "the listing is held on the driver")
-    val files = FileManifest.DriverRows + 4 + 4 // files + deep + leafy
-    assert(m.rdd.collect().length == files)
-    def counts = {
-      import scala.jdk.CollectionConverters._
-      CountingFileSystem.listCalls.asScala.map { case (k, v) => k -> v.get }
+    // files, and directories: root + 4 top + 4 sub + 4 leaf; root + 20
+    // top + 20 deep
+    for ((b, files, dirs) <- Seq((narrow, FileManifest.DriverRows + 4 + 4, 13),
+        (wide, FileManifest.DriverRows + 20, 41))) {
+      CountingFileSystem.reset()
+      val m = FileManifest.scanManaged(spark, s"counting://$b")
+      assert(!held(m), "the listing is held on the driver")
+      assert(m.rdd.collect().length == files)
+      def counts = {
+        import scala.jdk.CollectionConverters._
+        CountingFileSystem.listCalls.asScala.map { case (k, v) => k -> v.get }
+      }
+      assert(counts.values.forall(_ == 1),
+        s"directories listed more than once: ${counts.filter(_._2 > 1)}")
+      assert(counts.size == dirs, s"unexpected list set: ${counts.keys}")
+      // snapshot property: a second action reads the cached waves — zero
+      // additional list RPCs anywhere
+      assert(m.rdd.count() == files)
+      assert(counts.values.forall(_ == 1),
+        s"re-action re-listed: ${counts.filter(_._2 > 1)}")
+      m.release()
     }
-    // every directory (root + 4 top dirs + 4 sub + 4 leaf) listed once
-    assert(counts.values.forall(_ == 1),
-      s"directories listed more than once: ${counts.filter(_._2 > 1)}")
-    assert(counts.size == 13, s"unexpected list set: ${counts.keys}")
-    // snapshot property: a second action reads the cached waves — zero
-    // additional list RPCs anywhere
-    assert(m.rdd.count() == files)
-    assert(counts.values.forall(_ == 1),
-      s"re-action re-listed: ${counts.filter(_._2 > 1)}")
-    m.release()
   }
 
   test("scanManaged.release() drops the wave caches; entries stay readable") {
@@ -196,39 +206,6 @@ class FileManifestSpec extends SparkSpec {
       s"release() left wave RDDs persisted: $after")
     scanned.release() // idempotent
     assert(scanned.entries.count() == n) // lineage re-executes fine
-  }
-
-  test("wide-level fallback (recursive walk) also lists each directory once") {
-    // a level wider than 4×parallelism skips the BFS waves and walks
-    // each subtree recursively — that path must also touch every
-    // directory exactly once (listFiles → listLocatedStatus → one
-    // listStatus per dir). The top level's files fill the driver's bound
-    // exactly, so the 20 deep dirs (20 ≥ 4 × local[4]) go to the walk
-    val b = mkTree(nDirs = 20, filesPerDir = FileManifest.DriverRows / 20)
-    (0 until 20).foreach { d =>
-      val sub = b.resolve(f"d$d%03d/deep")
-      Files.createDirectories(sub)
-      Files.writeString(sub.resolve("x.dat"), "x")
-    }
-    spark.sparkContext.hadoopConfiguration
-      .set("fs.counting.impl", classOf[CountingFileSystem].getName)
-    CountingFileSystem.reset()
-    val m = FileManifest.scanManaged(spark, s"counting://$b")
-    assert(!held(m), "the listing is held on the driver")
-    val files = FileManifest.DriverRows + 20
-    assert(m.rdd.collect().length == files)
-    val counts = {
-      import scala.jdk.CollectionConverters._
-      CountingFileSystem.listCalls.asScala.map { case (k, v) => k -> v.get }
-    }
-    // root + 20 top dirs + 20 deep dirs, each exactly once
-    assert(counts.values.forall(_ == 1),
-      s"fallback re-listed: ${counts.filter(_._2 > 1)}")
-    assert(counts.size == 41, s"unexpected list set size ${counts.size}")
-    // snapshot: a second action adds no RPCs on this path either
-    assert(m.rdd.count() == files)
-    assert(counts.values.forall(_ == 1))
-    m.release()
   }
 
   test("withDestination enumerates deterministically in path order") {
@@ -543,8 +520,7 @@ class FileManifestSpec extends SparkSpec {
     val b = mkTree(nDirs = 1, filesPerDir = 1)
     val target = Files.createTempFile("graft-link-target", ".dat")
     Files.writeString(target, "linked")
-    // depth 1 (shallow path, Files.isRegularFile follows links) and
-    // depth 2 (walkFileTree — needs FOLLOW_LINKS to agree)
+    // depth 1 and depth 2: Files.isRegularFile follows links at every level
     Files.createSymbolicLink(b.resolve("top-link.dat"), target)
     Files.createSymbolicLink(b.resolve("d000/deep-link.dat"), target)
     val m = FileManifest.scan(spark, s"file://$b").collect()

@@ -1,6 +1,7 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{FileVisitOption, FileVisitResult, Files, Path, SimpleFileVisitor}
+import java.nio.file.attribute.BasicFileAttributes
 import scala.jdk.CollectionConverters._
 import scala.reflect.ClassTag
 import org.apache.spark.graft.TestBus
@@ -132,12 +133,51 @@ class PlacementSpec extends SparkSpec {
     assert((persisted() -- before).isEmpty, "release() left wave caches persisted")
   }
 
-  test("a level too wide for the waves walks each subtree once, following links, cutting cycles") {
+  /** The files `Files.walkFileTree` finds under `b`, following links: it
+    * does not enter a directory whose real path is already on its own
+    * path, and reports that as a failure, skipped here like a broken link.
+    */
+  private def walked(b: Path): Seq[String] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[String]
+    Files.walkFileTree(b, java.util.EnumSet.of(FileVisitOption.FOLLOW_LINKS), Int.MaxValue,
+      new SimpleFileVisitor[Path] {
+        override def visitFile(p: Path, a: BasicFileAttributes): FileVisitResult = {
+          if (a.isRegularFile) out += b.relativize(p).toString
+          FileVisitResult.CONTINUE
+        }
+        override def visitFileFailed(p: Path, e: java.io.IOException): FileVisitResult =
+          FileVisitResult.CONTINUE
+      })
+    out.sorted.toSeq
+  }
+
+  /** A one-link cycle under `dir`: `a.dat`, `d/x.dat` and `d/loop -> d`. */
+  private def oneLinkCycle(dir: Path): Path = {
+    Files.createDirectories(dir.resolve("d"))
+    Files.writeString(dir.resolve("a.dat"), "a")
+    Files.writeString(dir.resolve("d/x.dat"), "x")
+    Files.createSymbolicLink(dir.resolve("d/loop"), dir.resolve("d"))
+    dir
+  }
+
+  /** A two-link cycle under `dir`: `p/a.dat`, `q/b.dat`, `p/l1 -> q` and
+    * `q/l2 -> p`.
+    */
+  private def twoLinkCycle(dir: Path): Path = {
+    Seq("p", "q").foreach(d => Files.createDirectories(dir.resolve(d)))
+    Files.writeString(dir.resolve("p/a.dat"), "a")
+    Files.writeString(dir.resolve("q/b.dat"), "b")
+    Files.createSymbolicLink(dir.resolve("p/l1"), dir.resolve("q"))
+    Files.createSymbolicLink(dir.resolve("q/l2"), dir.resolve("p"))
+    dir
+  }
+
+  test("a level wider than the driver bound lists in waves, each dir once, following links, cutting cycles") {
     spark.sparkContext.hadoopConfiguration
       .set("fs.counting.impl", classOf[CountingFileSystem].getName)
-    // more top dirs than the driver lists, so the scan goes straight from
-    // the root to one recursive walk per top dir (wider than 4 x the
-    // parallelism); 4 of them hold a file and a link to one at depth 2
+    // more top dirs than the driver lists, so the scan goes from the root
+    // to a wave of the top dirs and a wave of the deep dirs under 4 of
+    // them, which hold a file and a link to one
     val b = Files.createTempDirectory("graft-place-deep")
     val width = FileManifest.DriverRows + 1
     (0 until width).foreach(d => Files.createDirectories(b.resolve(f"d$d%04d")))
@@ -150,31 +190,51 @@ class PlacementSpec extends SparkSpec {
       Files.createSymbolicLink(deep.resolve("link.dat"), target)
     }
     val expected = (0 until 4).flatMap(d =>
-      Seq(f"d$d%04d/deep/f.dat", f"d$d%04d/deep/link.dat")).toSet
-    def check(scheme: String): Unit = {
+      Seq(f"d$d%04d/deep/f.dat", f"d$d%04d/deep/link.dat")).sorted
+    /** The scan's entries, after checking that it ran `waves` wave jobs
+      * (none: held on the driver) and that release() frees their caches.
+      */
+    def check(root: String, waves: Int): Seq[FileEntry] = {
       val before = persisted()
       var scanned: FileManifest.ScannedManifest = null
-      val jobs = jobsOf(s"deep-$scheme-$b") {
-        scanned = FileManifest.scanManaged(spark, s"$scheme://$b")
+      val jobs = jobsOf(s"waves-$root") {
+        scanned = FileManifest.scanManaged(spark, root)
       }
-      try {
-        assert(!held(scanned) && jobs.isEmpty, s"$scheme: ${jobs.size} wave jobs")
-        val rows = scanned.rdd.collect()
-        assert(rows.length == 8 && rows.map(_.path).toSet == expected, s"$scheme: ${rows.toSeq}")
-        assert(rows.filter(_.name == "link.dat").forall(_.size == 6))
-        assert((persisted() -- before).nonEmpty, s"$scheme: the walk persisted nothing")
+      val rows = try {
+        assert(jobs.size == waves && held(scanned) == (waves == 0),
+          s"$root: ${jobs.size} wave jobs, held ${held(scanned)}")
+        if (waves > 0) assert((persisted() -- before).nonEmpty, s"$root: the waves persisted nothing")
+        scanned.rdd.collect().toSeq.sortBy(_.path)
       } finally scanned.release()
-      assert((persisted() -- before).isEmpty, s"$scheme: release() left the walk persisted")
+      assert((persisted() -- before).isEmpty, s"$root: release() left the waves persisted")
+      rows
     }
     CountingFileSystem.reset()
-    check("counting")
+    val counted = check(s"counting://$b", 2)
+    assert(counted.map(_.path) == expected, counted)
     val lists = CountingFileSystem.listCalls.asScala.map { case (k, v) => k -> v.get }
     // the root, every top dir and the 4 deep dirs, each listed once
     assert(lists.size == 1 + width + 4 && lists.values.forall(_ == 1),
       s"listed more than once: ${lists.filter(_._2 > 1)}")
-    // the nio walk follows links and cuts a link back to an ancestor
+    // the nio listing follows links and cuts a link back to an ancestor
     Files.createSymbolicLink(b.resolve("d0000/deep/loop"), b.resolve("d0000"))
-    check("file")
+    val linked = check(s"file://$b", 2)
+    assert(linked.map(_.path) == expected, linked)
+    assert(linked.filter(_.name == "link.dat").forall(_.size == 6))
+    // walkFileTree's rows: held, the two cycles give 2 and 4; above the
+    // bound (three waves: the s dirs, the cycles' dirs, the links into
+    // q and p), each real file once under its own path, and the two-link
+    // cycle's files once more through the link into their directory
+    val large = largeTree()
+    oneLinkCycle(large.resolve("d0/s0"))
+    twoLinkCycle(large.resolve("d1/s0"))
+    for ((dir, rows, waves) <- Seq((oneLinkCycle(bucket()), 2, 0),
+        (twoLinkCycle(bucket()), 4, 0), (large, 1016 + 6, 3))) {
+      val got = check(s"file://$dir", waves).map(_.path)
+      assert(got.length == rows && got == walked(dir), s"$dir: $got")
+      assert(got.distinct == got && tree(dir).keySet.subsetOf(got.toSet),
+        s"$dir: a real file is missing or listed twice under one path")
+    }
   }
 
   test("a directory or a root of more files than the driver bound is not held") {

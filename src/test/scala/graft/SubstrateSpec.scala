@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
 import graft.operators.{FitMemo, Graph, Learn, Q}
 
 /** The engine's one way to build a session ([[Session]]), overlap driver
-  * work ([[Q.async]]), memoize a fit ([[FitMemo]]) and run a file op
-  * (`FileOps.Rows`): overlapped jobs carry the caller's job group and die
+  * work ([[Q.async]]), memoize a fit ([[FitMemo]]), list a tree (the BFS
+  * over `FileManifest.listLevel`) and run a file op (`FileOps.Rows`): overlapped jobs carry the caller's job group and die
   * with it, the memo counts hits and refits a rewritten table, and
   * `src/main` keeps no second copy of any of them.
   */
@@ -102,5 +102,10 @@ class SubstrateSpec extends SparkSpec {
     assert(sources.map { case (f, src) => f -> """Q\.parallel\(""".r.findAllIn(src).size }
       .filter(_._2 > 0) == Map("graft/sources/FileManifest.scala" -> 1,
         "graft/operators/FileOps.scala" -> 1))
+    // one listing: a directory is read only by FileManifest's one-level
+    // listing, and no recursive walk lists a subtree beside it
+    assert(sitesOf("""walkFileTree|listDeep|listFiles\(""").isEmpty)
+    assert(sitesOf("""newDirectoryStream|listStatusIterator""") ==
+      Set("graft/sources/FileManifest.scala"))
   }
 }
