@@ -130,54 +130,65 @@ class FileManifestSpec extends SparkSpec {
     assert(fresh.forall(_.path.startsWith("data/d0/")))
   }
 
+  // scans `b` through the counting:// scheme, which takes the Hadoop
+  // listStatus path everywhere (no nio shortcut), so the counter sees
+  // every list RPC the scan makes: each of `dirs` directories must be
+  // listed exactly once, and a second action must list none again
+  private def assertListsOnce(b: Path, files: Int, dirs: Int): Unit = {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.counting.impl", classOf[CountingFileSystem].getName)
+    CountingFileSystem.reset()
+    val m = FileManifest.scanManaged(spark, s"counting://$b")
+    assert(!held(m), "the listing is held on the driver")
+    assert(m.rdd.collect().length == files)
+    def counts = {
+      import scala.jdk.CollectionConverters._
+      CountingFileSystem.listCalls.asScala.map { case (k, v) => k -> v.get }
+    }
+    assert(counts.values.forall(_ == 1),
+      s"directories listed more than once: ${counts.filter(_._2 > 1)}")
+    assert(counts.size == dirs, s"unexpected list set: ${counts.keys}")
+    // snapshot property: a second action reads the cached waves — zero
+    // additional list RPCs anywhere
+    assert(m.rdd.count() == files)
+    assert(counts.values.forall(_ == 1),
+      s"re-action re-listed: ${counts.filter(_._2 > 1)}")
+    m.release()
+  }
+
   test("BFS scan issues exactly one list call per directory (RPC-count)") {
     // At 10^8 objects the listing RPCs dominate the scan cost; the
     // round-7 wave loop listed every BFS level twice (one job for
-    // files, one for dirs). The counting:// scheme takes the Hadoop
-    // listStatus path everywhere (no nio shortcut), so the counter
-    // sees every list RPC the scan makes. In both trees the first level
-    // fills the driver's bound exactly, so no directory is dropped
-    // half-listed: 4 top dirs whose two deeper levels run as two waves,
-    // and 20 top dirs whose 20 deep dirs run as one.
-    val narrow = mkTree(nDirs = 4, filesPerDir = FileManifest.DriverRows / 4)
+    // files, one for dirs). The first level fills the driver's bound
+    // exactly, so no directory is dropped half-listed, and the two
+    // deeper levels run as two waves
+    val b = mkTree(nDirs = 4, filesPerDir = FileManifest.DriverRows / 4)
     (0 until 4).foreach { d =>
-      val sub = narrow.resolve(f"d$d%03d/sub")
+      val sub = b.resolve(f"d$d%03d/sub")
       Files.createDirectories(sub)
       Files.writeString(sub.resolve("deep.dat"), "x")
       val subsub = sub.resolve("leaf")
       Files.createDirectories(subsub)
       Files.writeString(subsub.resolve("leafy.dat"), "y")
     }
-    val wide = mkTree(nDirs = 20, filesPerDir = FileManifest.DriverRows / 20)
+    // files + deep + leafy; root + 4 top dirs + 4 sub + 4 leaf
+    assertListsOnce(b, FileManifest.DriverRows + 4 + 4, 13)
+  }
+
+  test("wide-level fallback (recursive walk) also lists each directory once") {
+    // a level of 20 directories (at least 4 x local[4]) once skipped the
+    // BFS waves for a recursive walk of each subtree; it is now listed as
+    // one wave like any other level, and must still touch every
+    // directory exactly once. The top level's files fill the driver's
+    // bound exactly, so the 20 deep dirs go to the executors
+    val b = mkTree(nDirs = 20, filesPerDir = FileManifest.DriverRows / 20)
     (0 until 20).foreach { d =>
-      val sub = wide.resolve(f"d$d%03d/deep")
+      val sub = b.resolve(f"d$d%03d/deep")
       Files.createDirectories(sub)
       Files.writeString(sub.resolve("x.dat"), "x")
     }
-    spark.sparkContext.hadoopConfiguration
-      .set("fs.counting.impl", classOf[CountingFileSystem].getName)
-    // files, and directories: root + 4 top + 4 sub + 4 leaf; root + 20
-    // top + 20 deep
-    for ((b, files, dirs) <- Seq((narrow, FileManifest.DriverRows + 4 + 4, 13),
-        (wide, FileManifest.DriverRows + 20, 41))) {
-      CountingFileSystem.reset()
-      val m = FileManifest.scanManaged(spark, s"counting://$b")
-      assert(!held(m), "the listing is held on the driver")
-      assert(m.rdd.collect().length == files)
-      def counts = {
-        import scala.jdk.CollectionConverters._
-        CountingFileSystem.listCalls.asScala.map { case (k, v) => k -> v.get }
-      }
-      assert(counts.values.forall(_ == 1),
-        s"directories listed more than once: ${counts.filter(_._2 > 1)}")
-      assert(counts.size == dirs, s"unexpected list set: ${counts.keys}")
-      // snapshot property: a second action reads the cached waves — zero
-      // additional list RPCs anywhere
-      assert(m.rdd.count() == files)
-      assert(counts.values.forall(_ == 1),
-        s"re-action re-listed: ${counts.filter(_._2 > 1)}")
-      m.release()
-    }
+    // root + 20 top dirs + 20 deep dirs
+    assertListsOnce(b, FileManifest.DriverRows + 20, 41)
   }
 
   test("scanManaged.release() drops the wave caches; entries stay readable") {
