@@ -359,24 +359,35 @@ object HashFunctions {
     }
   }
 
+  /** Registers `name` in the session unless it already holds the name.
+    * The query builders call [[register]] and `VectorFunctions.register`
+    * on every plan; a replace each time would build nothing new and log a
+    * warning per call.
+    */
+  private[graft] def define(spark: org.apache.spark.sql.SparkSession, name: String)(
+      builder: Seq[Expression] => Expression): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    registry.synchronized {
+      if (!registry.functionExists(
+          org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
+    }
+  }
+
+  /** Idempotent session registration of the hash, shingle and sketch
+    * functions.
+    */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash",
-      exprs => MinHashSignature(exprs.head, k = MinHashK, seed = Seed),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash_md5", exprs => SimHashMd5(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingles",
+    define(spark, "graft_minhash")(
+      exprs => MinHashSignature(exprs.head, k = MinHashK, seed = Seed))
+    define(spark, "graft_simhash_md5")(exprs => SimHashMd5(exprs.head))
+    define(spark, "graft_shingles")(
       exprs => WordShingles(exprs.head,
-        intArg("graft_shingles", exprs(1))),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_winnow",
+        intArg("graft_shingles", exprs(1))))
+    define(spark, "graft_winnow")(
       exprs => WinnowFingerprint(exprs.head,
         intArg("graft_winnow", exprs(1)),
-        intArg("graft_winnow", exprs(2))),
-      "built-in")
+        intArg("graft_winnow", exprs(2))))
     // Spark's own runtime-filter machinery, surfaced as SQL functions:
     // graft_bloom_build(xxhash64(key), estNumItemsL) aggregates a
     // serialized bloom filter (binary, fixed size — the same
@@ -385,17 +396,12 @@ object HashFunctions {
     // membership probe. Both require LongType keys — always feed
     // xxhash64(col). Bloom bit-sets OR idempotently, so the built filter
     // is deterministic regardless of partitioning or row order.
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_build",
+    define(spark, "graft_bloom_build")(
       exprs => new org.apache.spark.sql.catalyst.expressions.aggregate
-        .BloomFilterAggregate(exprs.head, exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_contains", bloomContainsExpr, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cms_estimate",
-      exprs => CmsEstimate(exprs.head, exprs(1)),
-      "built-in")
+        .BloomFilterAggregate(exprs.head, exprs(1)))
+    define(spark, "graft_bloom_contains")(bloomContainsExpr)
+    define(spark, "graft_cms_estimate")(
+      exprs => CmsEstimate(exprs.head, exprs(1)))
   }
 
   /** MinHash sketch union as a typed Aggregator: the elementwise minimum

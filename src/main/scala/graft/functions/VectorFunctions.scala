@@ -753,53 +753,40 @@ object VectorFunctions {
     * builders and [[graft.operators.Ann]] do).
     */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sign_buckets",
+    HashFunctions.define(spark, "graft_dot")(exprs => DotProduct(exprs(0), exprs(1)))
+    HashFunctions.define(spark, "graft_sign_buckets")(
       exprs => SignBuckets(exprs.head,
         nPlanes = HashFunctions.intArg("graft_sign_buckets", exprs(1)),
         tables = HashFunctions.intArg("graft_sign_buckets", exprs(2)),
         seed = HashFunctions.longArg("graft_sign_buckets", exprs(3)),
-        dim = HashFunctions.intArg("graft_sign_buckets", exprs(4))),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pq_encode",
+        dim = HashFunctions.intArg("graft_sign_buckets", exprs(4))))
+    HashFunctions.define(spark, "graft_pq_encode")(
       exprs => PqEncode(exprs.head,
         codebooks = doubleArrayArg("graft_pq_encode", exprs(1)),
         m = HashFunctions.intArg("graft_pq_encode", exprs(2)),
         ksub = HashFunctions.intArg("graft_pq_encode", exprs(3)),
-        dsub = HashFunctions.intArg("graft_pq_encode", exprs(4))),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pq_lut",
+        dsub = HashFunctions.intArg("graft_pq_encode", exprs(4))))
+    HashFunctions.define(spark, "graft_pq_lut")(
       exprs => PqLut(exprs.head,
         codebooks = doubleArrayArg("graft_pq_lut", exprs(1)),
         m = HashFunctions.intArg("graft_pq_lut", exprs(2)),
         ksub = HashFunctions.intArg("graft_pq_lut", exprs(3)),
-        dsub = HashFunctions.intArg("graft_pq_lut", exprs(4))),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pq_adc",
+        dsub = HashFunctions.intArg("graft_pq_lut", exprs(4))))
+    HashFunctions.define(spark, "graft_pq_adc")(
       exprs => PqAdc(exprs(0), exprs(1),
-        ksub = HashFunctions.intArg("graft_pq_adc", exprs(2))),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_matvec",
+        ksub = HashFunctions.intArg("graft_pq_adc", exprs(2))))
+    HashFunctions.define(spark, "graft_matvec")(
       exprs => MatVec(exprs.head,
         mat = doubleArrayArg("graft_matvec", exprs(1)),
-        dim = HashFunctions.intArg("graft_matvec", exprs(2))),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_two_level_assign",
+        dim = HashFunctions.intArg("graft_matvec", exprs(2))))
+    HashFunctions.define(spark, "graft_two_level_assign")(
       exprs => TwoLevelAssign(exprs.head,
         coarse = doubleArrayArg("graft_two_level_assign", exprs(1)),
         fine = doubleArrayArg("graft_two_level_assign", exprs(2)),
         offsets = intArrayArg("graft_two_level_assign", exprs(3)),
         ids = intArrayArg("graft_two_level_assign", exprs(4)),
         dim = HashFunctions.intArg("graft_two_level_assign", exprs(5)),
-        wprobe = HashFunctions.intArg("graft_two_level_assign", exprs(6))),
-      "built-in")
+        wprobe = HashFunctions.intArg("graft_two_level_assign", exprs(6))))
   }
 
   /** Foldable ARRAY<numeric> argument evaluated once at plan-build time

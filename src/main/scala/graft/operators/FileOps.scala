@@ -28,9 +28,11 @@ import graft.sources.{FileEntry, FileManifest}
   * partition) does the same on both. One size rule ([[onDriver]]) places
   * the byte work ([[Rows.run]]):
   *  - held rows, at most `DriverRows` of them moving at most one
-  *    [[Range]] of bytes, run on at most `defaultParallelism` driver
-  *    workers (`Q.parallel`) — no Spark job, whose scheduling would cost
-  *    more than the rows' own store round trips;
+  *    [[Range]] of bytes, run on the driver, one worker per row up to
+  *    `Q.PoolThreads` (`Q.parallel`) — no Spark job, whose scheduling
+  *    would cost more than the rows' own store round trips. A row is a
+  *    few dependent store calls, so its worker waits rather than
+  *    computes, and the rows in flight are the pool's, not the cores';
   *  - anything else is one job across executors, and each task opens
   *    its own `FileSystem` handles — the single biggest designed
   *    improvement for the 100 TB goal (SURVEY §4-P1).
@@ -141,9 +143,10 @@ object FileOps {
 
     /** The byte work of an op: `row(conf)` of each row (`size` bytes
       * each), summed per partition by `total`. Held rows within
-      * [[onDriver]] run on the driver's workers (so `row(conf)` may run
-      * on several threads at once) and stop with the caller's interrupt;
-      * anything else is one job of `total`s.
+      * [[onDriver]] run on the driver, up to `Q.PoolThreads` rows at once
+      * (so `row(conf)` runs on many threads at once), and stop with the
+      * caller's interrupt once each row in flight is done; anything else
+      * is one job of `total`s.
       */
     def run[R, S](size: T => Long, launch: Launch)(row: Configuration => T => R)(
         total: Iterator[R] => S): IndexedSeq[S]
@@ -200,8 +203,7 @@ object FileOps {
     def run[R, S](size: T => Long, launch: Launch)(row: Configuration => T => R)(
         total: Iterator[R] => S): IndexedSeq[S] =
       if (onDriver(rows.length, rows.iterator.map(size).sum))
-        IndexedSeq(total(Q.parallel(rows, sc.defaultParallelism)(
-          row(sc.hadoopConfiguration)).iterator))
+        IndexedSeq(total(Q.parallel(rows)(row(sc.hadoopConfiguration)).iterator))
       else Rows(sc.parallelize(rows, math.min(parallelism(sc), rows.length)))
         .run(size, launch)(row)(total)
   }

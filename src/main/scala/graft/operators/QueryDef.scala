@@ -70,13 +70,11 @@ object Q {
     * description, scheduler pool), so the jobs it starts carry the
     * caller's labels and die with the caller's `cancelJobGroup`. This is
     * the primitive Spark's own broadcast and subquery execs use
-    * (`SQLExecution.withThreadLocalCaptured`), over a daemon pool bounded
-    * like Spark's broadcast-exchange pool
-    * (`spark.sql.broadcastExchange.maxThreadThreshold`, 128). The pool
-    * grows on demand rather than being small and fixed: an overlapped
-    * body may wait on work it forks itself (a store warmed concurrently
-    * whose builder overlaps its own jobs), which a small pool would
-    * deadlock.
+    * (`SQLExecution.withThreadLocalCaptured`), over a daemon pool of at
+    * most [[PoolThreads]] threads. The pool grows on demand rather than
+    * being small and fixed: an overlapped body may wait on work it forks
+    * itself (a store warmed concurrently whose builder overlaps its own
+    * jobs), which a small pool would deadlock.
     */
   def async[T](s: SparkSession)(body: => T)
       : java.util.concurrent.CompletableFuture[T] =
@@ -84,26 +82,34 @@ object Q {
       s.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
       asyncPool)(body)
 
-  /** `f` over `items` on at most `width` workers of the `graft-async`
-    * pool, for plain driver work that starts no Spark job (a listing
-    * level, the rows of a small file op): no SQL execution, no captured
-    * local properties. The caller waits and gets the results in item
-    * order. A failing item stops the workers from taking further items,
-    * and its error is rethrown. An interrupt of the caller does the
-    * same and is rethrown as the `InterruptedException`, but only once
-    * every worker has finished its current item, so that no item is
+  /** Threads of the `graft-async` pool, the bound of Spark's
+    * broadcast-exchange pool (`spark.sql.broadcastExchange.maxThreadThreshold`).
+    */
+  val PoolThreads = 128
+
+  /** `f` over `items` on the `graft-async` pool, one worker per item up
+    * to [[PoolThreads]], for plain driver work that starts no Spark job
+    * and mostly waits on a store (a listing level, the rows of a small
+    * file op): no SQL execution, no captured local properties. The width
+    * is the pool's, not the executor cores', so the calls in flight do
+    * not depend on the master. The caller waits and gets the results in
+    * item order. A failing item stops the workers from taking further
+    * items, and its error is rethrown. An interrupt of the caller does
+    * the same and is rethrown as the `InterruptedException`, but only
+    * once every worker has finished its current item, so that no item is
     * still running when this returns. Workers are not interrupted, as
     * Spark's tasks are not by default (`interruptOnCancel = false`,
     * because HDFS may take an interrupted read for a dead node): a stop
-    * waits for at most one item per worker.
+    * waits for up to one in-flight item per worker, [[PoolThreads]] at
+    * most.
     */
-  def parallel[A, B](items: IndexedSeq[A], width: Int)(f: A => B): IndexedSeq[B] = {
+  def parallel[A, B](items: IndexedSeq[A])(f: A => B): IndexedSeq[B] = {
     import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicReference}
     val out = new Array[Any](items.length)
     val next = new AtomicInteger
     val stop = new AtomicBoolean
     val failure = new AtomicReference[Throwable]
-    val workers = Seq.fill(math.min(width, items.length))(
+    val workers = Seq.fill(math.min(PoolThreads, items.length))(
       asyncPool.submit(new Runnable {
         def run(): Unit = {
           var i = next.getAndIncrement()
@@ -129,7 +135,7 @@ object Q {
   private lazy val asyncPool = {
     import java.util.concurrent._
     val n = new atomic.AtomicInteger
-    val p = new ThreadPoolExecutor(128, 128, 60L, TimeUnit.SECONDS,
+    val p = new ThreadPoolExecutor(PoolThreads, PoolThreads, 60L, TimeUnit.SECONDS,
       new LinkedBlockingQueue[Runnable](), (r: Runnable) => {
         val t = new Thread(r, s"graft-async-${n.incrementAndGet()}")
         t.setDaemon(true)

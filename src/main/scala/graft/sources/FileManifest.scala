@@ -37,8 +37,9 @@ final case class FileEntry(
   * time, each directory once ([[listLevel]]), and one rule places each
   * level. While no executor wave has run, at most [[DriverRows]]
   * directories are pending and fewer than [[DriverRows]] files have been
-  * admitted, the driver lists the level, its directories concurrently on
-  * `defaultParallelism` workers, and holds the entries
+  * admitted, the driver lists the level, one worker per directory up to
+  * `Q.PoolThreads` (a listing waits on its store, so the directories in
+  * flight are the pool's, not the cores'), and holds the entries
   * ([[FileOps.Held]]), so a file op over them needs no Spark job. A
   * directory whose listing would pass [[DriverRows]] files in all is
   * dropped and stays pending. Every other level is one executor wave,
@@ -46,10 +47,10 @@ final case class FileEntry(
   * so a skewed tree (one top-level dir hiding the whole corpus) still
   * fans out to the cluster instead of serializing on one task. The
   * driver never holds more than [[DriverRows]] file entries (plus one
-  * list page per driver worker as it streams in) and the widest level's
-  * dir NAMES, whatever the object count — the same contract as Spark's
-  * InMemoryFileIndex, which lists on the driver below
-  * `parallelPartitionDiscovery.threshold` and with a job above it.
+  * list page per driver worker, `Q.PoolThreads` at most, as they stream
+  * in) and the widest level's dir NAMES, whatever the object count — the
+  * same contract as Spark's InMemoryFileIndex, which lists on the driver
+  * below `parallelPartitionDiscovery.threshold` and with a job above it.
   * A `file:` listing follows links and cuts cycles by the JDK tree
   * walker's rule: a directory whose real path is already on its own path
   * from the bucket root is not entered.
@@ -60,8 +61,11 @@ object FileManifest {
     * one object-store list page: the driver lists at most this many
     * files of a scan, and a driver-held op of at most this many rows
     * runs its row loop on the driver (`FileOps`), with no Spark job
-    * either way. Chosen by a measurement of the driver side only: that
-    * the executors win above it is assumed, not measured.
+    * either way. The driver keeps up to `Q.PoolThreads` directories or
+    * rows in flight whatever the master, so the bound does not rest on
+    * the driver having as many workers as there are executor cores.
+    * Chosen by a measurement of the driver side only: that the
+    * executors win above it is assumed, not measured.
     */
   private[graft] val DriverRows = 1000
 
@@ -119,8 +123,9 @@ object FileManifest {
     * driver is held there and has run no Spark job; else the driver-held
     * entries are the shallow part of its RDD. Each directory is listed
     * exactly once, except those the driver dropped at its bound (at most
-    * one per driver worker), which a wave lists again in full. A
-    * non-recursive scan drops every subdirectory it finds.
+    * one per driver worker, `Q.PoolThreads` in all), which a wave lists
+    * again in full. A non-recursive scan drops every subdirectory it
+    * finds.
     */
   def scanManaged(
       spark: SparkSession,
@@ -171,7 +176,7 @@ object FileManifest {
     while (pending.nonEmpty) {
       val (dropped, found) =
         if (waves.isEmpty && pending.length <= DriverRows && listed.get < DriverRows) {
-          val levels = Q.parallel(pending.toIndexedSeq, sc.defaultParallelism) { d =>
+          val levels = Q.parallel(pending.toIndexedSeq) { d =>
             if (listed.get >= DriverRows) None
             else listLevel(d, root, rootStr, hc, admit)
           }
@@ -221,11 +226,12 @@ object FileManifest {
     * whose real path is already on its own path (the bucket root down to
     * it, which its pending uri spells) is not entered. Each subdirectory
     * found costs one `toRealPath`; the real paths of the path above it
-    * are resolved only when a link was followed on the way. A remote
-    * store returns no followed links, so the Hadoop branch needs no such
-    * check.
+    * are resolved only when a link was followed on the way. An entry
+    * deleted between the stream and its own stat is skipped, and the rest
+    * of its directory is still listed. A remote store returns no followed
+    * links and stats no entry, so the Hadoop branch needs neither.
     */
-  private def listLevel(
+  private[graft] def listLevel(
       d: String, root: String, rootStr: String, c: Configuration,
       admit: () => Boolean): Option[(Seq[FileEntry], Seq[String])] = try {
     val dirPath = new Path(d)
@@ -242,14 +248,16 @@ object FileManifest {
         val it = ds.iterator()
         while (!refused && it.hasNext) {
           val p = it.next()
-          if (java.nio.file.Files.isDirectory(p)) {
-            val real = p.toRealPath()
-            if (real == p || !onPath(real)) dirs += s"file://$p"
-          } else if (java.nio.file.Files.isRegularFile(p) &&
-              !isChecksumSidecar(p.getFileName.toString)) {
-            refused = !admit()
-            if (!refused) files += nioEntry(p, root, rootOs)
-          }
+          try {
+            if (java.nio.file.Files.isDirectory(p)) {
+              val real = p.toRealPath()
+              if (real == p || !onPath(real)) dirs += s"file://$p"
+            } else if (java.nio.file.Files.isRegularFile(p) &&
+                !isChecksumSidecar(p.getFileName.toString)) {
+              refused = !admit()
+              if (!refused) files += nioEntry(p, root, rootOs)
+            }
+          } catch { case _: java.nio.file.NoSuchFileException => }
         }
       } finally ds.close()
     } else {

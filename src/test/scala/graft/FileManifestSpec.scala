@@ -130,6 +130,19 @@ class FileManifestSpec extends SparkSpec {
     assert(fresh.forall(_.path.startsWith("data/d0/")))
   }
 
+  test("an entry deleted while its directory is listed is skipped, not the directory") {
+    // `admit` runs between the directory stream and the file's own stat,
+    // so deleting the file there is a delete racing the listing
+    val b = Files.createTempDirectory("graft-vanish-entry")
+    val a = b.resolve("a.dat")
+    Files.writeString(a, "a")
+    Files.createDirectories(b.resolve("s"))
+    val root = s"file://$b"
+    val listed = FileManifest.listLevel(root, root, root,
+      spark.sparkContext.hadoopConfiguration, () => { Files.deleteIfExists(a); true })
+    assert(listed.contains((Seq.empty, Seq(s"file://${b.resolve("s")}"))), listed)
+  }
+
   // scans `b` through the counting:// scheme, which takes the Hadoop
   // listStatus path everywhere (no nio shortcut), so the counter sees
   // every list RPC the scan makes: each of `dirs` directories must be

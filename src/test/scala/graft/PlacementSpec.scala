@@ -7,15 +7,16 @@ import scala.reflect.ClassTag
 import org.apache.spark.graft.TestBus
 import graft.blueprints.Blueprints
 import graft.core._
-import graft.operators.FileOps
+import graft.operators.{FileOps, Q}
 import graft.sources.{FileEntry, FileManifest}
 
 /** The two placements of a file op. A listing of at most
   * `FileManifest.DriverRows` entries is held on the driver, and its ops
   * run their rows there with no Spark job; a larger one lists its deeper
   * levels in executor BFS waves and runs its ops as Spark jobs. Both give
-  * the same names, bytes, stats and errors, and a driver-placed op stops
-  * when its thread is interrupted.
+  * the same names, bytes, stats and errors. A driver-placed op keeps more
+  * store calls in flight than there are cores, and stops when its thread
+  * is interrupted.
   */
 class PlacementSpec extends SparkSpec {
 
@@ -394,11 +395,39 @@ class PlacementSpec extends SparkSpec {
     } finally (srcM +: dstMs).foreach(_.release())
   }
 
+  test("driver-placed rows and listing levels keep more store calls in flight than cores") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.counting.impl", classOf[CountingFileSystem].getName)
+    val (n, cores) = (64, spark.sparkContext.defaultParallelism)
+    val src = bucket((0 until n).map(i => f"in/f$i%02d.bin" -> s"v$i"): _*)
+    val dst = Files.createTempDirectory("graft-overlap")
+    val wide = bucket((0 until n).map(i => f"d$i%02d/f.dat" -> s"$i"): _*)
+    CountingFileSystem.latencyMs = 20L
+    try {
+      CountingFileSystem.reset()
+      val jobs = jobsOf(s"overlap-move-$src") {
+        assert(Blueprints.move(spark, MoveConfig(s"counting://$src", s"counting://$dst",
+          "in", ".*", MatchType.RegexMatch, "out", None)) == FileOps.CopyStats(n, n, 0))
+      }
+      assert(jobs.isEmpty, s"the move ran ${jobs.size} Spark jobs")
+      val moved = CountingFileSystem.peakInFlight.get
+      CountingFileSystem.reset()
+      val scanned = FileManifest.scanManaged(spark, s"counting://$wide")
+      val listed = CountingFileSystem.peakInFlight.get
+      try assert(held(scanned) && scanned.rdd.count() == n) finally scanned.release()
+      for ((op, peak) <- Seq("move" -> moved, "scan" -> listed))
+        assert(peak > cores && peak <= Q.PoolThreads,
+          s"$op: $peak store calls in flight at most, on $cores cores")
+    } finally CountingFileSystem.latencyMs = 0L
+  }
+
   test("an interrupted driver-placed move stops, and no source goes without its copy") {
     spark.sparkContext.hadoopConfiguration
       .set("fs.counting.impl", classOf[CountingFileSystem].getName)
-    val n = 60
-    val src = bucket((0 until n).map(i => f"in/f$i%02d.bin" -> s"payload-$i"): _*)
+    // more rows than the driver keeps in flight, so the interrupt lands
+    // before the last of them has started
+    val n = 4 * Q.PoolThreads
+    val src = bucket((0 until n).map(i => f"in/f$i%04d.bin" -> s"payload-$i"): _*)
     val dst = Files.createTempDirectory("graft-cancel")
     val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
     CountingFileSystem.latencyMs = 20L
@@ -424,8 +453,8 @@ class PlacementSpec extends SparkSpec {
       assert(calls == after, "store calls continued after the move returned")
       val (sources, copies) = (tree(src.resolve("in")), tree(dst.resolve("out")))
       assert(copies.size < n, "the move ran to the end despite the interrupt")
-      (0 until n).map(i => f"f$i%02d.bin").filterNot(sources.contains).foreach { f =>
-        assert(copies.get(f).contains(s"payload-${f.drop(1).take(2).toInt}"),
+      (0 until n).map(i => f"f$i%04d.bin").filterNot(sources.contains).foreach { f =>
+        assert(copies.get(f).contains(s"payload-${f.drop(1).take(4).toInt}"),
           s"source $f was deleted without a landed copy")
       }
     } finally CountingFileSystem.latencyMs = 0L

@@ -24,7 +24,9 @@ import org.apache.spark.TaskContext
   *    the RPCs a moved object costs, and records which task partition
   *    created each file, so a spec can see how a sink placed its rows.
   *    [[CountingFileSystem.latencyMs]] makes each counted call sleep
-  *    first, a store far enough away that a spec can stop an op midway.
+  *    first, a store far enough away that a spec can stop an op midway,
+  *    and [[CountingFileSystem.peakInFlight]] records the most counted
+  *    calls running at once, so a spec can see how many an op overlaps.
   *  - [[MockSchemeFileSystem]] (`mock://`): a second non-`file` scheme so
   *    BlueprintsSpec can drive a CROSS-SCHEME move (the reference's
   *    two-bucket semantics, move_file.py:18-19) through the Hadoop
@@ -99,18 +101,32 @@ object CountingFileSystem {
   /** Milliseconds each counted call sleeps before it runs (0: none). */
   @volatile var latencyMs = 0L
   private val depth = ThreadLocal.withInitial[Array[Int]](() => Array(0))
+  private val inFlight = new AtomicInteger
+  /** The most counted calls in flight at once since [[reset]], the
+    * sleep of [[latencyMs]] included.
+    */
+  val peakInFlight = new AtomicInteger
 
   def rpc[T](kind: String)(body: => T): T = {
     val d = depth.get()
-    if (d(0) == 0) {
+    val outer = d(0) == 0
+    if (outer) {
       rpcCalls.computeIfAbsent(kind, _ => new AtomicInteger).incrementAndGet()
-      if (latencyMs > 0) Thread.sleep(latencyMs)
+      peakInFlight.accumulateAndGet(inFlight.incrementAndGet(), math.max(_, _))
     }
     d(0) += 1
-    try body finally d(0) -= 1
+    try {
+      if (outer && latencyMs > 0) Thread.sleep(latencyMs)
+      body
+    } finally {
+      d(0) -= 1
+      if (outer) inFlight.decrementAndGet()
+    }
   }
 
-  def reset(): Unit = { listCalls.clear(); rpcCalls.clear(); createdIn.clear() }
+  def reset(): Unit = {
+    listCalls.clear(); rpcCalls.clear(); createdIn.clear(); peakInFlight.set(0)
+  }
 }
 
 class MockSchemeFileSystem extends RawLocalFileSystem {
